@@ -24,8 +24,10 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -34,82 +36,101 @@ from multiagent_document_etl_system_spark.session import get_spark
 DEFAULT_REGISTRY = "./schema_registry.parquet"
 
 
-def cmd_process(args) -> dict:
-    from multiagent_document_etl_system_spark.io import (
-        read_landing_dir,
-        safe_overwrite_parquet,
-        write_parquet,
+#: Digest of the sources a processed row depends on. It is mixed into
+#: every ``content_hash``, so an edit to a parser or a pipeline stage
+#: invalidates ``process --incremental`` reuse with no constant to bump.
+PIPELINE_VERSION = hashlib.sha256(b"".join(
+    (Path(__file__).parent / name).read_bytes() for name in (
+        "sources/parsers.py", "plans/pipeline.py", "functions/text.py",
+        "operators/classify.py", "operators/extract.py",
+        "operators/validate.py"))).hexdigest()[:16]
+
+
+def process_plan(spark, input_dir: str, prior_dir: str | None = None):
+    """The ``process`` plan: scan → key → diff → parse only what changed →
+    pipeline. Returns ``(output, recomputed, reused)``: the DataFrame to
+    write and the Observations (``run_pipeline``'s health metrics) on its
+    two union inputs.
+
+    Scan rows keyed ``(doc_id, content_hash)`` that the prior output at
+    ``prior_dir`` lacks are parsed (left-anti); prior rows whose key is
+    still scanned are carried over (left-semi). ``prior_dir=None`` diffs
+    against an empty prior, which the optimizer folds away. The diff
+    joins carry (id, hash) pairs only, never text.
+    """
+    from pyspark.sql import Observation
+
+    from multiagent_document_etl_system_spark.io import read_landing_dir
+    from multiagent_document_etl_system_spark.plans.pipeline import (
+        observe_health,
+        run_pipeline,
     )
-    from multiagent_document_etl_system_spark.plans.pipeline import run_pipeline
     from multiagent_document_etl_system_spark.sources.parsers import (
         parse_documents,
+        shape_documents,
+    )
+
+    def prior(schema):
+        if prior_dir is None:
+            # limit(0) makes the emptiness visible to the optimizer
+            return spark.createDataFrame([], schema).limit(0)
+        # an explicit schema skips the footer-inference job; an output
+        # without content_hash (or keyed the old way) matches nothing
+        return spark.read.schema(schema).parquet(prior_dir)
+
+    keys = ["doc_id", "content_hash"]
+    scan = read_landing_dir(spark, input_dir).select(
+        F.xxhash64("path").alias("doc_id"),
+        F.md5(F.concat(F.lit(PIPELINE_VERSION.encode()), "content"))
+        .alias("content_hash"),
+        "path", "content",
+    )
+    todo = scan.join(prior("doc_id bigint, content_hash string"), keys,
+                     "left_anti")
+    recomputed, reused = Observation("recomputed"), Observation("reused")
+    new = run_pipeline(spark, shape_documents(parse_documents(todo)),
+                       observation=recomputed)
+    kept = observe_health(
+        prior(new.schema).join(scan.select(*keys), keys, "left_semi"),
+        reused)
+    return kept.unionByName(new), recomputed, reused
+
+
+def cmd_process(args) -> dict:
+    """Landing dir → parsed, classified, extracted, validated rows → parquet
+    at the output dir, written through a crash-safe swap.
+
+    With ``--incremental`` and an existing output, reuse is keyed on each
+    file's content bytes plus ``PIPELINE_VERSION``, a digest of the parser
+    and pipeline sources: only new or changed files are parsed and
+    processed, unchanged ones keep their prior rows, deleted ones drop
+    out. An edit to a parser or a pipeline stage, or an output written by
+    an older release, makes that run recompute every document once. The
+    full pass is the same plan run against an empty prior
+    (:func:`process_plan`); the summary counts come from Observations on
+    the written rows, with no extra job."""
+    from multiagent_document_etl_system_spark.io import (
+        path_exists,
+        safe_overwrite_parquet,
     )
 
     spark = get_spark("doc-etl-process")
-    parsed = parse_documents(read_landing_dir(spark, args.input_dir))
-    # shape the parsed scan into the pipeline's document contract;
-    # parse_error rides along so the response carries the REAL failure
-    # detail (e.g. 'pdf library unavailable'), not just the too-short check
-    docs = parsed.select(
-        F.xxhash64("path").alias("doc_id"),
-        F.coalesce("raw_text", F.lit("")).alias("text"),
-        F.lit("und").alias("lang"),
-        F.element_at(F.split("path", "/"), -1).alias("source"),
-        F.coalesce(F.length("raw_text"), F.lit(0)).cast("bigint")
-        .alias("n_chars"),
-        "parse_error",
-    )
-    hashes = docs.select("doc_id", F.md5(F.coalesce("text", F.lit("")))
-                         .alias("content_hash"))
-
-    incremental = bool(getattr(args, "incremental", False))
-    prior = None
-    if incremental:
-        try:
-            prior = spark.read.parquet(args.output_dir)
-            if "content_hash" not in prior.columns:
-                prior = None  # pre-provenance output: fall back to full run
-        except Exception:  # noqa: BLE001 — first run: nothing to reuse
-            prior = None
-
-    n_reused = 0
-    if prior is not None:
-        # incremental build on snapshot-diff logic: recompute ONLY docs
-        # whose content hash is new or changed; carry prior rows for
-        # unchanged ids; drop rows for deleted inputs. Shuffles carry
-        # (id, hash) pairs, never text (operators/curation.py rationale).
-        old_h = prior.select("doc_id", F.col("content_hash").alias("_oh"))
-        joined = hashes.join(old_h, "doc_id", "left")
-        todo_ids = joined.filter(
-            F.col("_oh").isNull() | (F.col("_oh") != F.col("content_hash"))
-        ).select("doc_id")
-        keep_ids = joined.filter(
-            F.col("_oh") == F.col("content_hash")).select("doc_id")
-        resp_new = run_pipeline(
-            spark, docs.join(todo_ids, "doc_id", "left_semi")
-        ).join(hashes, "doc_id")
-        reused = prior.join(keep_ids, "doc_id", "left_semi")
-        final = reused.unionByName(resp_new)
-        n_reused = reused.count()
-        # the plan reads the prior output: swap-write, never in-place
-        safe_overwrite_parquet(spark, final, args.output_dir)
-        resp = spark.read.parquet(args.output_dir)
-    else:
-        resp = run_pipeline(spark, docs).join(hashes, "doc_id")
-        write_parquet(resp, args.output_dir)
-    agg = resp.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("success"), 1).otherwise(0)).alias("ok"),
-        F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("valid"),
-    ).first()
+    incremental = (bool(getattr(args, "incremental", False))
+                   and path_exists(spark, args.output_dir))
+    out, recomputed, reused = process_plan(
+        spark, args.input_dir, args.output_dir if incremental else None)
+    # the plan may read the prior output: swap-write, never in-place
+    safe_overwrite_parquet(spark, out, args.output_dir)
+    new, old = recomputed.get, reused.get
+    both = lambda k: (new[k] or 0) + (old[k] or 0)  # noqa: E731 — NULL sums
     return {
         "success": True,
-        "documents": agg["n"],
-        "processed_ok": agg["ok"],
-        "valid": agg["valid"],
-        "reused": n_reused,
-        "recomputed": agg["n"] - n_reused,
-        "incremental": incremental and prior is not None,
+        "documents": both("n_docs"),
+        "processed_ok": both("n_docs") - both("n_errors"),
+        "valid": both("n_valid"),
+        "reused": old["n_docs"],
+        "recomputed": new["n_docs"],
+        "incremental": incremental,
         "output": args.output_dir,
     }
 
@@ -876,8 +897,9 @@ def main(argv=None) -> int:
     pp.add_argument("input_dir")
     pp.add_argument("output_dir")
     pp.add_argument("--incremental", action="store_true",
-                    help="reuse the prior output for unchanged documents "
-                         "(content-hash diff); recompute only new/changed")
+                    help="reuse the prior output for files whose bytes "
+                         "and pipeline sources are unchanged; recompute "
+                         "only new/changed")
 
     up = sub.add_parser("upload-schema")
     up.add_argument("doc_type")

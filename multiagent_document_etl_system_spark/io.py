@@ -13,7 +13,13 @@ reads a partitioned directory tree; nothing here assumes single-file inputs.
 
 from __future__ import annotations
 
+import functools
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -90,6 +96,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 _PARALLELISM_MEMO: dict[tuple, bool] = {}
 
 
+@functools.cache
+def _log_memo_fallback(reason: str) -> None:
+    """Log once per process (and reason) that the memo is bypassed."""
+    _log.warning("ensure_parallelism: no plan key (%s); probing partition "
+                 "counts without the memo", reason)
+
+
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the upstream scan yields fewer
     partitions than the session's parallelism.
@@ -106,8 +119,9 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     try:
         key = (df.sparkSession.sparkContext.applicationId,
                df._jdf.queryExecution().logical().semanticHash(), target)
-    except Exception:
-        pass  # non-classic session or internal API drift: probe directly
+    except (AttributeError, Py4JError) as exc:
+        # non-classic session or internal API drift: probe directly
+        _log_memo_fallback(type(exc).__name__)
     need = _PARALLELISM_MEMO.get(key) if key is not None else None
     if need is None:
         need = df.rdd.getNumPartitions() < target
@@ -283,6 +297,12 @@ def _hadoop_fs(spark: SparkSession, path: str):
     hconf = spark._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path
     return HPath(path).getFileSystem(hconf), HPath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on its (Hadoop) filesystem."""
+    fs, HPath = _hadoop_fs(spark, path)
+    return bool(fs.exists(HPath(path)))
 
 
 def _restore_if_crashed(fs, HPath, path: str, old: str) -> None:

@@ -94,6 +94,10 @@ def run_pipeline(spark: SparkSession, documents: DataFrame,
     error fidelity (/root/reference/src/agents.py:74-77) instead of
     collapsing every parse failure into the generic too-short message.
 
+    A ``content_hash`` input column (the incremental key cli.process_plan
+    derives from the landing bytes) is carried into the response as its
+    last column.
+
     ``observation``: an optional ``pyspark.sql.Observation`` — when given,
     the response projection is instrumented with corpus health metrics
     (n_docs / n_errors / n_valid / n_retried) collected DURING the one
@@ -206,19 +210,25 @@ def run_pipeline(spark: SparkSession, documents: DataFrame,
         "amount",
         "first_token",
         "n_tokens",
+        *[c for c in ("content_hash",) if c in documents.columns],
     )
     if observation is not None:
-        out = out.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
-            .alias("n_errors"),
-            F.sum(F.when(F.col("is_valid"), 1).otherwise(0))
-            .alias("n_valid"),
-            F.sum(F.coalesce(F.col("retry_count"), F.lit(0)))
-            .alias("n_retried"),
-        )
+        out = observe_health(out, observation)
     return out
+
+
+def observe_health(responses: DataFrame, observation) -> DataFrame:
+    """Instrument response rows with the corpus health metrics n_docs /
+    n_errors / n_valid / n_retried, collected by ``observation`` during
+    whichever action materializes them. The sums are NULL over no rows."""
+    return responses.observe(
+        observation,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+        .alias("n_errors"),
+        F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("n_valid"),
+        F.sum(F.coalesce(F.col("retry_count"), F.lit(0))).alias("n_retried"),
+    )
 
 
 def _validate_stage(df: DataFrame, suffix: str) -> DataFrame:

@@ -118,14 +118,13 @@ def process_document_bytes(filename: str, payload: bytes) -> dict:
     src/app.py:81-96 logs/filename attachment): ``{"success", "error",
     "data": {"record_id", "doc_type", "extracted", "file_url", ...},
     "logs", "filename"}`` — ``data`` is None on failure."""
-    from pyspark.sql import functions as F
-
     from multiagent_document_etl_system_spark.io import read_landing_dir
     from multiagent_document_etl_system_spark.plans.pipeline import (
         run_pipeline,
     )
     from multiagent_document_etl_system_spark.sources.parsers import (
         parse_documents,
+        shape_documents,
     )
 
     spark = _spark()
@@ -135,16 +134,7 @@ def process_document_bytes(filename: str, payload: bytes) -> dict:
     try:
         with open(f"{tmp}/{fname}", "wb") as fh:
             fh.write(payload)
-        parsed = parse_documents(read_landing_dir(spark, tmp))
-        docs = parsed.select(
-            F.xxhash64("path").alias("doc_id"),
-            F.coalesce("raw_text", F.lit("")).alias("text"),
-            F.lit("und").alias("lang"),
-            F.lit(fname).alias("source"),
-            F.coalesce(F.length("raw_text"), F.lit(0)).cast("bigint")
-            .alias("n_chars"),
-            "parse_error",
-        )
+        docs = shape_documents(parse_documents(read_landing_dir(spark, tmp)))
         row = run_pipeline(spark, docs).first()
         if row is None:
             logs.append("Error: no document parsed from upload")
@@ -192,12 +182,12 @@ def upload_schema(doc_type: str, schema_json: str,
         description=description, registry=registry))
 
 
-def stats() -> dict:
+def stats(registry: str) -> dict:
     import argparse
 
     from multiagent_document_etl_system_spark.cli import cmd_stats
 
-    return cmd_stats(argparse.Namespace(registry="spark-warehouse/schemas"))
+    return cmd_stats(argparse.Namespace(registry=registry))
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -222,7 +212,7 @@ class _Handler(BaseHTTPRequestHandler):
             self._send(200, {"status": "healthy",
                              "service": "multiagent-document-etl-spark"})
         elif self.path == "/stats":
-            self._send(200, stats())
+            self._send(200, stats(self.registry))
         else:
             self._send(404, {"error": f"unknown path {self.path}"})
 

@@ -1970,3 +1970,22 @@ def parse_documents(binary_df: DataFrame) -> DataFrame:
         .withColumn("parse_error", F.col("_p.parse_error"))
         .drop("_p")
     )
+
+
+def shape_documents(parsed: DataFrame) -> DataFrame:
+    """A :func:`parse_documents` result → the pipeline's document contract
+    (doc_id, text, lang, source, n_chars, parse_error). ``doc_id`` is
+    ``xxhash64(path)``, ``source`` the file name. ``parse_error`` rides
+    along so the response carries the real failure detail (e.g. 'pdf
+    library unavailable'), not just the too-short check; a
+    ``content_hash`` column, when present, rides along too."""
+    return parsed.select(
+        F.xxhash64("path").alias("doc_id"),
+        F.coalesce("raw_text", F.lit("")).alias("text"),
+        F.lit("und").alias("lang"),
+        F.element_at(F.split("path", "/"), -1).alias("source"),
+        F.coalesce(F.length("raw_text"), F.lit(0)).cast("bigint")
+        .alias("n_chars"),
+        "parse_error",
+        *[c for c in ("content_hash",) if c in parsed.columns],
+    )

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 from multiagent_document_etl_system_spark import cli
 
@@ -118,6 +119,129 @@ def test_process_incremental_reuses_unchanged(spark, tmp_path, capsys):
     inc = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     full = sorted(map(tuple, spark.read.parquet(full_dir).collect()))
     assert inc == full
+
+    # unchanged dir: nothing is recomputed
+    rc, r3 = _run(capsys, ["process", str(landing), out_dir, "--incremental"])
+    assert (r3["reused"], r3["recomputed"]) == (3, 0)
+
+    # identical bytes rewritten with a new mtime: still reused
+    a = landing / "a.txt"
+    a.write_text(body + "a.txt")
+    os.utime(a, (a.stat().st_mtime + 60,) * 2)
+    rc, r4 = _run(capsys, ["process", str(landing), out_dir, "--incremental"])
+    assert (r4["reused"], r4["recomputed"]) == (3, 0)
+    assert sorted(map(tuple, spark.read.parquet(out_dir).collect())) == full
+
+
+def _landing(tmp_path, n=3):
+    body = ("Invoice order value billing@example.com "
+            "total due 2024-03-05 129.99 " + "pad " * 20)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i in range(n):
+        (landing / f"{i}.txt").write_text(body + str(i))
+    return landing
+
+
+def test_process_incremental_recomputes_on_pipeline_change(
+        spark, tmp_path, capsys, monkeypatch):
+    """A parser or pipeline source edit (PIPELINE_VERSION) invalidates
+    every prior row: the next incremental run recomputes them all."""
+    landing = _landing(tmp_path)
+    out_dir = str(tmp_path / "out")
+    _run(capsys, ["process", str(landing), out_dir])
+    before = spark.read.parquet(out_dir).drop("content_hash").collect()
+
+    monkeypatch.setattr(cli, "PIPELINE_VERSION", "edited-pipeline")
+    rc, r = _run(capsys, ["process", str(landing), out_dir, "--incremental"])
+    assert rc == 0 and r["incremental"] is True
+    assert (r["reused"], r["recomputed"]) == (0, 3)
+    after = spark.read.parquet(out_dir)
+    assert sorted(map(tuple, after.drop("content_hash").collect())) \
+        == sorted(map(tuple, before))
+    rc, r = _run(capsys, ["process", str(landing), out_dir, "--incremental"])
+    assert (r["reused"], r["recomputed"]) == (3, 0)
+
+
+def test_process_incremental_never_reuses_older_outputs(spark, tmp_path,
+                                                        capsys):
+    """An output written by an older release, keyed on md5 of the parsed
+    text or carrying no content_hash at all, is recomputed in full, never
+    mis-reused, and the result equals a fresh full run."""
+    from pyspark.sql import functions as F
+
+    from multiagent_document_etl_system_spark.io import read_landing_dir
+    from multiagent_document_etl_system_spark.sources.parsers import (
+        parse_documents,
+        shape_documents,
+    )
+
+    landing = _landing(tmp_path)
+    full_dir = str(tmp_path / "full")
+    _run(capsys, ["process", str(landing), full_dir])
+    full = spark.read.parquet(full_dir)
+    want = sorted(map(tuple, full.collect()))
+    text_keys = shape_documents(parse_documents(
+        read_landing_dir(spark, str(landing)))).select(
+        "doc_id", F.md5("text").alias("content_hash"))
+    older = {
+        "md5_text": full.drop("content_hash").join(text_keys, "doc_id"),
+        "no_hash": full.drop("content_hash"),
+    }
+    for name, rows in older.items():
+        out_dir = str(tmp_path / name)
+        rows.write.parquet(out_dir)
+        rc, r = _run(capsys,
+                     ["process", str(landing), out_dir, "--incremental"])
+        assert (r["reused"], r["recomputed"], r["documents"]) == (0, 3, 3), \
+            name
+        assert sorted(map(tuple, spark.read.parquet(out_dir).collect())) \
+            == want, name
+
+
+def _python_udf_rows(plan) -> list[int]:
+    """Rows each Python-UDF evaluation node of an executed plan received
+    back from its workers (a scalar UDF returns one row per row sent)."""
+    name = plan.nodeName()
+    if name.endswith("EvalPython"):
+        return [int(plan.metrics().apply("pythonNumRowsReceived").value())]
+    if name == "AdaptiveSparkPlan":
+        return _python_udf_rows(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _python_udf_rows(plan.plan())
+    out, it = [], plan.children().iterator()
+    while it.hasNext():
+        out += _python_udf_rows(it.next())
+    return out
+
+
+def test_process_plan_parses_each_document_once(spark, tmp_path):
+    """The written plan evaluates the parse UDF in exactly ONE node (no
+    join-back of a second parse), and an incremental run over an
+    unchanged dir sends no rows into it."""
+    import re
+
+    landing = _landing(tmp_path)
+    out_dir = str(tmp_path / "out")
+
+    full, recomputed, _ = cli.process_plan(spark, str(landing))
+    plan = full._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\b(?:Arrow|Batch)EvalPython\b", plan)) == 1
+    full.write.parquet(out_dir)
+    assert recomputed.get["n_docs"] == 3
+
+    ran, _, _ = cli.process_plan(spark, str(landing))
+    ran.collect()
+    assert sum(_python_udf_rows(ran._jdf.queryExecution().executedPlan())) \
+        == 3
+
+    inc, recomputed, reused = cli.process_plan(spark, str(landing), out_dir)
+    plan = inc._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\b(?:Arrow|Batch)EvalPython\b", plan)) == 1
+    inc.collect()
+    assert sum(_python_udf_rows(inc._jdf.queryExecution().executedPlan())) \
+        == 0
+    assert (recomputed.get["n_docs"], reused.get["n_docs"]) == (0, 3)
 
 
 def test_curate_writes_funnel_survivors(spark, tmp_path, capsys):

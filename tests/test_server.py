@@ -13,12 +13,16 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def server(spark, tmp_path_factory):
+def registry(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("registry") / "schemas")
+
+
+@pytest.fixture(scope="module")
+def server(spark, registry):
     from multiagent_document_etl_system_spark import server as srv
 
     # share the test session instead of booting a second JVM
     srv._SPARK = spark
-    registry = str(tmp_path_factory.mktemp("registry") / "schemas")
     s = srv.make_server(0, registry=registry, max_body=256 * 1024)
     t = threading.Thread(target=s.serve_forever, daemon=True)
     t.start()
@@ -41,11 +45,12 @@ def _post(url: str, data: bytes, ctype: str):
         return e.code, json.loads(e.read())
 
 
-def test_health_and_stats(server):
+def test_health_and_stats(server, registry):
     code, h = _get(f"{server}/health")
     assert code == 200 and h["status"] == "healthy"
     code, st = _get(f"{server}/stats")
     assert code == 200 and st["embedding_dimension"] == 384
+    assert st["schema_registry"] == registry
 
 
 def test_process_json_b64_text_document(server):
