@@ -60,7 +60,10 @@ def process_plan(spark, input_dir: str, prior_dir: str | None = None):
     """
     from pyspark.sql import Observation
 
-    from multiagent_document_etl_system_spark.io import read_landing_dir
+    from multiagent_document_etl_system_spark.io import (
+        ensure_parallelism,
+        read_landing_dir,
+    )
     from multiagent_document_etl_system_spark.plans.pipeline import (
         observe_health,
         run_pipeline,
@@ -88,8 +91,11 @@ def process_plan(spark, input_dir: str, prior_dir: str | None = None):
     todo = scan.join(prior("doc_id bigint, content_hash string"), keys,
                      "left_anti")
     recomputed, reused = Observation("recomputed"), Observation("reused")
-    new = run_pipeline(spark, shape_documents(parse_documents(todo)),
-                       observation=recomputed)
+    # the pipeline is a CPU-heavy narrow pass; a landing dir that scans
+    # into fewer partitions than cores would run it serially
+    new = run_pipeline(
+        spark, ensure_parallelism(shape_documents(parse_documents(todo))),
+        observation=recomputed)
     kept = observe_health(
         prior(new.schema).join(scan.select(*keys), keys, "left_semi"),
         reused)

@@ -84,44 +84,41 @@ def classify_expr(text: Column) -> Column:
     return _argmax_label(scores)
 
 
-def classify(df: DataFrame, text_col: str = "text",
-             out_col: str = "doc_type",
-             cleaned_col: str | None = None) -> DataFrame:
-    """Append ``out_col`` — argmax label (ties → priority order), 'other'
-    when every score is 0.
+def classify_stages(head_text: Column) -> tuple[list[dict[str, Column]],
+                                                 Column]:
+    """The classifier as projection layers over ``head_text``, the cleaned,
+    lowercased text: ``(layers, label)``. Apply each layer with
+    ``withColumns`` in order; ``label`` then reads the layers' temporary
+    ``_cls_*`` columns.
 
-    Staged evaluation: the cleaned/truncated head and each label score are
-    materialized as intermediate columns, so the clean_text regex chain runs
-    ONCE per row and every downstream reference is a cheap attribute.
-    Catalyst keeps the stages separate (CollapseProject refuses to inline
-    non-cheap aliases referenced more than once, SPARK-36718); the whole
-    thing is still one narrow codegen'd pass — no shuffle.
-
-    ``cleaned_col``: a column already holding ``clean_text(text)`` — the
-    pipeline materializes one for the retry stage, and ``clean_text``
-    commutes with ``lower()`` (its keep-charclass ``[\\w\\s.,\\-():]`` is
-    case-insensitive), so ``lower(cleaned)`` ≡ ``clean_text(lower(text))``
-    and the classifier can skip its own two full-text regex passes.
-    NULL cleaned rows (error-gated upstream) score NULL → 'other', which
-    every downstream consumer re-gates to NULL anyway."""
-    if cleaned_col is not None:
-        head = truncate_head(F.lower(F.col(cleaned_col)), HEAD_CHARS)
-    else:
-        head = truncate_head(clean_text(F.lower(F.col(text_col))), HEAD_CHARS)
-    df = df.withColumn("_cls_head", head)
-    labels = list(LABEL_KEYWORDS)
-    score_of = {
-        lbl: F.col(f"_cls_s{i}") for i, lbl in enumerate(labels)
-    }
-    df = df.withColumns({
+    Staged evaluation: the truncated head and each label score are
+    materialized as intermediate columns, so the text is cleaned ONCE per
+    row and every downstream reference is a cheap attribute. Catalyst
+    keeps the stages separate (CollapseProject refuses to inline non-cheap
+    aliases referenced more than once, SPARK-36718); the whole thing is
+    still one narrow codegen'd pass — no shuffle."""
+    head = F.col("_cls_head")
+    scores = {
         f"_cls_s{i}": sum(
-            (occurrence_count(F.col("_cls_head"), w) for w in kws[1:]),
-            occurrence_count(F.col("_cls_head"), kws[0]),
+            (occurrence_count(head, w) for w in kws[1:]),
+            occurrence_count(head, kws[0]),
         )
-        for i, (lbl, kws) in enumerate(LABEL_KEYWORDS.items())
-    })
-    df = df.withColumn(out_col, _argmax_label(score_of))
-    return df.drop("_cls_head", *[f"_cls_s{i}" for i in range(len(labels))])
+        for i, kws in enumerate(LABEL_KEYWORDS.values())
+    }
+    label = _argmax_label(dict(zip(LABEL_KEYWORDS,
+                                   (F.col(c) for c in scores))))
+    return [{"_cls_head": truncate_head(head_text, HEAD_CHARS)}, scores], label
+
+
+def classify(df: DataFrame, text_col: str = "text",
+             out_col: str = "doc_type") -> DataFrame:
+    """Append ``out_col`` — argmax label (ties → priority order), 'other'
+    when every score is 0 (see :func:`classify_stages`)."""
+    layers, label = classify_stages(clean_text(F.lower(F.col(text_col))))
+    for layer in layers:
+        df = df.withColumns(layer)
+    return df.withColumn(out_col, label).drop(*[c for lay in layers
+                                                for c in lay])
 
 
 def classify_case_sql(text_expr: str) -> str:

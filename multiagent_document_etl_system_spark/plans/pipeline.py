@@ -11,9 +11,9 @@ corpus-at-a-time Catalyst plan:
   (/root/reference/src/agents.py:87-88,110-111,165-166,213-214,271-272).
   Rows never fail tasks; they carry their error to the response projection.
 - **schema retrieval** (V5 cascade, /root/reference/src/agents.py:104-156):
-  broadcast left-join of the (tiny) schema dim on doc_type, then
-  ``coalesce`` to the constant fallback schema. Strategy provenance kept in
-  ``schema_source``.
+  a literal ``map(doc_type → schema)`` lookup built from :data:`SCHEMA_DIM`,
+  then ``coalesce`` to the constant fallback schema. Strategy provenance
+  kept in ``schema_source``.
 - **bounded retry** (D3, MAX_RETRIES=1 /root/reference/src/agents.py:33):
   statically unrolled — pass-2 extraction over *cleaned* text for rows that
   fail validation, then re-validate. Compile-time constant bound ⇒ no
@@ -21,12 +21,17 @@ corpus-at-a-time Catalyst plan:
 - **persist/respond** (K1–K4): deterministic record ids (md5), storage URLs
   as path expressions, flat response projection.
 
-Scale: one narrow pipeline + one broadcast join. No shuffle at all until a
-sink or aggregate asks for one — at 100 TB this is a single pass over the
-corpus with full codegen.
+Scale: the pipeline is a pure projection — no join, no shuffle, no job of
+its own until a sink or aggregate asks for one. At 100 TB it is a single
+pass over the corpus with full codegen; over a one-row in-memory relation
+the optimizer folds it to a constant while planning (the server's path).
+Callers choose the fan-out: they know their input's size, the pipeline
+does not.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,8 +41,8 @@ from multiagent_document_etl_system_spark.functions.text import (
     clean_text_sql,
 )
 from multiagent_document_etl_system_spark.operators.classify import (
-    classify,
     classify_case_sql,
+    classify_stages,
 )
 from multiagent_document_etl_system_spark.operators.extract import (
     AMOUNT_RE,
@@ -46,6 +51,7 @@ from multiagent_document_etl_system_spark.operators.extract import (
     extract_sql_columns,
 )
 from multiagent_document_etl_system_spark.operators.validate import (
+    _checks,
     validate_sql_columns,
 )
 
@@ -57,7 +63,8 @@ EMPTY_ERROR = "Parsing failed: missing document text"
 
 # The registered schema dim — plays the Pinecone "document-schemas" namespace
 # (/root/reference/src/pinecone_utils.py:55,98). Deliberately covers only 5
-# of the 9 labels so the corpus exercises the V5 fallback branch.
+# of the 9 labels so the corpus exercises the V5 fallback branch. The one
+# source of both the pipeline's map lookup and the oracle's VALUES.
 SCHEMA_DIM: list[tuple[str, str, str]] = [
     ("invoice", '{"fields":{"email":"billing contact","amount":"total due"}}',
      "Invoice extraction schema"),
@@ -73,20 +80,121 @@ SCHEMA_DIM: list[tuple[str, str, str]] = [
 FALLBACK_SCHEMA = '{"fields":{}}'  # /root/reference/src/agents.py:143-149
 
 
-def schema_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        SCHEMA_DIM, "doc_type string, schema_json string, description string"
-    )
-
-
 def _gate(error: Column, value: Column) -> Column:
     """D5/P5 error gate: stage output only for healthy rows."""
     return F.when(error.isNull(), value)
 
 
+def _dim_lookup(field: int) -> Column:
+    """``SCHEMA_DIM[doc_type][field]`` as a literal map lookup — NULL for
+    a NULL or unregistered doc_type, as a left join on the dim gives."""
+    return F.create_map(*[F.lit(v) for row in SCHEMA_DIM
+                          for v in (row[0], row[field])])[F.col("doc_type")]
+
+
+def _validation(e: Column) -> dict[str, Column]:
+    """L3 twin over the current extract columns, gated on error."""
+    checks = _checks(F.col("email"), F.col("date_str"), F.col("amount_str"))
+    feedback = F.concat_ws("|", *[F.when(c, F.lit(m)) for c, m in checks])
+    ok = F.lit(True)
+    for cond, _ in checks:
+        ok = ok & ~F.coalesce(cond, F.lit(False))
+    return {"is_valid": _gate(e, ok), "feedback": _gate(e, feedback)}
+
+
+@functools.cache
+def _error(with_parse_error: bool) -> Column:
+    # NULL text/n_chars must NOT slip through as success: a null too-short
+    # comparison is null (no error), so missing payloads are caught first
+    err = (F.when(F.col("text").isNull() | F.col("n_chars").isNull(),
+                  F.lit(EMPTY_ERROR))
+           .when(F.col("n_chars") < MIN_CHARS, F.lit(PARSE_ERROR)))
+    return F.coalesce(F.col("parse_error"), err) if with_parse_error else err
+
+
+@functools.cache
+def _stages() -> tuple[list[dict[str, Column]], list[Column]]:
+    """The pipeline after the ``error`` column: ``withColumns`` layers in
+    dependency order, then the response columns. Built once per process —
+    the expressions are session-independent, and rebuilding them (dozens
+    of chained ``withColumn`` analyses) cost more planning time than
+    running the pipeline over one document."""
+    e = F.col("error")
+    t, c = F.col("text"), F.col("cleaned")
+    toks = F.split(F.trim(t), r"\s+")
+    # reuse the materialized cleaned text: clean_text commutes with lower()
+    # (its keep-charclass [\w\s.,\-():] is case-insensitive), so the
+    # classifier skips its own full-text regex chain; error-gated NULLs
+    # score 'other' and re-gate to NULL below
+    (cls_head, cls_scores), label = classify_stages(F.lower(c))
+    retry = ~F.coalesce(F.col("is_valid"), F.lit(True))
+    schema_json = _dim_lookup(1)
+
+    def retried(name: str, pattern: str) -> Column:
+        # bounded retry (unrolled): re-extract from CLEANED text if invalid
+        return F.when(retry, _gate(e, F.regexp_extract(c, pattern, 0))) \
+            .otherwise(F.col(name))
+
+    layers = [
+        {
+            "cleaned": _gate(e, clean_text(t)),
+            # pass-1 extraction over raw text (reference extracts from
+            # raw_text)
+            "email": _gate(e, F.regexp_extract(t, EMAIL_RE, 0)),
+            "date_str": _gate(e, F.regexp_extract(t, DATE_RE, 0)),
+            "amount_str": _gate(e, F.regexp_extract(t, AMOUNT_RE, 0)),
+            "first_token": _gate(e, toks.getItem(0)),
+            "n_tokens": _gate(e, F.size(toks).cast("bigint")),
+            # persistence (K1/K2): deterministic ids + storage URLs
+            "record_id": _gate(e, F.md5(F.concat(F.lit("doc-"),
+                                                 F.col("doc_id")))),
+            "file_url": _gate(e, F.concat(F.lit("s3://documents/"),
+                                          F.col("doc_id"), F.lit(".txt"))),
+        },
+        {**cls_head, **_validation(e)},  # pass-1 validation
+        {
+            **cls_scores,
+            "email": retried("email", EMAIL_RE),
+            "date_str": retried("date_str", DATE_RE),
+            "amount_str": retried("amount_str", AMOUNT_RE),
+            "retry_count": _gate(e, retry.cast("int")),
+        },
+        {
+            "doc_type": _gate(e, label),
+            **_validation(e),  # pass-2 (idempotent when no retry)
+            "amount": F.col("amount_str").try_cast("double"),
+        },
+        {
+            "schema_source": _gate(e, F.when(schema_json.isNotNull(),
+                                             F.lit("doc_type"))
+                                   .otherwise(F.lit("fallback"))),
+            "description": _gate(e, F.coalesce(
+                _dim_lookup(2),
+                F.concat(F.lit("Auto-generated schema for "),
+                         F.col("doc_type")))),
+            "schema_json": _gate(e, F.coalesce(schema_json,
+                                               F.lit(FALLBACK_SCHEMA))),
+        },
+    ]
+    # response projection (K4, reference src/agents.py:312-321)
+    response = [
+        F.col("doc_id"), e.isNull().alias("success"),
+        *[F.col(n) for n in (
+            "error", "doc_type", "schema_source", "description",
+            "record_id", "file_url", "is_valid", "feedback", "retry_count",
+            "email", "date_str", "amount", "first_token", "n_tokens")],
+    ]
+    return layers, response
+
+
 def run_pipeline(spark: SparkSession, documents: DataFrame,
                  observation=None) -> DataFrame:
     """documents(doc_id, text, lang, source, n_chars) → response DataFrame.
+
+    A pure projection of ``documents``: no join, no repartition, no job of
+    its own, so the caller decides the fan-out (a bulk scan that
+    under-parallelizes wraps its input in ``io.ensure_parallelism``; one
+    upload never fans out). ``spark`` is unused and kept for callers.
 
     If the input carries a ``parse_error`` column (the parse stage's per-row
     failure detail, sources/parsers.py), it seeds the pipeline ``error``
@@ -106,112 +214,13 @@ def run_pipeline(spark: SparkSession, documents: DataFrame,
     (/root/reference/src/app.py:84-93) with zero extra scans — the
     monitoring hook a 100 TB run needs.
     """
-    # The pipeline is a CPU-heavy narrow pass (a dozen regex evaluations
-    # per row); a single-row-group input would execute it SERIALLY. Fan
-    # out round-robin when the scan under-parallelizes (no-op at cluster
-    # scale where inputs carry thousands of row groups; not applicable to
-    # streaming inputs, whose partitioning the source controls).
-    if not documents.isStreaming:
-        from multiagent_document_etl_system_spark.io import ensure_parallelism
-        documents = ensure_parallelism(documents)
-
-    # NULL text/n_chars must NOT slip through as success: a null too-short
-    # comparison is null (no error), so missing payloads are caught first
-    err = (F.when(F.col("text").isNull() | F.col("n_chars").isNull(),
-                  F.lit(EMPTY_ERROR))
-           .when(F.col("n_chars") < MIN_CHARS, F.lit(PARSE_ERROR)))
-    if "parse_error" in documents.columns:
-        err = F.coalesce(F.col("parse_error"), err)
-    df = documents.withColumn("error", err)
-    e = F.col("error")
-
-    df = df.withColumn("cleaned", _gate(e, clean_text(F.col("text"))))
-    # reuse the materialized cleaned text: clean_text commutes with lower(),
-    # so the classifier skips its own full-text regex chain (~2 fewer regex
-    # passes per row; error-gated NULLs re-gate to NULL downstream)
-    df = classify(df, "text", "_doc_type", cleaned_col="cleaned")
-    df = df.withColumn("doc_type", _gate(e, F.col("_doc_type"))).drop("_doc_type")
-
-    dim = schema_dim(spark)
-    df = df.join(F.broadcast(dim), "doc_type", "left")
-    df = (
-        df.withColumn(
-            "schema_source",
-            _gate(e, F.when(F.col("schema_json").isNotNull(), F.lit("doc_type"))
-                  .otherwise(F.lit("fallback"))),
-        )
-        .withColumn(
-            "description",
-            _gate(e, F.coalesce(
-                F.col("description"),
-                F.concat(F.lit("Auto-generated schema for "), F.col("doc_type")),
-            )),
-        )
-        .withColumn(
-            "schema_json",
-            _gate(e, F.coalesce(F.col("schema_json"), F.lit(FALLBACK_SCHEMA))),
-        )
-    )
-
-    # pass-1 extraction over raw text (reference extracts from raw_text)
-    t = F.col("text")
-    toks = F.split(F.trim(t), r"\s+")
-    df = (
-        df.withColumn("email", _gate(e, F.regexp_extract(t, EMAIL_RE, 0)))
-        .withColumn("date_str", _gate(e, F.regexp_extract(t, DATE_RE, 0)))
-        .withColumn("amount_str", _gate(e, F.regexp_extract(t, AMOUNT_RE, 0)))
-        .withColumn("first_token", _gate(e, toks.getItem(0)))
-        .withColumn("n_tokens", _gate(e, F.size(toks).cast("bigint")))
-    )
-
-    # pass-1 validation
-    df = _validate_stage(df, suffix="")
-
-    # bounded retry (unrolled): re-extract from CLEANED text where invalid
-    retry = ~F.coalesce(F.col("is_valid"), F.lit(True))
-    c = F.col("cleaned")
-    df = (
-        df.withColumn(
-            "email", F.when(retry, _gate(e, F.regexp_extract(c, EMAIL_RE, 0)))
-            .otherwise(F.col("email")))
-        .withColumn(
-            "date_str", F.when(retry, _gate(e, F.regexp_extract(c, DATE_RE, 0)))
-            .otherwise(F.col("date_str")))
-        .withColumn(
-            "amount_str", F.when(retry, _gate(e, F.regexp_extract(c, AMOUNT_RE, 0)))
-            .otherwise(F.col("amount_str")))
-        .withColumn("retry_count", _gate(e, retry.cast("int")))
-    )
-    df = _validate_stage(df, suffix="")  # pass-2 validation (idempotent when no retry)
-
-    # persistence (K1/K2): deterministic ids + storage URLs
-    df = (
-        df.withColumn("record_id", _gate(e, F.md5(F.concat(F.lit("doc-"), F.col("doc_id")))))
-        .withColumn("file_url", _gate(e, F.concat(
-            F.lit("s3://documents/"), F.col("doc_id"), F.lit(".txt"))))
-        .withColumn("amount", F.col("amount_str").try_cast("double"))
-    )
-
-    # response projection (K4, /root/reference/src/agents.py:312-321)
-    out = df.select(
-        "doc_id",
-        e.isNull().alias("success"),
-        "error",
-        "doc_type",
-        "schema_source",
-        "description",
-        "record_id",
-        "file_url",
-        "is_valid",
-        "feedback",
-        "retry_count",
-        "email",
-        "date_str",
-        "amount",
-        "first_token",
-        "n_tokens",
-        *[c for c in ("content_hash",) if c in documents.columns],
-    )
+    layers, response = _stages()
+    df = documents.withColumn(
+        "error", _error("parse_error" in documents.columns))
+    for layer in layers:
+        df = df.withColumns(layer)
+    out = df.select(*response,
+                    *[c for c in ("content_hash",) if c in documents.columns])
     if observation is not None:
         out = observe_health(out, observation)
     return out
@@ -229,20 +238,6 @@ def observe_health(responses: DataFrame, observation) -> DataFrame:
         F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("n_valid"),
         F.sum(F.coalesce(F.col("retry_count"), F.lit(0))).alias("n_retried"),
     )
-
-
-def _validate_stage(df: DataFrame, suffix: str) -> DataFrame:
-    """L3 twin over the current extract columns, gated on error."""
-    from multiagent_document_etl_system_spark.operators.validate import _checks
-
-    e = F.col("error")
-    checks = _checks(F.col("email"), F.col("date_str"), F.col("amount_str"))
-    feedback = F.concat_ws("|", *[F.when(c, F.lit(m)) for c, m in checks])
-    ok = F.lit(True)
-    for cond, _ in checks:
-        ok = ok & ~F.coalesce(cond, F.lit(False))
-    return df.withColumn("is_valid", _gate(e, ok)) \
-        .withColumn("feedback", _gate(e, feedback))
 
 
 # ------------------------------------------------------------------ oracle

@@ -7,6 +7,7 @@ QUERIES.md read QUERIES in insertion order.
 
 from __future__ import annotations
 
+from multiagent_document_etl_system_spark.io import ensure_parallelism
 from multiagent_document_etl_system_spark.plans.registry._base import (  # noqa: F401
     DataFrame,
     F,
@@ -152,7 +153,7 @@ def v7_schema_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("pipeline_flagship", pipeline_oracle_sql())
 def pipeline_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end document ETL as one plan (SURVEY.md §3.1, §7.2)."""
-    return run_pipeline(spark, _docs(spark, sf_dir))
+    return run_pipeline(spark, ensure_parallelism(_docs(spark, sf_dir)))
 
 
 @_q("pipeline_stats", f"""
@@ -167,7 +168,7 @@ FROM resp GROUP BY 1, 2
 def pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level /stats analogue (SURVEY.md §2.8): aggregates over the
     pipeline response — exercises agg-over-pipeline plan fusion."""
-    resp = run_pipeline(spark, _docs(spark, sf_dir))
+    resp = run_pipeline(spark, ensure_parallelism(_docs(spark, sf_dir)))
     return (
         resp.groupBy(
             F.coalesce("doc_type", F.lit("(errored)")).alias("doc_type"),

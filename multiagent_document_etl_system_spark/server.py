@@ -6,15 +6,16 @@ their existing client here unchanged.
 
 - ``POST /process``: multipart/form-data with a ``file`` field (the
   reference's contract) or JSON ``{"filename": ..., "content_b64": ...}``.
-  The upload is sanitized (P4 path-traversal guard), written to a fresh
-  per-request temp landing dir, parsed (S1–S5 dispatch incl. the stdlib
-  PDF/DOCX/BMP/PNG/JPEG rungs), run through the ONE-plan pipeline
-  (plans/pipeline.run_pipeline), and the response uses the reference's
-  wrapper shape — ``{"success", "error", "data": {"record_id",
-  "doc_type", "extracted", "file_url"}, "logs", "filename"}``
-  (/root/reference/src/agents.py:303-320, src/app.py:81-96); the temp
-  dir is deleted in ``finally`` exactly like the reference's
-  temp_uploads cleanup. Malformed JSON/base64 is a 400, not a 500.
+  The upload is sanitized (P4 path-traversal guard) and parsed on the
+  request thread (the same S1–S5 dispatch as the bulk parse UDF, incl. the
+  stdlib PDF/DOCX/BMP/PNG/JPEG rungs); the text becomes a one-row
+  in-memory relation that the ONE-plan pipeline
+  (plans/pipeline.run_pipeline) projects. The optimizer folds that plan
+  to a constant while planning, so a request runs no Spark job and writes
+  no temp file. The response uses the reference's wrapper shape —
+  ``{"success", "error", "data": {"record_id", "doc_type", "extracted",
+  "file_url"}, "logs", "filename"}`` (reference src/agents.py:303-320,
+  src/app.py:81-96). Malformed JSON/base64 is a 400, not a 500.
 - ``POST /upload-schema``: ``doc_type`` + ``schema_json`` as
   application/x-www-form-urlencoded or multipart form fields (the
   reference declares them as FastAPI ``Form(...)`` — src/app.py:119-122
@@ -31,8 +32,8 @@ Scale posture: this facade is the INTERACTIVE path (one document per
 request, exactly the reference's shape); bulk work belongs to
 ``cli process <landing_dir>`` / Structured Streaming, which run the same
 pipeline over directories. One SparkSession is shared across requests
-(created lazily on the first /process), so steady-state request cost is
-one small Spark job, not a session boot.
+(created lazily on the first /process); it plans each request, and no
+request runs a Spark job.
 """
 
 from __future__ import annotations
@@ -40,9 +41,8 @@ from __future__ import annotations
 import base64
 import json
 import re
-import shutil
-import tempfile
 import threading
+import uuid
 from email.parser import BytesParser
 from email.policy import default as _EMAIL_POLICY
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -112,62 +112,64 @@ def _form_fields(content_type: str, body: bytes) -> dict:
     return req
 
 
+#: The upload as the parse stage's output row. The text is a bound
+#: parameter, never spliced into the SQL.
+_UPLOAD_SQL = ("SELECT * FROM VALUES (CAST(:path AS STRING), "
+               "CAST(:text AS STRING), CAST(:error AS STRING)) "
+               "AS t(path, raw_text, parse_error)")
+
+
 def process_document_bytes(filename: str, payload: bytes) -> dict:
     """One document through the whole engine pipeline, wrapped in the
     reference's response shape (src/agents.py:303-320 response_agent +
     src/app.py:81-96 logs/filename attachment): ``{"success", "error",
     "data": {"record_id", "doc_type", "extracted", "file_url", ...},
-    "logs", "filename"}`` — ``data`` is None on failure."""
-    from multiagent_document_etl_system_spark.io import read_landing_dir
+    "logs", "filename"}`` — ``data`` is None on failure.
+
+    Each upload gets the path ``upload:/<uuid4>/<name>``, so its
+    ``doc_id``, ``record_id`` and ``file_url`` are unique per upload."""
     from multiagent_document_etl_system_spark.plans.pipeline import (
         run_pipeline,
     )
     from multiagent_document_etl_system_spark.sources.parsers import (
-        parse_documents,
+        format_for_path,
+        parse_bytes,
         shape_documents,
     )
 
     spark = _spark()
-    tmp = tempfile.mkdtemp(prefix="doc_etl_upload_")
     fname = _safe_filename(filename)
     logs = [f"Received file: {fname}", "Starting ETL pipeline..."]
-    try:
-        with open(f"{tmp}/{fname}", "wb") as fh:
-            fh.write(payload)
-        docs = shape_documents(parse_documents(read_landing_dir(spark, tmp)))
-        row = run_pipeline(spark, docs).first()
-        if row is None:
-            logs.append("Error: no document parsed from upload")
-            return {"success": False,
-                    "error": "no document parsed from upload",
-                    "data": None, "logs": logs, "filename": fname}
-        r = row.asDict(recursive=True)
-        if r["success"]:
-            resp = {
-                "success": True,
-                "error": None,
-                "data": {
-                    "record_id": r["record_id"],
-                    "doc_type": r["doc_type"],
-                    "extracted": {"email": r["email"],
-                                  "date_str": r["date_str"],
-                                  "amount": r["amount"]},
-                    "file_url": r["file_url"],
-                    # engine extras beyond the reference's four data keys
-                    "is_valid": r["is_valid"],
-                    "feedback": r["feedback"],
-                    "retry_count": r["retry_count"],
-                },
-            }
-            logs.append("Document processed successfully")
-        else:
-            resp = {"success": False, "error": r["error"], "data": None}
-            logs.append(f"Error: {r['error']}")
-        resp["logs"] = logs
-        resp["filename"] = fname
-        return resp
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)  # src/app.py:109-116 twin
+    text, error = parse_bytes(format_for_path(fname), payload)
+    upload = spark.sql(_UPLOAD_SQL, args={
+        "path": f"upload:/{uuid.uuid4()}/{fname}", "text": text,
+        "error": error})
+    [row] = run_pipeline(spark, shape_documents(upload)).collect()
+    r = row.asDict(recursive=True)
+    if r["success"]:
+        resp = {
+            "success": True,
+            "error": None,
+            "data": {
+                "record_id": r["record_id"],
+                "doc_type": r["doc_type"],
+                "extracted": {"email": r["email"],
+                              "date_str": r["date_str"],
+                              "amount": r["amount"]},
+                "file_url": r["file_url"],
+                # engine extras beyond the reference's four data keys
+                "is_valid": r["is_valid"],
+                "feedback": r["feedback"],
+                "retry_count": r["retry_count"],
+            },
+        }
+        logs.append("Document processed successfully")
+    else:
+        resp = {"success": False, "error": r["error"], "data": None}
+        logs.append(f"Error: {r['error']}")
+    resp["logs"] = logs
+    resp["filename"] = fname
+    return resp
 
 
 def upload_schema(doc_type: str, schema_json: str,

@@ -12,7 +12,8 @@ settings that hold on a real cluster:
   (larger) configured value down, so the code never hard-codes a cluster size.
 - UTC session timezone so results hash-match the DuckDB oracle.
 - Arrow enabled for every pandas interchange (Pandas UDFs are the only
-  Python-side compute path we allow).
+  Python-side compute path over DataFrames we allow; the server parses a
+  single upload on its request thread, before any DataFrame exists).
 """
 
 from __future__ import annotations

@@ -106,9 +106,8 @@ def _parse_one(path: str):
     the batch reader and the stream reader so the two routes cannot
     diverge in dispatch or error semantics."""
     from multiagent_document_etl_system_spark.sources.parsers import (
-        _PARSERS,
-        _text_parse,
         format_for_path,
+        parse_bytes,
     )
 
     try:
@@ -121,9 +120,7 @@ def _parse_one(path: str):
         return (path, format_for_path(path), 0, None,
                 f"read failed: {exc}")
     fmt = format_for_path(path)
-    parser = _PARSERS.get(fmt)
-    text, err = parser(b) if parser else _text_parse(b)
-    return (path, fmt, len(b), text, err)
+    return (path, fmt, len(b), *parse_bytes(fmt, b))
 
 
 class DocLandingStreamReader(SeenSetFileStreamReader):

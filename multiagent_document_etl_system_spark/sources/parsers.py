@@ -10,7 +10,9 @@ python-docx / pytesseract OCR / UTF-8 fallback
   content** — the parse libraries (pdfplumber, python-docx, pytesseract)
   are NOT in this container, so each UDF degrades per-row to an error
   string (never a task failure — the pipeline's per-row fault tolerance,
-  SURVEY.md §2.7 D5); plain text (S5) parses for real.
+  SURVEY.md §2.7 D5); plain text (S5) parses for real;
+- one per-document dispatch, :func:`parse_bytes`, behind the parse UDF,
+  the doc_landing DataSource and the server's single-upload path.
 
 Unit tests exercise the dispatch + the text path with synthetic bytes
 (tests/test_sources.py); parse UDFs never sit in the oracle path
@@ -1947,13 +1949,19 @@ def _text_parse(b) -> tuple[str | None, str | None]:
         return None, f"text parse failed: {exc}"
 
 
+def parse_bytes(fmt: str, b) -> tuple[str | None, str | None]:
+    """One document's bytes → (raw_text, parse_error), dispatched on its
+    :func:`format_for_path` label. The one dispatch behind the parse UDF,
+    the doc_landing DataSource and the server's single-upload path."""
+    return _PARSERS.get(fmt, _text_parse)(b)
+
+
 @F.pandas_udf(PARSE_RESULT)
 def parse_content(fmt: pd.Series, content: pd.Series) -> pd.DataFrame:
     """Vectorized (format, bytes) → (raw_text, parse_error)."""
     texts, errors = [], []
     for f, b in zip(fmt, content):
-        parser = _PARSERS.get(f, None)
-        text, err = (parser(b) if parser else _text_parse(b))
+        text, err = parse_bytes(f, b)
         texts.append(text)
         errors.append(err)
     return pd.DataFrame({"raw_text": texts, "parse_error": errors})

@@ -221,3 +221,101 @@ def test_oversize_body_is_413(server):
     big = b"x" * (300 * 1024)  # server fixture caps max_body at 256 KiB
     code, out = _post(f"{server}/process", big, "application/json")
     assert code == 413 and not out["success"]
+
+
+def test_process_hidden_looking_names(server):
+    """Upload names starting with '_' or '.' are processed like any other
+    (a directory scan would skip them as hidden files)."""
+    text = ("Purchase order of total value due. "
+            "Billed to client@example.com on 2024-03-15. " * 3)
+    for name in ("_invoice.txt", ".invoice.txt"):
+        code, out = _post(
+            f"{server}/process",
+            json.dumps({"filename": name,
+                        "content_b64":
+                            base64.b64encode(text.encode()).decode()}
+                       ).encode(),
+            "application/json")
+        assert code == 200, out
+        assert out["success"] is True, out
+        assert out["filename"] == name
+        assert out["data"]["doc_type"] == "invoice"
+
+
+def _oracle_response(doc_id: int, text: str, parse_error: str | None):
+    """pipeline_oracle_sql over one document, in the server's body shape."""
+    import duckdb
+
+    from multiagent_document_etl_system_spark.plans.pipeline import (
+        pipeline_oracle_sql,
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs AS SELECT * FROM (VALUES "
+                "(?::BIGINT, ?::VARCHAR, ?::BIGINT, ?::VARCHAR)) "
+                "t(doc_id, text, n_chars, parse_error)",
+                [doc_id, text, len(text), parse_error])
+    cur = con.execute(pipeline_oracle_sql("docs", parse_error_col=True))
+    r = dict(zip([c[0] for c in cur.description], cur.fetchone()))
+    if not r["success"]:
+        return {"success": False, "error": r["error"], "data": None}
+    return {"success": True, "error": None, "data": {
+        "record_id": r["record_id"], "doc_type": r["doc_type"],
+        "extracted": {"email": r["email"], "date_str": r["date_str"],
+                      "amount": r["amount"]},
+        "file_url": r["file_url"], "is_valid": r["is_valid"],
+        "feedback": r["feedback"], "retry_count": r["retry_count"]}}
+
+
+def test_process_runs_no_spark_job_and_matches_oracle(spark):
+    """One upload per format — text, PDF, DOCX, PNG and an undecodable
+    text file — is answered without a single Spark job, and each body
+    equals the DuckDB pipeline oracle over the document's text."""
+    from multiagent_document_etl_system_spark import server as srv
+    from multiagent_document_etl_system_spark.sources import parsers
+
+    srv._SPARK = spark
+    body = ("Purchase order of total value due. Billed to "
+            "client@example.com on 2024-03-15 for $1,250.00 in full.")
+    ocr = "INVOICE 42 ORDER VALUE DUE 15 MARCH 2024 TOTAL 1337 PAID IN FULL"
+    bad = b"\xff\xfe\x00 not utf-8"
+    try:
+        bad.decode("utf-8")
+    except UnicodeDecodeError as exc:
+        bad_error = f"text parse failed: {exc}"
+    uploads = [
+        ("memo.txt", body.encode(), body, None),
+        ("inv.pdf", parsers.make_demo_pdf_bytes([body[:40], body[40:]]),
+         body[:40] + "\n" + body[40:], None),
+        ("inv.docx", parsers.make_demo_docx_bytes([body]), body, None),
+        ("scan.png", parsers.render_text_png(ocr), ocr, None),
+        ("bad.txt", bad, "", bad_error),
+    ]
+    sc = spark.sparkContext
+    group = "process-no-jobs"
+    sc.setJobGroup(group, "process_document_bytes must run no job")
+    try:
+        bodies = [srv.process_document_bytes(name, payload)
+                  for name, payload, _, _ in uploads]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    for (name, _, text, err), out in zip(uploads, bodies):
+        url = (out["data"] or {}).get("file_url") or "s3://documents/0.txt"
+        doc_id = int(url.removeprefix("s3://documents/").removesuffix(".txt"))
+        want = _oracle_response(doc_id, text, err)
+        assert {k: out[k] for k in want} == want, name
+    assert [b["success"] for b in bodies] == [True] * 4 + [False]
+
+
+def test_process_does_not_grow_parallelism_memo(spark):
+    """Requests do not grow the ensure_parallelism memo: an upload never
+    fans out."""
+    from multiagent_document_etl_system_spark import io
+    from multiagent_document_etl_system_spark import server as srv
+
+    srv._SPARK = spark
+    before = len(io._PARALLELISM_MEMO)
+    for i in range(20):
+        srv.process_document_bytes(f"doc{i}.txt", b"short document")
+    assert len(io._PARALLELISM_MEMO) == before

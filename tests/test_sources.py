@@ -42,7 +42,12 @@ def test_parse_documents_text_path_and_row_errors(spark, landing):
     out = parsers.parse_documents(read_landing_dir(spark, landing))
     rows = {r["name"]: r for r in out.select(
         F.element_at(F.split("path", "/"), -1).alias("name"),
-        "raw_text", "parse_error").collect()}
+        "content", "raw_text", "parse_error").collect()}
+    # the single-document dispatch gives what the parse UDF gave
+    for r in rows.values():
+        assert parsers.parse_bytes(
+            parsers.format_for_path(r["name"]), r["content"]) == \
+            (r["raw_text"], r["parse_error"])
     assert rows["a.txt"]["raw_text"] == "hello landing"
     assert rows["a.txt"]["parse_error"] is None
     # pdf/docx/image libs absent OR fake bytes → row-level error, no task failure
