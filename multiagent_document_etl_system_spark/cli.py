@@ -57,13 +57,17 @@ def process_plan(spark, input_dir: str, prior_dir: str | None = None):
     still scanned are carried over (left-semi). ``prior_dir=None`` diffs
     against an empty prior, which the optimizer folds away. The diff
     joins carry (id, hash) pairs only, never text.
+
+    The parse and pipeline run on the scan's own partitions: ``binaryFile``
+    packs landing files into partitions by ``openCostInBytes``, so a dir
+    of many files already spreads across the cores. Some small file counts
+    pack into fewer partitions than cores (on 4 cores, 5 or 9 files scan
+    to 3 partitions); such a dir runs on that many tasks. Building the
+    plan runs no Spark job.
     """
     from pyspark.sql import Observation
 
-    from multiagent_document_etl_system_spark.io import (
-        ensure_parallelism,
-        read_landing_dir,
-    )
+    from multiagent_document_etl_system_spark.io import read_landing_dir
     from multiagent_document_etl_system_spark.plans.pipeline import (
         observe_health,
         run_pipeline,
@@ -91,11 +95,8 @@ def process_plan(spark, input_dir: str, prior_dir: str | None = None):
     todo = scan.join(prior("doc_id bigint, content_hash string"), keys,
                      "left_anti")
     recomputed, reused = Observation("recomputed"), Observation("reused")
-    # the pipeline is a CPU-heavy narrow pass; a landing dir that scans
-    # into fewer partitions than cores would run it serially
-    new = run_pipeline(
-        spark, ensure_parallelism(shape_documents(parse_documents(todo))),
-        observation=recomputed)
+    new = run_pipeline(spark, shape_documents(parse_documents(todo)),
+                       observation=recomputed)
     kept = observe_health(
         prior(new.schema).join(scan.select(*keys), keys, "left_semi"),
         reused)

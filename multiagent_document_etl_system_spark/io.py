@@ -13,13 +13,10 @@ reads a partitioned directory tree; nothing here assumes single-file inputs.
 
 from __future__ import annotations
 
-import functools
-import logging
+import threading
+from collections.abc import Callable
 
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
-
-_log = logging.getLogger(__name__)
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -84,50 +81,46 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
-#: (applicationId, logical-plan semanticHash, target) → "needs fan-out".
-#: The probe that decides the fan-out (`df.rdd.getNumPartitions()`)
-#: costs ~30 ms of driver work per call — a rebuilt-per-rep composite
-#: pays it several times per rep, which at bench scale added up to
-#: whole seconds (r13 optimization round). The decision is a pure
-#: function of the logical plan within one session (the scan's file
-#: set and split config are fixed once a staged input exists), so it
-#: memoizes on the plan's semanticHash (~1 ms). Bounded by the number
-#: of distinct plans ensure_parallelism ever sees in a session.
-_PARALLELISM_MEMO: dict[tuple, bool] = {}
-
-
-@functools.cache
-def _log_memo_fallback(reason: str) -> None:
-    """Log once per process (and reason) that the memo is bypassed."""
-    _log.warning("ensure_parallelism: no plan key (%s); probing partition "
-                 "counts without the memo", reason)
-
-
 def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition ONLY when the upstream scan yields fewer
+    """Round-robin repartition ONLY when ``df`` plans into fewer
     partitions than the session's parallelism.
 
     Parquet scans parallelize at row-group granularity; a small input (or a
     writer that emitted one big row group) serializes every downstream
     CPU-heavy map stage. At cluster scale inputs have thousands of row
     groups, the predicate is false, and this is a no-op — so the shuffle
-    cost is only ever paid when it buys real parallelism. Use before
-    expensive narrow transforms (shingling, hashing, regex extraction);
-    never needed before joins/aggs, which shuffle anyway."""
+    cost is only ever paid when it buys real parallelism. Use it on table
+    or parquet frames before expensive narrow transforms (shingling,
+    hashing, regex extraction); never needed before joins/aggs, which
+    shuffle anyway. Landing-dir (``binaryFile``) scans don't need it: they
+    already pack files into partitions by ``openCostInBytes``.
+
+    The partition count is probed on every call (it plans ``df``), so a
+    re-read of a path whose file set changed gets a fresh answer."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    key = None
-    try:
-        key = (df.sparkSession.sparkContext.applicationId,
-               df._jdf.queryExecution().logical().semanticHash(), target)
-    except (AttributeError, Py4JError) as exc:
-        # non-classic session or internal API drift: probe directly
-        _log_memo_fallback(type(exc).__name__)
-    need = _PARALLELISM_MEMO.get(key) if key is not None else None
-    if need is None:
-        need = df.rdd.getNumPartitions() < target
-        if key is not None:
-            _PARALLELISM_MEMO[key] = need
-    return df.repartition(target) if need else df
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
+
+
+#: (applicationId, *key) → the value ``once_per_session`` built for it.
+_SESSION_VALUES: dict[tuple, object] = {}
+# held while building, so concurrent callers of one key build it once;
+# reentrant, so a build may itself stage another key
+_SESSION_LOCK = threading.RLock()
+
+
+def once_per_session(spark: SparkSession, key: tuple,
+                     build: Callable[[], object]):
+    """``build()``'s value, built once per Spark application and ``key``.
+
+    For fixture stagings (a dir or table a registry query writes once and
+    then only reads): the write is setup, not part of the measured query,
+    and a rerun inside the session re-reads it. ``key`` names the staging
+    and its inputs, e.g. ``("st_events", sf_dir)``."""
+    k = (spark.sparkContext.applicationId, *key)
+    with _SESSION_LOCK:
+        if k not in _SESSION_VALUES:
+            _SESSION_VALUES[k] = build()
+        return _SESSION_VALUES[k]
 
 
 def read_landing_dir(spark: SparkSession, path: str,

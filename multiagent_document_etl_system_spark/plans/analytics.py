@@ -38,7 +38,7 @@ from multiagent_document_etl_system_spark.functions.numeric import (
     stable_sum,
     stable_sum_sql,
 )
-from multiagent_document_etl_system_spark.io import load_table
+from multiagent_document_etl_system_spark.io import load_table, once_per_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -2799,12 +2799,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- bucketed co-located join
 
-#: (applicationId, sf_dir) -> (orders_table, customer_table) — bucketed
-#: tables are a WAREHOUSE fixture (written once per session via
-#: saveAsTable), not a per-query step; memoized exactly like the
-#: namespace-registry / streaming staging dirs in plans/registry.py.
-_BUCKETED_TABLE_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 _N_BUCKETS = 8
 
 
@@ -2817,13 +2811,15 @@ def bucketed_order_customer(spark: SparkSession,
     every subsequent equi-join or groupBy on that key reads co-located
     buckets and needs NO Exchange at query time (plan-pinned in
     tests/test_plans.py). `sortBy` additionally pre-sorts each bucket
-    file so the sort-merge join can skip its per-task sort."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    names = _BUCKETED_TABLE_CACHE.get(key)
-    if names is None:
+    file so the sort-merge join can skip its per-task sort.
+
+    The tables are a WAREHOUSE fixture, written once per session via
+    saveAsTable, not a per-query step."""
+    def build() -> tuple[str, str]:
         import hashlib
 
-        h = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:8]
+        app = spark.sparkContext.applicationId
+        h = hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:8]
         ot, ct = f"orders_bkt_{h}", f"customer_bkt_{h}"
         # repartition on the bucket column with n_partitions == n_buckets:
         # Spark's bucket hash is the same Murmur3 hashpartitioning, so each
@@ -2841,9 +2837,9 @@ def bucketed_order_customer(spark: SparkSession,
          .write.mode("overwrite").format("parquet")
          .bucketBy(_N_BUCKETS, "c_custkey").sortBy("c_custkey")
          .saveAsTable(ct))
-        names = (ot, ct)
-        _BUCKETED_TABLE_CACHE[key] = names
-    return names
+        return ot, ct
+
+    return once_per_session(spark, ("bucketed", sf_dir), build)
 
 
 @_q("q_bucketed_join", f"""

@@ -192,9 +192,10 @@ def run_pipeline(spark: SparkSession, documents: DataFrame,
     """documents(doc_id, text, lang, source, n_chars) → response DataFrame.
 
     A pure projection of ``documents``: no join, no repartition, no job of
-    its own, so the caller decides the fan-out (a bulk scan that
-    under-parallelizes wraps its input in ``io.ensure_parallelism``; one
-    upload never fans out). ``spark`` is unused and kept for callers.
+    its own, so it runs on its input's partitions. A table or parquet
+    input that under-parallelizes is wrapped in ``io.ensure_parallelism``
+    by its caller; a landing-dir scan and one upload are not.
+    ``spark`` is unused and kept for callers.
 
     If the input carries a ``parse_error`` column (the parse stage's per-row
     failure detail, sources/parsers.py), it seeds the pipeline ``error``

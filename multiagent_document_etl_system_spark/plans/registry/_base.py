@@ -39,7 +39,7 @@ from multiagent_document_etl_system_spark.functions.text import (
     truncate_head,
     truncate_head_sql,
 )
-from multiagent_document_etl_system_spark.io import load_table
+from multiagent_document_etl_system_spark.io import load_table, once_per_session
 from multiagent_document_etl_system_spark.io import (
     read_jdbc_partitioned as io_read_jdbc_partitioned,
     write_jdbc as io_write_jdbc,

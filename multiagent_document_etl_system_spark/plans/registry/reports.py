@@ -22,6 +22,7 @@ from multiagent_document_etl_system_spark.plans.registry._base import (  # noqa:
     int_avg_round,
     int_avg_round_sql,
     load_table,
+    once_per_session,
     stable_avg_q,
     stable_avg_q_sql,
     textfns,
@@ -39,8 +40,6 @@ from multiagent_document_etl_system_spark.plans.registry.dedup import (
     _minhash_pairs_sql,
 )
 from multiagent_document_etl_system_spark.plans.registry.sources_streaming import (
-    _INCOMING_STAGE_CACHE,
-    _STREAM_STAGE_CACHE,
     _band_rows_sql,
     _staged_incoming_docs_dir,
 )
@@ -765,13 +764,13 @@ def st_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from multiagent_document_etl_system_spark.streaming import streamx
 
-    key = (spark.sparkContext.applicationId, sf_dir, "multi")
-    stage = _INCOMING_STAGE_CACHE.get(key)
-    if stage is None:
+    def build() -> str:
         stage = tempfile.mkdtemp(prefix="st_docs_in_multi_")
         _docs(spark, sf_dir).filter(F.col("doc_id") % 10 == 7) \
             .repartition(3).write.mode("overwrite").parquet(stage)
-        _INCOMING_STAGE_CACHE[key] = stage
+        return stage
+
+    stage = once_per_session(spark, ("st_docs_in_multi", sf_dir), build)
 
     corpus = _docs(spark, sf_dir).filter(F.col("doc_id") % 10 != 7) \
         .select("doc_id", "text", "n_chars")
@@ -1127,14 +1126,14 @@ def st_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from multiagent_document_etl_system_spark.streaming import streamx
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dup2")
-    stage = _STREAM_STAGE_CACHE.get(key)
-    if stage is None:
+    def build() -> str:
         stage = tempfile.mkdtemp(prefix="st_events_dup2_")
         ev = load_table(spark, sf_dir, "events").coalesce(1)
         ev.write.mode("append").parquet(stage)
         ev.write.mode("append").parquet(stage)  # the byte-identical twin
-        _STREAM_STAGE_CACHE[key] = stage
+        return stage
+
+    stage = once_per_session(spark, ("st_events_dup2", sf_dir), build)
 
     stream = streamx.read_event_stream(spark, stage,
                                        max_files_per_trigger=2)

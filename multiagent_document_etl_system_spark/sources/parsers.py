@@ -7,10 +7,12 @@ python-docx / pytesseract OCR / UTF-8 fallback
 - scan a landing directory with ``binaryFile`` (path, content) — io.py;
 - dispatch on extension with ``F.when`` (S1);
 - per-format parsing as **Arrow-batched Pandas UDFs over the binary
-  content** — the parse libraries (pdfplumber, python-docx, pytesseract)
-  are NOT in this container, so each UDF degrades per-row to an error
-  string (never a task failure — the pipeline's per-row fault tolerance,
-  SURVEY.md §2.7 D5); plain text (S5) parses for real;
+  content** — each format uses the reference's library (pdfplumber,
+  python-docx, pytesseract) when importable, else a pure-stdlib rung
+  that parses simple PDFs, DOCX and rendered-text BMP/PNG/JPEG; what
+  neither rung can read becomes a per-row error string (never a task
+  failure — the pipeline's per-row fault tolerance, SURVEY.md §2.7 D5);
+  plain text (S5) parses directly;
 - one per-document dispatch, :func:`parse_bytes`, behind the parse UDF,
   the doc_landing DataSource and the server's single-upload path.
 
@@ -25,8 +27,6 @@ singleton), the standard pattern for heavyweight per-partition init.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -71,32 +71,6 @@ def format_for_path(path: str) -> str:
     if low.endswith(IMAGE_EXTS):
         return "image"
     return "text"
-
-
-def _mk_parser(importer: Callable[[], object], parse_fn, label: str):
-    """Build a (bytes → (text, error)) row parser with a lazy per-executor
-    library import — errors become row values, never task failures."""
-
-    state: dict[str, object] = {}
-
-    def parse_bytes(b) -> tuple[str | None, str | None]:
-        if b is None:
-            return None, f"{label} parse failed: empty content"
-        if "lib" not in state:
-            try:
-                state["lib"] = importer()
-            except ImportError as exc:
-                state["lib"] = None
-                state["err"] = f"{label} library unavailable: {exc}"
-        lib = state.get("lib")
-        if lib is None:
-            return None, str(state.get("err"))
-        try:
-            return parse_fn(lib, bytes(b)), None
-        except Exception as exc:  # noqa: BLE001 — per-row fault tolerance
-            return None, f"{label} parse failed: {exc}"
-
-    return parse_bytes
 
 
 def _pdf_parse(lib, b: bytes) -> str:

@@ -215,10 +215,24 @@ def _python_udf_rows(plan) -> list[int]:
     return out
 
 
-def test_process_plan_parses_each_document_once(spark, tmp_path):
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under a Spark job group; return (its result, the number
+    of jobs the group ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_process_plan_parses_each_document_once(spark, tmp_path, capsys):
     """The written plan evaluates the parse UDF in exactly ONE node (no
     join-back of a second parse), and an incremental run over an
-    unchanged dir sends no rows into it."""
+    unchanged dir sends no rows into it. Building the incremental plan
+    runs no Spark job, and the whole incremental command runs at most
+    three."""
     import re
 
     landing = _landing(tmp_path)
@@ -235,13 +249,27 @@ def test_process_plan_parses_each_document_once(spark, tmp_path):
     assert sum(_python_udf_rows(ran._jdf.queryExecution().executedPlan())) \
         == 3
 
-    inc, recomputed, reused = cli.process_plan(spark, str(landing), out_dir)
+    (inc, recomputed, reused), n_jobs = _jobs_in_group(
+        spark, "process-plan-build",
+        lambda: cli.process_plan(spark, str(landing), out_dir))
+    assert n_jobs == 0
     plan = inc._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"\b(?:Arrow|Batch)EvalPython\b", plan)) == 1
     inc.collect()
     assert sum(_python_udf_rows(inc._jdf.queryExecution().executedPlan())) \
         == 0
     assert (recomputed.get["n_docs"], reused.get["n_docs"]) == (0, 3)
+
+    # a dir no plan above has seen
+    (tmp_path / "cmd").mkdir()
+    landing, out_dir = _landing(tmp_path / "cmd"), str(tmp_path / "cmd_out")
+    _run(capsys, ["process", str(landing), out_dir])
+    (rc, resp), n_jobs = _jobs_in_group(
+        spark, "process-incremental",
+        lambda: _run(capsys, ["process", str(landing), out_dir,
+                              "--incremental"]))
+    assert rc == 0 and (resp["recomputed"], resp["reused"]) == (0, 3)
+    assert n_jobs <= 3
 
 
 def test_curate_writes_funnel_survivors(spark, tmp_path, capsys):

@@ -61,29 +61,49 @@ def test_fold_edge_shapes(spark):
     assert all(v is not None for v in by_id[4]["new"])
 
 
-def test_ensure_parallelism_memo(spark):
-    """r13: the fan-out decision memoizes on the logical plan's
-    semanticHash — same plan must reuse the cached decision (no repeated
-    rdd probe), and the fan-out itself must still fire for a
-    single-partition scan."""
+def test_ensure_parallelism(spark, tmp_path):
+    """The fan-out fires for a single-row-group scan and keeps its rows,
+    and the partition count is probed on every call: a dir that scanned
+    wide enough, re-read after losing files within the session, fans out
+    again."""
+    import glob
+    import os
+
     from multiagent_document_etl_system_spark import io as eio
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .select("doc_id", "text")
     target = spark.sparkContext.defaultParallelism
-    eio._PARALLELISM_MEMO.clear()
-    out1 = eio.ensure_parallelism(docs)
-    assert len(eio._PARALLELISM_MEMO) == 1
-    (key, need), = eio._PARALLELISM_MEMO.items()
-    assert need is True  # single-row-group parquet < session parallelism
-    assert out1.rdd.getNumPartitions() == target
-    # a second call with an equal plan hits the memo (same single entry)
-    docs2 = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
-    eio.ensure_parallelism(docs2)
-    assert len(eio._PARALLELISM_MEMO) == 1
-    # a different plan gets its own entry
-    eio.ensure_parallelism(docs.select("doc_id"))
-    assert len(eio._PARALLELISM_MEMO) == 2
-    # rows unchanged by the wrap
-    assert out1.count() == docs.count()
+    out = eio.ensure_parallelism(docs)
+    assert out.rdd.getNumPartitions() == target
+    assert out.count() == docs.count()
+
+    path = str(tmp_path / "shrinking")
+    spark.range(2 * target * 100).repartition(2 * target).write.parquet(path)
+    wide = spark.read.parquet(path)
+    assert wide.rdd.getNumPartitions() >= target
+    assert eio.ensure_parallelism(wide).rdd.getNumPartitions() \
+        == wide.rdd.getNumPartitions()
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet")))[1:]:
+        os.remove(f)
+    narrow = eio.ensure_parallelism(spark.read.parquet(path))
+    assert narrow.rdd.getNumPartitions() == target
+
+
+def test_once_per_session(spark):
+    """The staging helper builds once per application and key and returns
+    the same value after; a different key builds again."""
+    from multiagent_document_etl_system_spark import io as eio
+
+    built = []
+
+    def build():
+        built.append(object())
+        return built[-1]
+
+    first = eio.once_per_session(spark, ("once_per_session_test", "a"), build)
+    again = eio.once_per_session(spark, ("once_per_session_test", "a"), build)
+    other = eio.once_per_session(spark, ("once_per_session_test", "b"), build)
+    assert first is again is built[0]
+    assert other is built[1]
+    assert len(built) == 2

@@ -306,16 +306,3 @@ def test_process_runs_no_spark_job_and_matches_oracle(spark):
         want = _oracle_response(doc_id, text, err)
         assert {k: out[k] for k in want} == want, name
     assert [b["success"] for b in bodies] == [True] * 4 + [False]
-
-
-def test_process_does_not_grow_parallelism_memo(spark):
-    """Requests do not grow the ensure_parallelism memo: an upload never
-    fans out."""
-    from multiagent_document_etl_system_spark import io
-    from multiagent_document_etl_system_spark import server as srv
-
-    srv._SPARK = spark
-    before = len(io._PARALLELISM_MEMO)
-    for i in range(20):
-        srv.process_document_bytes(f"doc{i}.txt", b"short document")
-    assert len(io._PARALLELISM_MEMO) == before

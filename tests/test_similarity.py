@@ -271,3 +271,29 @@ def test_recall_matrix_shape_and_bounds(spark):
         assert 0 <= r.recall_q1e4 <= 10_000
         assert r.n_exact == rows["lsh"].n_exact  # shared denominator
     assert rows["lsh_multiprobe"].recall_q1e4 >= rows["lsh"].recall_q1e4
+
+
+def test_recall_matrix_surfaces_checkpoint_error(spark, monkeypatch):
+    """When a rung raises while the exact side checkpoints in the
+    background, the checkpoint's own failure still surfaces, with the rung
+    error chained to it."""
+    from multiagent_document_etl_system_spark.plans.registry import QUERIES
+
+    class CheckpointError(RuntimeError):
+        pass
+
+    class RungError(RuntimeError):
+        pass
+
+    def fail(exc):
+        def raise_(*args, **kwargs):
+            raise exc
+        return raise_
+
+    monkeypatch.setattr(similarity, "topk_join",
+                        fail(CheckpointError("exact side")))
+    monkeypatch.setattr(similarity, "binary_hamming_topk",
+                        fail(RungError("rung")))
+    with pytest.raises(CheckpointError) as err:
+        QUERIES["v21_recall_matrix"][0](spark, SF_DIR)
+    assert isinstance(err.value.__context__, RungError)
