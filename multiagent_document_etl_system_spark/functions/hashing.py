@@ -15,14 +15,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def content_md5(c: Column) -> Column:
-    return F.md5(c)
-
-
-def content_md5_sql(col: str) -> str:
-    return f"md5({col})"
-
-
 def schema_id(doc_type: Column, schema_json: Column) -> Column:
     """V7 twin — deterministic replacement for
     ``f"{doc_type}_schema_{abs(hash(json)) % 100000}"``
@@ -35,8 +27,3 @@ def schema_id_sql(doc_type_col: str, schema_json_col: str) -> str:
         f"concat({doc_type_col}, '_schema_', "
         f"substring(md5({schema_json_col}), 1, 8))"
     )
-
-
-def stable_hash64(*cols: Column) -> Column:
-    """Spark-side 64-bit hash (xxhash64) — partitioning, salting, MinHash."""
-    return F.xxhash64(*cols)

@@ -59,10 +59,6 @@ def get_field(c: Column, path: str) -> Column:
     return F.get_json_object(c, path)
 
 
-def get_field_sql(col: str, path: str) -> str:
-    return f"json_extract_string({col}, '{path}')"
-
-
 def is_valid_json(c: Column) -> Column:
     """J5 — validity gate (/root/reference/src/app.py:141,168-170).
     A value parses iff a '$' extraction is non-null on an object/array."""

@@ -65,16 +65,6 @@ def safe_filename_sql(col: str) -> str:
     return f"regexp_replace({col}, '[^\\w\\s\\-.]', '', 'g')"
 
 
-# P6 — non-empty predicate (/root/reference/src/parsers.py:62-75).
-def non_empty(c: Column) -> Column:
-    return F.length(F.trim(c)) > 0
-
-
-# P7 — length accounting (/root/reference/src/agents.py:73,195).
-def text_length(c: Column) -> Column:
-    return F.length(c)
-
-
 # --- tokenization helpers shared by classify/dedup/textstats -------------
 
 def tokens(c: Column) -> Column:

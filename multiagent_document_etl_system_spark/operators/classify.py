@@ -67,23 +67,6 @@ def _argmax_label(scores: dict[str, Column]) -> Column:
     )
 
 
-def classify_expr(text: Column) -> Column:
-    """The whole classifier as ONE column expression over raw text.
-
-    Semantics reference only — the head/score subtrees are duplicated per
-    label, which Catalyst cannot CSE across WHEN branches; use
-    :func:`classify` in plans (staged columns, ~30× less expression work)."""
-    head = truncate_head(clean_text(F.lower(text)), HEAD_CHARS)
-    scores = {
-        lbl: sum(
-            (occurrence_count(head, w) for w in kws[1:]),
-            occurrence_count(head, kws[0]),
-        )
-        for lbl, kws in LABEL_KEYWORDS.items()
-    }
-    return _argmax_label(scores)
-
-
 def classify_stages(head_text: Column) -> tuple[list[dict[str, Column]],
                                                  Column]:
     """The classifier as projection layers over ``head_text``, the cleaned,
@@ -136,14 +119,6 @@ def classify_case_sql(text_expr: str) -> str:
     return (
         f"CASE WHEN {best} <= 0 THEN 'other'\n"
         f"    {whens}\n    ELSE 'other' END"
-    )
-
-
-def classify_oracle_sql(table: str = "documents", id_col: str = "doc_id",
-                        text_col: str = "text") -> str:
-    """Standalone oracle query: (id, doc_type)."""
-    return (
-        f"SELECT {id_col}, {classify_case_sql(text_col)} AS doc_type FROM {table}"
     )
 
 

@@ -837,7 +837,12 @@ def neighbor_edit_distance(df: DataFrame, text_col: str = "text",
     # stage collapses onto one task (measured at sf0.1: 1.94 s
     # single-task vs 0.19 s fanned, identical rows). The explicit
     # exchange moves one narrow row per pair — always cheap relative to
-    # the per-row compute it parallelizes, at any scale.
+    # the per-row compute it parallelizes, at any scale. It is not gated
+    # like ``io.ensure_parallelism``: that gate reads the plan-time
+    # partition count, which after this shuffle join is
+    # spark.sql.shuffle.partitions (never below defaultParallelism), so
+    # it would never fire, and AQE would still coalesce the stage onto
+    # one task by bytes.
     j = j.repartition(df.sparkSession.sparkContext.defaultParallelism)
     dist = F.levenshtein("h_a", "h_b")
     longest = F.greatest(F.length("h_a"), F.length("h_b"), F.lit(1))

@@ -1,10 +1,9 @@
-"""Deterministic integer-grid product quantization — the hash-oracled
-PQ rung (r12 verdict #4).
+"""Deterministic integer-grid product quantization — the package's one
+quantizer family, behind the IVF, PQ and IVF-PQ rungs.
 
-The float PQ family (operators/similarity.pq_fit/pq_codes/pq_adc_*)
-fits its codebooks with KMeans — iterative, seed-dependent, not
-SQL-restatable — so its registry queries could only ever be rows-only.
-This module is the same FAISS-PQ architecture re-derived so that EVERY
+A KMeans fit is iterative and seed-dependent, and no SQL engine restates
+it, so queries over KMeans codebooks could only ever be rows-only
+checked. This module is the FAISS-PQ architecture derived so that EVERY
 step is an exactly-specified integer function of the input, restatable
 in DuckDB SQL clause by clause:
 
@@ -22,27 +21,24 @@ in DuckDB SQL clause by clause:
   iterations with a fixed init and count are deterministic, and each
   step is one SQL CTE — so unlike KMeans the whole fit rides inside
   the oracle. Measured at fixture scale the 3-iteration grid fit
-  reaches the SAME ADC-prefilter recall@5 (0.80 with k_adc=100) as
-  the float-KMeans rung's documented number — determinism costs no
-  ranking quality here (pinned in tests/test_pq_grid.py);
+  reaches ADC-prefilter recall@5 0.80 with k_adc=100 (pinned in
+  tests/test_pq_grid.py);
 - the fit input is the ``ivf_fit_cap(n_codes)`` rows with the SMALLEST
-  id (``ORDER BY id LIMIT`` — SQL-expressible, unlike the repo's
-  xxhash64 sampling convention; documented divergence, same bounded-fit
-  rationale as similarity.ivf_train_sample).
+  id (``ORDER BY id LIMIT`` — SQL-expressible and independent of
+  partition order, so the same rows feed the fit on every run).
 
-Scale shape matches the float rung: the fit sees a bounded sample
-(one TakeOrderedAndProject over the corpus + n_iters tiny aggregates
-over ≤4096 cached rows); corpus-wide assignment is one narrow map with
-the codebooks as literals; ADC scoring is m lookups per pair over a
-broadcast query-side distance table; exact rerank touches only
-Q x k_adc full vectors. Driver-side state is the codebook itself —
-n_subspaces × n_codes × width ints (4 KB here), collected via two
-BOUNDED collects per fit stated at the call sites.
+Scale shape: the fit sees a bounded sample (one TakeOrderedAndProject
+over the corpus, then n_iters Lloyd steps over ≤4096 rows on the
+driver); corpus-wide assignment is one narrow map with the codebooks as
+literals; ADC scoring is m lookups per pair over a broadcast query-side
+distance table; exact rerank touches only Q x k_adc full vectors.
+Driver-side state is the codebook itself — n_subspaces × n_codes ×
+width ints (4 KB here), collected via two BOUNDED collects per fit
+stated at the call sites.
 
-The float KMeans variants remain the perf/quality kernels for
-deployments that can spare the oracle (operators/similarity.py); the
-registry's v17/v18 run THIS rung so their driver rows are full hash
-checks. Reference parity: the reference stores raw float32 vectors
+The registry's IVF, PQ and IVF-PQ queries run these rungs, so their
+outputs are full hash checks. Reference parity: the reference stores
+raw float32 vectors
 (/root/reference/src/pinecone_utils.py:64-92) — PQ is part of the
 100 TB storage ladder built beyond it (SURVEY.md §2 north star).
 """
@@ -60,10 +56,19 @@ from multiagent_document_etl_system_spark.functions.numeric import (
 from multiagent_document_etl_system_spark.operators.similarity import (
     cosine_sql,
     exact_rerank,
-    ivf_fit_cap,
 )
 
 GRID = 10_000
+
+#: quantizer-fit sample budget per cell — production IVF trains the coarse
+#: quantizer on a bounded sample, never the full corpus (FAISS convention
+#: is 30-256 points per centroid).
+IVF_FIT_SAMPLE_PER_CELL = 256
+
+
+def ivf_fit_cap(n_cells: int) -> int:
+    """Upper bound on rows a quantizer fit may read."""
+    return IVF_FIT_SAMPLE_PER_CELL * n_cells
 
 
 def grid_vec(vec_col: str, grid: int = GRID) -> Column:
@@ -210,8 +215,8 @@ def pq_grid_codes(df: DataFrame, dim: int,
     """Corpus-wide assignment against literal integer codebooks — one
     narrow map, no shuffle, no Python. Output: (id, codes array<int>,
     err_sq_grid BIGINT = Σ per-subspace min squared grid distance — the
-    exact-integer reconstruction audit, the grid twin of pq_codes'
-    err_q). ``pre_gridded`` as in :func:`pq_grid_fit`."""
+    exact-integer reconstruction audit). ``pre_gridded`` as in
+    :func:`pq_grid_fit`."""
     n_subspaces = len(codebooks)
     width = dim // n_subspaces
     xq = (F.transform(F.col(vec_col), lambda x: x.cast("bigint"))
@@ -468,9 +473,8 @@ def ivf_grid_topk(queries: DataFrame, candidates: DataFrame, dim: int,
                   n_iters: int = 3, grid: int = GRID,
                   q_id: str = "q_id", c_id: str = "c_id",
                   q_vec: str = "q_vec", c_vec: str = "c_vec") -> DataFrame:
-    """IVF ANN over the DETERMINISTIC grid-Lloyd coarse quantizer — the
-    hash-oracled twin of :func:`similarity.ivf_topk` (which keeps the
-    float KMeans fit as the perf kernel). The coarse quantizer IS
+    """IVF ANN over the DETERMINISTIC grid-Lloyd coarse quantizer, with
+    a full hash oracle. The coarse quantizer IS
     :func:`pq_grid_fit` with ``n_subspaces=1``: 16 full-width centroids,
     anchored init + 3 Lloyd steps on the 1e-4 grid, so the whole fit
     (and hence the inverted file) restates in SQL clause by clause
@@ -480,9 +484,9 @@ def ivf_grid_topk(queries: DataFrame, candidates: DataFrame, dim: int,
     (d, cell) tie-break), exact cosine rerank ONLY within probed cells.
     Approximate w.r.t. true top-k (recall < 1 when the neighbor lives in
     an unprobed cell) yet fully deterministic w.r.t. the oracle — the
-    v6 LSH precedent. Scale shape matches the float rung: bounded fit
-    sample, one narrow assignment map, the probe list broadcast into the
-    cell equi-join; only Q·n_probe/n_cells of the corpus is scored."""
+    v6 LSH precedent. Scale shape: bounded fit sample, one narrow
+    assignment map, the probe list broadcast into the cell equi-join;
+    only Q·n_probe/n_cells of the corpus is scored."""
     coarse = pq_grid_fit(candidates, dim, n_subspaces=1, n_codes=n_cells,
                          n_iters=n_iters, id_col=c_id, vec_col=c_vec,
                          grid=grid)
@@ -504,21 +508,18 @@ def ivfpq_grid_topk(queries: DataFrame, candidates: DataFrame, dim: int,
                     n_iters: int = 3, k_adc: int = 100, grid: int = GRID,
                     q_id: str = "q_id", c_id: str = "c_id",
                     q_vec: str = "q_vec", c_vec: str = "c_vec") -> DataFrame:
-    """Full IVF-PQ retrieval over deterministic grid fits — the
-    hash-oracled twin of :func:`similarity.ivfpq_topk`: the grid coarse
+    """Full IVF-PQ retrieval over deterministic grid fits: the grid coarse
     quantizer (``n_subspaces=1``) routes queries to ``n_probe``/
     ``n_cells`` of the corpus, global grid-PQ codes shrink in-cell
     storage, integer ADC lookups score the probed cells' codes, the
     ``k_adc`` survivors exact-rerank to top-k.
 
-    Two documented divergences from the float kernel, both forced by SQL
-    restatability: the fits are grid-Lloyd (not KMeans), and the PQ
-    codes encode the RAW gridded vector, not the within-cell residual —
-    integer residual encoding is expressible but doubles the oracle's
-    CTE chain for a recall delta the k_adc=100 rerank already absorbs at
-    fixture scale (the residual form stays on the float kernel, where
-    tests assert its recall direction). Deterministic end-to-end ⇒ full
-    hash oracle (:func:`ivfpq_grid_topk_sql`)."""
+    The PQ codes encode the RAW gridded vector, not the within-cell
+    residual: the residual form (:func:`ivfpq_grid_residual_topk`) doubles
+    the oracle's CTE chain for a recall delta the k_adc=100 rerank already
+    absorbs on the isotropic fixture; on clustered data it recalls more
+    (tests/test_pq_grid.py asserts the direction). Deterministic
+    end-to-end ⇒ full hash oracle (:func:`ivfpq_grid_topk_sql`)."""
     coarse = pq_grid_fit(candidates, dim, n_subspaces=1, n_codes=n_cells,
                          n_iters=n_iters, id_col=c_id, vec_col=c_vec,
                          grid=grid)
@@ -576,9 +577,8 @@ def ivfpq_grid_residual_topk(queries: DataFrame, candidates: DataFrame,
     cell the residual distribution is tighter than the raw one, so the
     same code budget reconstructs finer. On the INTEGER grid the
     residual is exact (gridded vector minus integer centroid — BIGINT
-    in, BIGINT out, via ``pre_gridded``), so unlike the float kernel
-    (similarity.ivfpq_topk residual=True) the residual form here keeps
-    the FULL hash oracle (:func:`ivfpq_grid_residual_topk_sql`).
+    in, BIGINT out, via ``pre_gridded``), so the residual form keeps the
+    FULL hash oracle (:func:`ivfpq_grid_residual_topk_sql`).
 
     Query side: the ADC distance table is per (query, probed cell) —
     the query's residual AGAINST THAT CELL's centroid — which is the

@@ -25,10 +25,9 @@ shuffle-free after the broadcast; LSH makes N effectively N/2^bits per
 bucket.
 
 Reserved column names: these operators materialize internal helper columns
-``_qn``, ``_cn``, ``_sig``, ``_cell``, ``_nv``, ``_v`` on the input
-DataFrames. Callers must not pass DataFrames that already contain columns
-with those names (they would be silently overwritten); project them away or
-rename first.
+``_qn``, ``_cn``, ``_sig`` on the input DataFrames. Callers must not pass
+DataFrames that already contain columns with those names (they would be
+silently overwritten); project them away or rename first.
 """
 
 from __future__ import annotations
@@ -266,149 +265,6 @@ def topk_auto(queries: DataFrame, candidates: DataFrame, dim: int,
     return out, "lsh_bucketed"
 
 
-def l2_normalize(vec: Column) -> Column:
-    """Unit-normalize an array<float/double>; zero vectors pass through.
-
-    The squared-sum is bound via ``aggregate``'s *finish* lambda so the
-    O(dim) fold runs once per row — referencing ``norm(vec)`` inside the
-    per-element transform re-evaluates the fold per element, O(dim²) per
-    row (the grid_vec lesson, r12 optimization round). ``sqrt`` of the
-    bound sum per element is the only extra; the IEEE division sequence
-    is unchanged, so outputs are bit-identical."""
-    return F.aggregate(
-        vec, F.lit(0.0),
-        lambda s, x: s + x.cast("double") * x.cast("double"),
-        lambda s: F.when(F.sqrt(s) == 0, vec.cast("array<double>"))
-        .otherwise(F.transform(vec, lambda x: x.cast("double") / F.sqrt(s))))
-
-
-#: quantizer-fit sample budget per cell — production IVF trains the coarse
-#: quantizer on a bounded sample, never the full corpus (FAISS convention
-#: is 30-256 points per centroid).
-IVF_FIT_SAMPLE_PER_CELL = 256
-
-
-def ivf_fit_cap(n_cells: int) -> int:
-    """Upper bound on rows the KMeans quantizer may be fit on."""
-    return IVF_FIT_SAMPLE_PER_CELL * n_cells
-
-
-def ivf_train_sample(cand_n: DataFrame, n_cells: int) -> DataFrame:
-    """The bounded quantizer-fit input: at most ``ivf_fit_cap(n_cells)``
-    normalized vectors (``_nv``) as ML vectors (``_v``). Split out so tests
-    can assert the bound sits in the plan (GlobalLimit).
-
-    The sample is the cap-many rows with the SMALLEST content hash — not a
-    bare ``limit()``, which is partition-order dependent (an upstream
-    shuffle, coalesce change, or speculative retry silently changes which
-    rows feed KMeans, hence the codebooks, hence every code downstream;
-    the repo's hash-not-rand sampling convention, proven by
-    test_hash_sampling_survives_task_retries, applies to fits too).
-    ORDER BY hash LIMIT cap plans as TakeOrderedAndProject: a cap-size
-    heap per partition, no global sort shuffle. It does scan the corpus
-    once — acceptable because assignment scans the corpus immediately
-    after anyway, so fit adds one column-pruned pass, not a new cost
-    class."""
-    from pyspark.ml.functions import array_to_vector
-
-    # secondary sort key = the vector itself: a 64-bit hash collision
-    # between two DISTINCT vectors at the cap boundary would otherwise
-    # leave which one feeds KMeans partition-order dependent — exactly
-    # the nondeterminism the hash ordering exists to eliminate
-    return (cand_n.select(F.col("_nv"), F.xxhash64(F.col("_nv")).alias("_h"))
-            .orderBy("_h", "_nv")
-            .limit(ivf_fit_cap(n_cells))
-            .select(array_to_vector(F.col("_nv")).alias("_v")))
-
-
-def ivf_topk(queries: DataFrame, candidates: DataFrame,
-             k: int = 5, n_cells: int = 16, n_probe: int = 2,
-             seed: int = 42,
-             q_id: str = "q_id", c_id: str = "c_id",
-             q_vec: str = "q_vec", c_vec: str = "c_vec") -> DataFrame:
-    """IVF (inverted-file) ANN: KMeans coarse quantizer over a bounded
-    sample of the candidate corpus; each query probes its ``n_probe``
-    nearest centroids and exact cosine re-ranks ONLY within those cells.
-
-    The other big×big scale path next to :func:`ann_lsh_topk`: candidate
-    work per query drops from N to ~N·n_probe/n_cells. Vectors are
-    L2-normalized first so euclidean cell assignment agrees with the cosine
-    re-rank metric. The centroid table is tiny (n_cells × dim) — it rides
-    along as a literal array, so probing is a narrow map; the only shuffle
-    is the cell equi-join. Approximate by construction (recall < 1 when the
-    true neighbor lives in an unprobed cell) ⇒ rows-only check.
-
-    Scale: the quantizer is fit on at most ``ivf_fit_cap(n_cells)`` rows
-    (``limit`` — first-files sample), so fit cost is O(n_cells), not
-    O(corpus); the full corpus is only ASSIGNED with the fitted model (one
-    narrow pass). Counting the capped sample is cheap (≤ the cap), which
-    also exactly sizes n_cells for toy inputs instead of guessing via a
-    broad try/except around the fit.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    cand_n = candidates.withColumn("_nv", l2_normalize(F.col(c_vec)))
-    train = ivf_train_sample(cand_n, n_cells)
-    # KMeans cannot form more clusters than points; the count is bounded by
-    # the limit above, so this is never a full-corpus scan.
-    n_train = train.count()
-    if n_train < 2:
-        # degenerate corpus (0 or 1 candidates): KMeans needs k ≥ 2, and
-        # an index is pointless — exact brute force IS the right plan
-        return topk_join(queries, candidates, k=k, q_id=q_id, c_id=c_id,
-                         q_vec=q_vec, c_vec=c_vec)
-    n_cells = min(n_cells, n_train)
-    km = KMeans(k=n_cells, seed=seed, featuresCol="_v",
-                predictionCol="_cell")
-    fitted = km.fit(train)
-    n_probe = min(n_probe, n_cells)
-    assigned = (
-        fitted.transform(cand_n.withColumn("_v", array_to_vector(F.col("_nv"))))
-        .select(c_id, F.col("_nv").alias(c_vec), "_cell")
-    )
-
-    centers = [[float(x) for x in ctr] for ctr in fitted.clusterCenters()]
-    centers_lit = lit_double_matrix(centers)
-
-    # nearest n_probe cells per query: distance to every centroid (tiny),
-    # array_sort on (distance, cell) structs, take the head
-    q_n = queries.withColumn("_nv", l2_normalize(F.col(q_vec)))
-    dists = F.transform(
-        centers_lit,
-        lambda ctr, i: F.struct(
-            F.sqrt(F.aggregate(
-                F.zip_with(F.col("_nv"), ctr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda s, x: s + x,
-            )).alias("d"),
-            i.alias("cell"),
-        ),
-    )
-    probed = (
-        q_n.withColumn(
-            "_cell",
-            F.explode(F.transform(F.slice(F.array_sort(dists), 1, n_probe),
-                                  lambda s: s["cell"])),
-        )
-        .select(q_id, F.col("_nv").alias(q_vec), "_cell")
-    )
-
-    # per-row norms BEFORE the join (vectors are unit-normalized above, but
-    # computing the norm keeps the score exact even for zero vectors)
-    assigned = assigned.withColumn("_cn", norm(F.col(c_vec)))
-    probed = probed.withColumn("_qn", norm(F.col(q_vec)))
-    j = assigned.join(probed, "_cell").filter(F.col(q_id) != F.col(c_id))
-    denom = F.col("_qn") * F.col("_cn")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col(q_vec), F.col(c_vec)) / denom)
-    scored = j.select(q_id, c_id, F.round(score, 4).alias("score"))
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def ann_lsh_topk_multiprobe(queries: DataFrame, candidates: DataFrame,
                             dim: int, k: int = 5, n_planes: int = 8,
                             seed: int = 42,
@@ -450,28 +306,6 @@ def ann_lsh_topk_multiprobe(queries: DataFrame, candidates: DataFrame,
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def planes_for(n_vectors: int, target_bucket: int = 64,
-               floor_planes: int = 6, cap_planes: int = 16) -> int:
-    """LSH plane count that holds EXPECTED bucket occupancy near
-    ``target_bucket`` as the collection grows: ceil(log2(N/target)),
-    clamped to [floor, cap]. With a FIXED plane count, bucket occupancy
-    grows linearly in N and the within-bucket pair work quadratically —
-    the r8 100× rehearsal measured exactly that cliff on the kNN graph
-    (200k vectors over 2^6 buckets ⇒ ~3.1k/bucket ⇒ ~625M cosine pairs).
-    Log-scaling the planes restores O(N·target) pair volume; recall per
-    added plane is recovered by multiprobe (v11) where it matters.
-    Oracle-checked queries pin n_planes to a literal (their SQL twin
-    restates the plane constants), so this sizing rule is for the
-    DEPLOYMENT path — pass its result into knn_graph_stats /
-    embedding_near_pairs when N is known."""
-    import math
-
-    if n_vectors <= target_bucket:
-        return floor_planes
-    return max(floor_planes,
-               min(cap_planes, math.ceil(math.log2(n_vectors / target_bucket))))
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -751,7 +585,7 @@ def sign_pack(vec: Column, dim: int = 64) -> tuple[Column, Column]:
     of ``lo`` = vec[j] >= 0 for j < 32; ``hi`` covers 32..63) — the 1-bit
     storage rung (32x vs float32, below int8's 4x and PQ's 64x-with-
     codebooks). Deterministic pure bit arithmetic on both engines, so
-    unlike the KMeans rungs it supports a full hash oracle."""
+    it supports a full hash oracle."""
     half = dim // 2
     assert half == 32 and dim == 64, "sign_pack is specified for dim=64"
 
@@ -798,300 +632,6 @@ def binary_hamming_topk(queries: DataFrame, candidates: DataFrame,
         .filter(F.col("_r") <= k_coarse)
     )
     return exact_rerank(coarse, queries, candidates, k=k,
-                        q_id=q_id, c_id=c_id, q_vec=q_vec, c_vec=c_vec)
-
-
-# ----------------------------------------------------- product quantization
-
-def pq_fit(df: DataFrame, dim: int, n_subspaces: int = 4,
-           n_codes: int = 16, seed: int = 42,
-           vec_col: str = "embedding") -> list[list[list[float]]]:
-    """Learn the per-subspace PQ codebooks on a BOUNDED sample (at most
-    ``ivf_fit_cap(n_codes)`` rows — the IVF fit convention): m seeded
-    KMeans fits over width-d/m subvectors. Returns plain Python lists so
-    the codebooks can ride into assignment/scoring plans as literals."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    width = dim // n_subspaces
-    assert width * n_subspaces == dim, "dim must split evenly"
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # smallest-content-hash sample, not bare limit() — see ivf_train_sample
-    # (vector itself as the tie-break for hash collisions at the boundary)
-    sample = (df.select(v.alias("_v"), F.xxhash64(v).alias("_h"))
-              .orderBy("_h", "_v").limit(ivf_fit_cap(n_codes)).select("_v"))
-    books: list[list[list[float]]] = []
-    for s in range(n_subspaces):
-        sub = sample.select(
-            array_to_vector(F.slice("_v", s * width + 1, width)).alias("_s"))
-        n_train = sub.count()
-        k_eff = max(2, min(n_codes, n_train))
-        km = KMeans(k=k_eff, seed=seed + s, featuresCol="_s",
-                    predictionCol="_c")
-        books.append(
-            [[float(x) for x in ctr]
-             for ctr in km.fit(sub).clusterCenters()])
-    return books
-
-
-def pq_codes(df: DataFrame, dim: int, n_subspaces: int = 4,
-             n_codes: int = 16, seed: int = 42,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             codebooks: list[list[list[float]]] | None = None) -> DataFrame:
-    """Product quantization (the FAISS PQ storage rung, completing the
-    ladder next to SQ8 int8 (:func:`quantize_int8`) and the IVF coarse
-    quantizer (:func:`ivf_topk`)): split each d-dim vector into
-    ``n_subspaces`` contiguous subvectors, learn a ``n_codes``-entry KMeans
-    codebook per subspace on a BOUNDED sample, store each vector as one
-    code per subspace — d floats become n_subspaces small ints
-    (64 x float32 -> 4 x uint8 here, a 64x shrink vs float32).
-
-    Output: (id, codes array<int>, err_q) where err_q is the
-    reconstruction L2 error ||x - dequant(codes)|| on a 1e-6 grid — the
-    audit column bounding what ADC-style scoring over the codes can lose.
-
-    Scale shape: the m fits see at most 256*n_codes rows each (GlobalLimit
-    in-plan, the IVF convention); the corpus-wide ASSIGNMENT is one narrow
-    map — each subspace's codebook rides along as a literal array and the
-    nearest code is an array_min over n_codes (distance, code) structs.
-    No shuffle anywhere; approximate by construction (KMeans) => rows-only
-    against the oracle.
-    """
-    width = dim // n_subspaces
-    assert width * n_subspaces == dim, "dim must split evenly"
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = df.select(F.col(id_col), v.alias("_v"))
-
-    if codebooks is None:
-        codebooks = pq_fit(df, dim, n_subspaces=n_subspaces,
-                           n_codes=n_codes, seed=seed, vec_col=vec_col)
-
-    # stage each subspace's argmin STRUCT as a column so the distance scan
-    # over the codebook runs once per subspace, not once per consumer
-    # (code extraction + error accumulation)
-    best_cols = []
-    for s, book in enumerate(codebooks):
-        book_lit = lit_double_matrix(book)
-        sub = F.slice("_v", s * width + 1, width)
-        scored = F.transform(
-            book_lit,
-            lambda ctr, j: F.struct(
-                F.aggregate(F.zip_with(sub, ctr,
-                                       lambda a, b: (a - b) * (a - b)),
-                            F.lit(0.0), lambda acc, x: acc + x)
-                .alias("d"),
-                j.alias("c"),
-            ),
-        )
-        best_cols.append(F.array_min(scored).alias(f"_best{s}"))
-
-    staged = base.select(id_col, *best_cols)
-    err_sq = sum((F.col(f"_best{s}").getField("d")
-                  for s in range(n_subspaces)), F.lit(0.0))
-    return staged.select(
-        id_col,
-        F.array(*[F.col(f"_best{s}").getField("c").cast("int")
-                  for s in range(n_subspaces)]).alias("codes"),
-        F.floor(F.sqrt(err_sq) * 1e6 + 0.5).cast("bigint").alias("err_q"),
-    )
-
-
-def pq_adc_topk(queries: DataFrame, candidates: DataFrame, dim: int,
-                k: int = 5, n_subspaces: int = 4, n_codes: int = 16,
-                seed: int = 42,
-                q_id: str = "q_id", c_id: str = "c_id",
-                q_vec: str = "q_vec", c_vec: str = "c_vec") -> DataFrame:
-    """ADC (asymmetric-distance) top-k over PQ codes — the query path that
-    makes v17's 64x-compressed storage searchable: candidates are scored
-    from their CODES alone, never their vectors.
-
-    Each query precomputes one (n_subspaces x n_codes) distance table
-    against the literal codebooks (a narrow map over the tiny query side);
-    a candidate's approximate distance is then m table lookups + adds —
-    O(m) per pair instead of O(d), on 1/16th the candidate bytes. Both
-    sides are L2-normalized first so the distance ordering agrees with the
-    cosine rungs. Deterministic ordering (rounded distance ASC, candidate
-    id ASC), but the codebooks come from KMeans => rows-only vs the
-    oracle; recall is bounded by reconstruction error (pq_codes' err_q
-    audit) and is sanity-checked against brute force in tests.
-    """
-    cand_n = candidates.select(
-        F.col(c_id), l2_normalize(F.col(c_vec)).alias("_nv"))
-    books = pq_fit(cand_n, dim, n_subspaces=n_subspaces, n_codes=n_codes,
-                   seed=seed, vec_col="_nv")
-    codes = pq_codes(cand_n, dim, n_subspaces=n_subspaces, n_codes=n_codes,
-                     seed=seed, id_col=c_id, vec_col="_nv",
-                     codebooks=books).select(c_id, "codes")
-
-    width = dim // n_subspaces
-    q_n = queries.select(F.col(q_id),
-                         l2_normalize(F.col(q_vec)).alias("_nv"))
-    tables = []
-    for s, book in enumerate(books):
-        book_lit = lit_double_matrix(book)
-        sub = F.slice("_nv", s * width + 1, width)
-        tables.append(F.transform(
-            book_lit,
-            lambda ctr: F.aggregate(
-                F.zip_with(sub, ctr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x),
-        ))
-    qdt = q_n.select(q_id, F.array(*tables).alias("_dt"))
-
-    pairs = codes.crossJoin(F.broadcast(qdt))         .filter(F.col(q_id) != F.col(c_id))
-    dist_sq = sum(
-        (F.element_at(F.element_at("_dt", s + 1),
-                      F.col("codes")[s] + 1)
-         for s in range(n_subspaces)),
-        F.lit(0.0),
-    )
-    scored = pairs.select(
-        q_id, c_id, F.round(F.sqrt(dist_sq), 4).alias("adc_dist"))
-    w = Window.partitionBy(q_id).orderBy(F.asc("adc_dist"), F.asc(c_id))
-    return scored.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k)
-
-
-def pq_adc_rerank_topk(queries: DataFrame, candidates: DataFrame, dim: int,
-                       k: int = 5, k_adc: int = 100, n_subspaces: int = 4,
-                       n_codes: int = 16, seed: int = 42,
-                       q_id: str = "q_id", c_id: str = "c_id",
-                       q_vec: str = "q_vec",
-                       c_vec: str = "c_vec") -> DataFrame:
-    """The production PQ deployment shape: ADC over codes prefilters to
-    ``k_adc`` candidates per query (O(m) lookups per pair over 64x-smaller
-    candidate bytes), then :func:`exact_rerank` restores full precision on
-    the Q x k_adc survivors. Raw ADC ordering alone is recall-limited by
-    reconstruction error (isotropic synthetic vectors are PQ's worst case
-    — measured recall@5 0.16 raw vs 0.80 with k_adc=100 rerank at fixture
-    scale); the rerank stage is what every FAISS IVFPQ pipeline runs."""
-    pre = pq_adc_topk(queries, candidates, dim, k=k_adc,
-                      n_subspaces=n_subspaces, n_codes=n_codes, seed=seed,
-                      q_id=q_id, c_id=c_id, q_vec=q_vec, c_vec=c_vec)
-    return exact_rerank(pre, queries, candidates, k=k,
-                        q_id=q_id, c_id=c_id, q_vec=q_vec, c_vec=c_vec)
-
-
-def ivfpq_topk(queries: DataFrame, candidates: DataFrame, dim: int,
-               k: int = 5, n_cells: int = 16, n_probe: int = 2,
-               n_subspaces: int = 4, n_codes: int = 16,
-               k_adc: int = 100, seed: int = 42, residual: bool = True,
-               q_id: str = "q_id", c_id: str = "c_id",
-               q_vec: str = "q_vec", c_vec: str = "c_vec") -> DataFrame:
-    """Full IVF-PQ retrieval — the architecture a 100 TB vector corpus
-    actually runs (FAISS IVFPQ): a KMeans coarse quantizer routes each
-    candidate to a cell (v8's inverted file), vectors inside cells are
-    stored as PQ CODES (v17's 64x shrink), each query probes its n_probe
-    nearest cells, scores the probed cells' codes by ADC table lookups
-    (v18's kernel), and exact-reranks the k_adc survivors.
-
-    Per-query work: n_probe/n_cells of the corpus touched, at m lookups
-    per pair over code bytes, then k_adc full vectors. The only corpus
-    shuffle is the cell equi-join on a small uniform key; codebooks and
-    centroids ride as literals.
-
-    ``residual=True`` (default, the textbook IVFPQ form) encodes the
-    RESIDUAL x - centroid(cell(x)) instead of x: within a cell the
-    residual distribution is tighter than the raw one, so the same code
-    budget reconstructs finer and recall rises (measured at fixture
-    scale: 0.76 raw -> higher residual; tests assert the direction). The
-    query-side distance tables are then per (query, probed cell) — the
-    subtract-centroid staging column after the probe explode — and the
-    candidate codes are assigned from the residual, same machinery
-    otherwise. KMeans everywhere => rows-only vs the oracle.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    cand_n = candidates.select(
-        F.col(c_id), l2_normalize(F.col(c_vec)).alias("_nv"))
-    train = ivf_train_sample(cand_n, n_cells)
-    n_train = train.count()
-    if n_train < 2:
-        return topk_join(queries, candidates, k=k, q_id=q_id, c_id=c_id,
-                         q_vec=q_vec, c_vec=c_vec)
-    n_cells = min(n_cells, n_train)
-    n_probe = min(n_probe, n_cells)
-    fitted = KMeans(k=n_cells, seed=seed, featuresCol="_v",
-                    predictionCol="_cell").fit(train)
-    centers_lit = lit_double_matrix(
-        [[float(x) for x in ctr] for ctr in fitted.clusterCenters()])
-    assigned = (
-        fitted.transform(cand_n.withColumn(
-            "_v", array_to_vector(F.col("_nv"))))
-        .select(c_id, F.col("_nv"), "_cell")
-    )
-    if residual:
-        # encode x - centroid(cell(x)); stage the residual as a column
-        assigned = assigned.withColumn(
-            "_ev",
-            F.zip_with("_nv", F.element_at(centers_lit, F.col("_cell") + 1),
-                       lambda a, b: a - b))
-    else:
-        assigned = assigned.withColumn("_ev", F.col("_nv"))
-
-    # PQ codes for every candidate, codebooks shared with the query side
-    books = pq_fit(assigned, dim, n_subspaces=n_subspaces, n_codes=n_codes,
-                   seed=seed, vec_col="_ev")
-    coded = pq_codes(assigned, dim, n_subspaces=n_subspaces,
-                     n_codes=n_codes, seed=seed, id_col=c_id,
-                     vec_col="_ev", codebooks=books) \
-        .join(assigned.select(c_id, "_cell"), c_id)
-
-    # query side: probe cells, then build the ADC distance tables per
-    # (query, probed cell) from the query's residual in that cell
-    width = dim // n_subspaces
-    q_n = queries.select(F.col(q_id), l2_normalize(F.col(q_vec))
-                         .alias("_nv"))
-    cell_d = F.transform(
-        centers_lit,
-        lambda ctr, i: F.struct(
-            F.aggregate(F.zip_with("_nv", ctr,
-                                   lambda a, b: (a - b) * (a - b)),
-                        F.lit(0.0), lambda s, x: s + x).alias("d"),
-            i.alias("cell"),
-        ),
-    )
-    probed = q_n.select(
-        q_id, "_nv",
-        F.explode(F.transform(F.slice(F.array_sort(cell_d), 1, n_probe),
-                              lambda st: st["cell"])).alias("_cell"),
-    )
-    if residual:
-        probed = probed.withColumn(
-            "_ev",
-            F.zip_with("_nv", F.element_at(centers_lit, F.col("_cell") + 1),
-                       lambda a, b: a - b))
-    else:
-        probed = probed.withColumn("_ev", F.col("_nv"))
-    tables = []
-    for s, book in enumerate(books):
-        book_lit = lit_double_matrix(book)
-        sub = F.slice("_ev", s * width + 1, width)
-        tables.append(F.transform(
-            book_lit,
-            lambda ctr: F.aggregate(
-                F.zip_with(sub, ctr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x),
-        ))
-    probed = probed.select(q_id, F.array(*tables).alias("_dt"), "_cell")
-
-    pairs = coded.join(F.broadcast(probed), "_cell") \
-        .filter(F.col(q_id) != F.col(c_id))
-    dist_sq = sum(
-        (F.element_at(F.element_at("_dt", s + 1), F.col("codes")[s] + 1)
-         for s in range(n_subspaces)),
-        F.lit(0.0),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.asc("adc_dist"), F.asc(c_id))
-    adc = (
-        pairs.select(q_id, c_id,
-                     F.round(F.sqrt(dist_sq), 4).alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_adc)
-    )
-    return exact_rerank(adc, queries, candidates, k=k,
                         q_id=q_id, c_id=c_id, q_vec=q_vec, c_vec=c_vec)
 
 

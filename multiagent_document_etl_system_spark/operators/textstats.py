@@ -982,10 +982,6 @@ floor((206.835
 """.strip().replace("\n", " ")
 
 
-def readability_sql(col: str) -> str:
-    return f"({_readability_grid_sql(col)} / 10000.0)"
-
-
 def readability_q1e4_sql(col: str) -> str:
     """DuckDB twin of :func:`readability_q1e4_expr`."""
     return f"CAST({_readability_grid_sql(col)} AS BIGINT)"

@@ -245,8 +245,7 @@ def v8_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ranks only within them. Approximate w.r.t. true top-k, exactly
     specified w.r.t. the oracle (the v6 LSH precedent); the DuckDB twin
     restates the fit, the inverted file, the probe, and the re-rank.
-    The float-KMeans variant (similarity.ivf_topk) stays as the perf
-    kernel with its recall property in tests/test_similarity."""
+    With every cell probed it equals exact top-k (tests/test_pq_grid)."""
     e = _emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
@@ -499,10 +498,8 @@ def v17_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic grid-Lloyd fit: anchored init + 3 Lloyd iterations on
     a 1e-4 integer grid, every step restated clause-by-clause in the
     DuckDB oracle (the fit itself rides INSIDE the SQL), distances exact
-    BIGINT sums. Measured recall parity with the KMeans fit at fixture
-    scale is pinned in tests/test_pq_grid.py; the float KMeans variant
-    remains the perf kernel (similarity.pq_codes, exercised by v19's
-    IVF-PQ composition and the pytest recall properties).
+    BIGINT sums. Its recall at fixture scale is pinned in
+    tests/test_pq_grid.py.
 
     Registry outputs must be scalar (driver canon crashes on array cells,
     r03), so the 4-code array is emitted dash-joined ('3-0-12-7'); the
@@ -523,10 +520,9 @@ def v19_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed cells' codes, exact rerank restores precision — the composed
     100 TB ANN architecture with EVERY stage restated in the DuckDB twin
     (operators/pq_grid.ivfpq_grid_topk; the coarse + PQ fit chains
-    compose under cq_/pq_ CTE prefixes). Two documented divergences from
-    the float kernel (similarity.ivfpq_topk, still the perf kernel with
-    its residual-recall property in pytest): grid-Lloyd fits, and raw
-    (non-residual) PQ encoding — see the operator docstring."""
+    compose under cq_/pq_ CTE prefixes). The PQ codes encode the raw
+    gridded vector; v27 is the residual form — see the operator
+    docstrings."""
     e = _emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
@@ -546,9 +542,8 @@ def v18_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank), exact cosine reranks to top-5 (rounded-4dp, the proven
     v16/v20 oracle bridge) — the FAISS-PQ query shape. The DuckDB twin
     restates the whole pipeline including the deterministic grid-Lloyd
-    fit (see v17 / operators/pq_grid.py); the KMeans-fit float variant
-    (similarity.pq_adc_rerank_topk) stays as the perf kernel with its
-    pytest recall properties. Scale: query-side distance tables
+    fit (see v17 / operators/pq_grid.py); its recall is pinned in
+    tests/test_pq_grid.py. Scale: query-side distance tables
     broadcast; the corpus contributes one narrow code map + the ranked
     prefilter window; rerank touches Q x 100 vectors."""
     e = _emb(spark, sf_dir)
@@ -621,8 +616,7 @@ def v20_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing the ladder (float32 > int8 v15 > PQ v17 > binary v20).
     Coarse distances are 2 XOR+popcounts over packed longs; exact cosine
     restores precision on 50 survivors per query. Fully deterministic
-    (integer distances, id tie-breaks) => full hash oracle, unlike the
-    KMeans rungs."""
+    (integer distances, id tie-breaks) => full hash oracle."""
     e = _emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
@@ -790,9 +784,9 @@ def v21_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole deterministic ladder: LSH, multi-probe LSH, matryoshka
     truncated-prefilter, binary sign+Hamming, and — since r12 — the
     grid-Lloyd PQ-ADC rung, whose deterministic fit rides inside the
-    oracle, so ITS recall number is hash-pinned too). The KMeans rungs
-    (IVF / float-PQ) remain excluded by construction — their fits are
-    not SQL-expressible, so they carry pytest recall properties instead.
+    oracle, so ITS recall number is hash-pinned too). The grid IVF and
+    IVF-PQ rungs (v8, v19, v27) are hash-pinned query by query and carry
+    their recall floors in tests/test_pq_grid.py.
 
     Every output cell is a string or BIGINT (recall on the exact 1e-4
     integer grid via idiv_round — no float ever leaves the plan), so the
@@ -935,7 +929,7 @@ def v27_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     FAISS IVFPQ form (Jégou et al. 2011) completing the grid family: PQ
     codes encode x − centroid(cell(x)), refit over INTEGER residuals
     (gridded vector minus integer centroid — exact, so the residual form
-    keeps the full oracle the float kernel's residual path cannot have).
+    keeps the full oracle).
     The query side builds one distance table per (query, probed cell)
     from the query's residual in that cell — residual encoding's
     structural cost, still query-side-bounded. v19 keeps the raw

@@ -242,23 +242,6 @@ def test_knn_graph_mutual_is_symmetric_count(spark):
     assert sum(r.mutual_deg for r in rows) % 2 == 0
 
 
-def test_planes_for_holds_bucket_occupancy():
-    """The r8 deployment sizing rule (found by the 100x embeddings
-    rehearsal): plane count grows with log2(N/target) so expected bucket
-    occupancy stays ~constant — a FIXED plane count makes within-bucket
-    pair work quadratic in N (200k vectors over 2^6 buckets ⇒ ~625M
-    cosine pairs; the rehearsal run never finished)."""
-    assert similarity.planes_for(0) == 6
-    assert similarity.planes_for(2_000) == 6       # floor
-    assert similarity.planes_for(20_000) == 9
-    assert similarity.planes_for(200_000) == 12
-    assert similarity.planes_for(10**9) == 16      # cap (key stays a long)
-    for n in (1_000, 50_000, 5_000_000):
-        p = similarity.planes_for(n)
-        if p < 16:  # inside the clamp, occupancy is bounded by design
-            assert n / (1 << p) <= 64 + 1e-9, (n, p)
-
-
 # -------------------------------------------------------- count-min sketch
 
 def _cms_model(docs: list[str], d: int, w: int, probe_k: int):

@@ -5,6 +5,7 @@ upstream stage routinely hands an operator zero rows."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from multiagent_document_etl_system_spark.io import load_table
@@ -48,7 +49,7 @@ def test_pipeline_and_curation_on_empty_corpus(spark):
 
 
 def test_similarity_kernels_on_empty_sides(spark):
-    from multiagent_document_etl_system_spark.operators import similarity
+    from multiagent_document_etl_system_spark.operators import pq_grid, similarity
 
     emb = load_table(spark, SF, "embeddings")
     q0, q3 = _q(emb), _q(emb, 3)
@@ -63,10 +64,12 @@ def test_similarity_kernels_on_empty_sides(spark):
     assert similarity.topk_join_matmul(q3, c0).count() == 0
     assert similarity.ann_lsh_topk(q0, c, dim=64).count() == 0
     assert similarity.ann_lsh_topk_matmul(q0, c, dim=64).count() == 0
-    # degenerate IVF corpora: 0 or 1 candidates fall back to brute force
-    assert similarity.ivf_topk(q3, c0).count() == 0
-    one = similarity.ivf_topk(q3, c.limit(1))
+    # degenerate IVF corpora: one candidate still ranks; an empty one is
+    # refused by the fit, which has no sample to anchor its centroids on
+    one = pq_grid.ivf_grid_topk(q3, c.limit(1), dim=64)
     assert one.count() <= 3 and set(one.columns) >= {"q_id", "c_id", "score"}
+    with pytest.raises(ValueError, match="pq_grid_fit: empty candidate set"):
+        pq_grid.ivf_grid_topk(q3, c0, dim=64)
     auto_out, strategy = similarity.topk_auto(q0, c, dim=64)
     assert strategy == "broadcast_exact" and auto_out.count() == 0
 

@@ -176,20 +176,6 @@ def test_centroids_and_clusters_have_no_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in p, name
 
 
-def test_ivf_fit_sample_is_bounded(spark):
-    """The IVF quantizer is fit on a capped sample, never the full corpus:
-    the fit input plan carries a GlobalLimit of ivf_fit_cap(n_cells)."""
-    from multiagent_document_etl_system_spark.operators import similarity
-
-    e = load_table(spark, SF_DIR, "embeddings").select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    cand_n = e.withColumn("_nv", similarity.l2_normalize(F.col("c_vec")))
-    train = similarity.ivf_train_sample(cand_n, n_cells=16)
-    plan = train._jdf.queryExecution().optimizedPlan().toString()
-    assert "GlobalLimit" in plan
-    assert train.count() <= similarity.ivf_fit_cap(16)
-
-
 def test_dynamic_partition_pruning_on_namespace_registry(spark):
     """Joining the namespace-partitioned registry against a filtered dim on
     the partition column plants a dynamic-pruning subquery in the scan —

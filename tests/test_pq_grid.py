@@ -1,10 +1,10 @@
 """operators/pq_grid — the deterministic integer-grid PQ rung (r12
 verdict #4): the fit is anchored-init + grid-Lloyd, every step
-SQL-restatable, so v17/v18 carry FULL hash oracles where the KMeans
-variants could only ever be rows-only. These tests pin determinism,
-the Lloyd improvement direction, ranking quality parity with the float
-rung, degenerate corpora, and the Spark↔DuckDB hash parity the driver
-checks."""
+SQL-restatable, so v17/v18 carry FULL hash oracles where a KMeans
+fit could only ever be rows-only. These tests pin determinism, the
+Lloyd improvement direction, recall floors in the band a float KMeans
+fit reaches, degenerate corpora, and the Spark↔DuckDB hash parity of
+the registry queries."""
 
 from __future__ import annotations
 
@@ -19,9 +19,9 @@ def _emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
-def _qc(spark):
+def _qc(spark, every=100):
     e = _emb(spark)
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
+    q = e.filter(F.col("vec_id") % every == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     c = e.select(F.col("vec_id").alias("c_id"),
                  F.col("embedding").alias("c_vec"))
@@ -67,12 +67,23 @@ def test_codes_shape_and_bounds(spark):
         assert r["err_sq_grid"] >= 0
 
 
+def test_assignment_is_narrow(spark):
+    """Corpus-wide code assignment is one narrow map: the codebooks ride
+    as literals, so no shuffle, no Python evaluation and no join."""
+    e = _emb(spark)
+    books = pq_grid.pq_grid_fit(e, dim=64)
+    plan = pq_grid.pq_grid_codes(e, 64, books)._jdf.queryExecution() \
+        .executedPlan().toString()
+    for node in ("Exchange", "BatchEvalPython", "ArrowEvalPython",
+                 "SortMergeJoin"):
+        assert node not in plan, plan
+
+
 def test_adc_rerank_recall_matches_the_float_rung(spark):
     """Ranking behavior unchanged (r12 verdict #4's gate): the
     deterministic grid fit's ADC-prefilter + exact-rerank recall@5 must
-    sit in the same band the float-KMeans rung documents at fixture
-    scale (0.80 with k_adc=100; isotropic vectors are PQ's worst
-    case)."""
+    sit in the same band a float KMeans fit reaches at fixture scale
+    (0.80 with k_adc=100; isotropic vectors are PQ's worst case)."""
     q, c = _qc(spark)
     exact = {(r["q_id"], r["c_id"])
              for r in similarity.topk_join(q, c, k=5).collect()}
@@ -100,6 +111,13 @@ def test_degenerate_tiny_corpus(spark):
                                              k_adc=3).collect()
     assert all(r["rank"] <= 2 for r in ranked)
     assert all(r["q_id"] != r["c_id"] for r in ranked)
+    # a 3-point 4-d corpus through IVF with more cells than points: the
+    # coarse fit's anchors wrap the same way and the probe still ranks
+    rows = [(i, [float(i == j) for j in range(4)]) for i in range(3)]
+    q4 = spark.createDataFrame(rows, "q_id long, q_vec array<double>")
+    c4 = spark.createDataFrame(rows, "c_id long, c_vec array<double>")
+    assert pq_grid.ivf_grid_topk(q4, c4, dim=4, k=2, n_cells=16,
+                                 n_probe=16).count() > 0
 
 
 def test_zero_vector_grids_to_zero(spark):
@@ -148,7 +166,7 @@ def test_v19_registry_oracle_parity(spark, duck):
 
 
 def test_ivf_grid_recall_band(spark):
-    """Ranking quality parity with the float rung (the v17/v18 gate
+    """Ranking quality parity with a float KMeans fit (the v17/v18 gate
     applied to IVF): on a 50-query sample the grid coarse quantizer's
     recall@5 must sit in the float-KMeans band. Measured on this
     fixture: grid p2 0.400 vs float 0.488; grid IVF-PQ p4 0.584 vs
@@ -174,6 +192,18 @@ def test_ivf_grid_recall_band(spark):
     n = max(1, len(exact))
     assert len(exact & got_ivf) / n >= 0.38, len(exact & got_ivf) / n
     assert len(exact & got_ivfpq) / n >= 0.55, len(exact & got_ivfpq) / n
+
+
+def test_ivf_grid_full_probe_is_exact(spark):
+    """Probing every cell scores every candidate, so IVF must return
+    exactly the brute-force top-k — the inverted file loses no row."""
+    q, c = _qc(spark, every=50)
+    exact = {(r["q_id"], r["c_id"])
+             for r in similarity.topk_join(q, c, k=5).collect()}
+    full = {(r["q_id"], r["c_id"])
+            for r in pq_grid.ivf_grid_topk(q, c, dim=64, k=5, n_cells=8,
+                                           n_probe=8).collect()}
+    assert full == exact
 
 
 def test_v27_registry_oracle_parity(spark, duck):
@@ -204,6 +234,38 @@ def test_residual_recall_band(spark):
                k_adc=100).collect()}
     n = max(1, len(exact))
     assert len(exact & got) / n >= 0.52, len(exact & got) / n
+
+
+def test_ivfpq_residual_beats_raw_on_clustered_data(spark):
+    """Residual encoding (codes on x - centroid) must out-recall raw
+    encoding at the same code budget when cells capture real structure —
+    the textbook IVFPQ claim the isotropic fixture cannot show (its
+    centroids sit near 0, so residual ~ raw). A clustered corpus: 8
+    separated centers + small noise. Measured recall@5 0.56 raw vs 0.68
+    residual at n_probe=1, k_adc=20; every stage is integer-deterministic,
+    so the gap is not seed luck."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    centers = rng.normal(0, 1, (8, 64)) * 3
+    rows = [(i, (centers[i % 8] + rng.normal(0, 0.3, 64))
+             .astype("float32").tolist()) for i in range(600)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = emb.filter(F.col("vec_id") % 60 == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    c = emb.select(F.col("vec_id").alias("c_id"),
+                   F.col("embedding").alias("c_vec"))
+    exact = {(r["q_id"], r["c_id"])
+             for r in similarity.topk_join(q, c, k=5).collect()}
+
+    def recall(topk):
+        got = {(r["q_id"], r["c_id"]) for r in topk(
+            q, c, dim=64, k=5, n_cells=8, n_probe=1, k_adc=20).collect()}
+        return len(got & exact) / len(exact)
+
+    r_raw = recall(pq_grid.ivfpq_grid_topk)
+    r_res = recall(pq_grid.ivfpq_grid_residual_topk)
+    assert r_res > r_raw, (r_raw, r_res)
 
 
 def test_v21_includes_the_grid_pq_rung(spark, duck):
@@ -261,7 +323,7 @@ def test_numpy_fit_matches_spark_side_lloyd_aggregates(spark):
     n_codes, width, dim = 16, 16, 64
     b0 = pq_grid.pq_grid_fit(e, dim=dim, n_iters=0)
     b1 = pq_grid.pq_grid_fit(e, dim=dim, n_iters=1)
-    cap = similarity.ivf_fit_cap(n_codes)
+    cap = pq_grid.ivf_fit_cap(n_codes)
     samp = (e.select(F.col("vec_id").alias("_id"),
                      pq_grid.grid_vec("embedding").alias("_xq"))
             .orderBy("_id").limit(cap))

@@ -84,3 +84,34 @@ def test_package_reexports_the_external_surface():
                  "_DRIVER_WINDOW_R11", "_QUEUED_FOR_R12",
                  "_namespace_registry_dir", "curation_flags"):
         assert hasattr(registry, name), name
+
+
+def test_every_public_helper_is_referenced():
+    """No dead public helpers: every undecorated, non-underscore top-level
+    ``def``/``class`` in the package must be named somewhere besides its
+    own definition — in the package, the tests, the tools, perfbench,
+    ``bench.py`` or ``__spark_entry__.py``. Words are counted over the
+    raw text, so a name used only inside f-string SQL still counts.
+    Decorated definitions (registry queries, UDFs) are reached through
+    their decorator and are exempt."""
+    import ast
+    import re
+    from collections import Counter
+
+    pkg = REPO / "multiagent_document_etl_system_spark"
+    sources = [*pkg.rglob("*.py"), *(REPO / "tests").rglob("*.py"),
+               *(REPO / "tools").rglob("*.py"),
+               *(REPO / "perfbench").rglob("*.py"),
+               REPO / "bench.py", REPO / "__spark_entry__.py"]
+    words = Counter()
+    for path in sources:
+        words.update(re.findall(r"\w+", path.read_text()))
+    unreferenced = sorted(
+        f"{path.relative_to(REPO)}:{node.name}"
+        for path in pkg.rglob("*.py")
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef))
+        and not node.decorator_list and not node.name.startswith("_")
+        and words[node.name] == 1)
+    assert not unreferenced, unreferenced

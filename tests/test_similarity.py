@@ -98,32 +98,6 @@ def test_embed_text_contract(spark):
     assert again == out                          # deterministic re-run
 
 
-def test_ivf_topk_recall_vs_exact(spark):
-    """IVF with full probing (n_probe = n_cells) must equal the exact
-    brute-force top-k; 2-probe recall should still be high on this corpus."""
-    from multiagent_document_etl_system_spark.io import load_table
-    from multiagent_document_etl_system_spark.operators import similarity
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = e.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    c = e.select(F.col("vec_id").alias("c_id"),
-                 F.col("embedding").alias("c_vec"))
-
-    exact = {(r["q_id"], r["c_id"])
-             for r in similarity.topk_join(q, c, k=5).collect()}
-    full = {(r["q_id"], r["c_id"])
-            for r in similarity.ivf_topk(q, c, k=5, n_cells=8,
-                                         n_probe=8).collect()}
-    assert full == exact  # probing every cell ⇒ exact
-
-    two = {(r["q_id"], r["c_id"])
-           for r in similarity.ivf_topk(q, c, k=5, n_cells=8,
-                                        n_probe=2).collect()}
-    recall = len(two & exact) / len(exact)
-    assert recall >= 0.5, recall
-
-
 def test_lsh_topk_recall_vs_exact(spark):
     """ANN-LSH recall against exact brute force on the test corpus —
     the approximate path must be 'approximate', not broken."""
