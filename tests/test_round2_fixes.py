@@ -73,6 +73,20 @@ def test_pipeline_preserves_parse_error_detail(spark):
     assert resp[3]["error"] == PARSE_ERROR
 
 
+def test_ivf_topk_clamps_tiny_corpus(spark):
+    """More IVF cells than points must not fail: the coarse fit's anchor
+    rank wraps modulo the sample size and the probe still ranks."""
+    from multiagent_document_etl_system_spark.operators.pq_grid import (
+        ivf_grid_topk,
+    )
+
+    rows = [(i, [float(i == j) for j in range(4)]) for i in range(3)]
+    q = spark.createDataFrame(rows, "q_id long, q_vec array<double>")
+    c = spark.createDataFrame(rows, "c_id long, c_vec array<double>")
+    out = ivf_grid_topk(q, c, dim=4, k=2, n_cells=16, n_probe=16)
+    assert out.count() > 0
+
+
 def test_bigram_frequencies_tiny(spark):
     """Hand-checked bigram counts; empty/one-token/NULL docs contribute
     nothing."""
