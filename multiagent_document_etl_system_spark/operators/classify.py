@@ -67,12 +67,13 @@ def _argmax_label(scores: dict[str, Column]) -> Column:
     )
 
 
-def classify_stages(head_text: Column) -> tuple[list[dict[str, Column]],
-                                                 Column]:
-    """The classifier as projection layers over ``head_text``, the cleaned,
-    lowercased text: ``(layers, label)``. Apply each layer with
-    ``withColumns`` in order; ``label`` then reads the layers' temporary
-    ``_cls_*`` columns.
+def classify_stages(head_text: Column) -> tuple[dict[str, Column], Column]:
+    """The classifier over ``head_text``, the cleaned, lowercased text:
+    ``(stages, label)``. ``stages`` maps each temporary ``_cls_*`` column
+    to its expression, in dependency order: the truncated head, then one
+    score per label reading it. Alias them into ONE ``select``, where
+    each reads the earlier ones as a lateral column alias; ``label`` then
+    reads the scores as lateral aliases too.
 
     Staged evaluation: the truncated head and each label score are
     materialized as intermediate columns, so the text is cleaned ONCE per
@@ -90,18 +91,24 @@ def classify_stages(head_text: Column) -> tuple[list[dict[str, Column]],
     }
     label = _argmax_label(dict(zip(LABEL_KEYWORDS,
                                    (F.col(c) for c in scores))))
-    return [{"_cls_head": truncate_head(head_text, HEAD_CHARS)}, scores], label
+    return {"_cls_head": truncate_head(head_text, HEAD_CHARS), **scores}, label
 
 
 def classify(df: DataFrame, text_col: str = "text",
              out_col: str = "doc_type") -> DataFrame:
     """Append ``out_col`` — argmax label (ties → priority order), 'other'
-    when every score is 0 (see :func:`classify_stages`)."""
-    layers, label = classify_stages(clean_text(F.lower(F.col(text_col))))
-    for layer in layers:
-        df = df.withColumns(layer)
-    return df.withColumn(out_col, label).drop(*[c for lay in layers
-                                                for c in lay])
+    when every score is 0 (see :func:`classify_stages`). ``df`` must not
+    already carry ``out_col`` or a ``_cls_*`` column: an input column
+    would win over the lateral alias of the same name, so such input
+    raises ``ValueError``."""
+    stages, label = classify_stages(clean_text(F.lower(F.col(text_col))))
+    clash = {*stages, out_col.lower()}.intersection(
+        c.lower() for c in df.columns)
+    if clash:
+        raise ValueError(f"classify: input columns {sorted(clash)} collide "
+                         "with its output or temporary columns")
+    return df.select("*", *[v.alias(k) for k, v in stages.items()],
+                     label.alias(out_col)).drop(*stages)
 
 
 def classify_case_sql(text_expr: str) -> str:

@@ -11,15 +11,23 @@ corpus-at-a-time Catalyst plan:
   (/root/reference/src/agents.py:87-88,110-111,165-166,213-214,271-272).
   Rows never fail tasks; they carry their error to the response projection.
 - **schema retrieval** (V5 cascade, /root/reference/src/agents.py:104-156):
-  a literal ``map(doc_type → schema)`` lookup built from :data:`SCHEMA_DIM`,
-  then ``coalesce`` to the constant fallback schema. Strategy provenance
-  kept in ``schema_source``.
+  a literal ``map(doc_type → schema)`` lookup built from :data:`SCHEMA_DIM`;
+  a miss takes the fallback branch (:data:`FALLBACK_SCHEMA` in the
+  oracle). Strategy provenance kept in ``schema_source``.
 - **bounded retry** (D3, MAX_RETRIES=1 /root/reference/src/agents.py:33):
   statically unrolled — pass-2 extraction over *cleaned* text for rows that
   fail validation, then re-validate. Compile-time constant bound ⇒ no
   iterative plan.
 - **persist/respond** (K1–K4): deterministic record ids (md5), storage URLs
   as path expressions, flat response projection.
+
+Shape: two ``select``s over Columns built once per process. The first
+computes every stage as a ``_``-prefixed alias that reads earlier aliases
+of the same list (lateral column aliases; this relies on
+``spark.sql.lateralColumnAlias.enableImplicitResolution``, default true);
+the second renames them to the response columns. Inputs must not carry
+the ``_`` names: an input column wins over a lateral alias of the same
+name, so :func:`run_pipeline` rejects one.
 
 Scale: the pipeline is a pure projection — no join, no shuffle, no job of
 its own until a sink or aggregate asks for one. At 100 TB it is a single
@@ -85,117 +93,121 @@ def _gate(error: Column, value: Column) -> Column:
     return F.when(error.isNull(), value)
 
 
-def _dim_lookup(field: int) -> Column:
+def _dim_lookup(field: int, doc_type: Column) -> Column:
     """``SCHEMA_DIM[doc_type][field]`` as a literal map lookup — NULL for
     a NULL or unregistered doc_type, as a left join on the dim gives."""
     return F.create_map(*[F.lit(v) for row in SCHEMA_DIM
-                          for v in (row[0], row[field])])[F.col("doc_type")]
+                          for v in (row[0], row[field])])[doc_type]
 
 
-def _validation(e: Column) -> dict[str, Column]:
-    """L3 twin over the current extract columns, gated on error."""
-    checks = _checks(F.col("email"), F.col("date_str"), F.col("amount_str"))
-    feedback = F.concat_ws("|", *[F.when(c, F.lit(m)) for c, m in checks])
+def _validation(email: Column, date_str: Column, amount_str: Column
+                ) -> tuple[Column, Column]:
+    """L3 twin over the given extract columns: ``(is_valid, feedback)``."""
+    checks = _checks(email, date_str, amount_str)
     ok = F.lit(True)
     for cond, _ in checks:
         ok = ok & ~F.coalesce(cond, F.lit(False))
-    return {"is_valid": _gate(e, ok), "feedback": _gate(e, feedback)}
+    return ok, F.concat_ws("|", *[F.when(c, F.lit(m)) for c, m in checks])
+
+
+#: The regex extractions, each run over raw text and retried over cleaned.
+_EXTRACTS = (("email", EMAIL_RE), ("date_str", DATE_RE),
+             ("amount_str", AMOUNT_RE))
 
 
 @functools.cache
-def _error(with_parse_error: bool) -> Column:
+def _stages(with_parse_error: bool, with_content_hash: bool
+            ) -> tuple[tuple[Column, ...], tuple[Column, ...],
+                       frozenset[str]]:
+    """The pipeline as ``(lateral, response, names)``: ``lateral`` is one
+    flat tuple of ``_``-prefixed aliased Columns in dependency order, each
+    reading earlier aliases of the list as lateral column aliases
+    (``spark.sql.lateralColumnAlias.enableImplicitResolution``);
+    ``response`` renames them to the public columns; ``names`` is the set
+    of alias names, which :func:`run_pipeline` checks its input against.
+    Pass-1 ``feedback`` and the looked-up ``schema_json`` are not
+    computed: nothing reads them.
+
+    Built once per process and input shape (``parse_error`` and
+    ``content_hash`` present or not): the expressions are
+    session-independent, and rebuilding them cost more driver time than
+    running the pipeline over one document."""
+    t, e, c = F.col("text"), F.col("_error"), F.col("_cleaned")
+    toks = F.split(F.trim(t), r"\s+")
     # NULL text/n_chars must NOT slip through as success: a null too-short
     # comparison is null (no error), so missing payloads are caught first
-    err = (F.when(F.col("text").isNull() | F.col("n_chars").isNull(),
-                  F.lit(EMPTY_ERROR))
+    err = (F.when(t.isNull() | F.col("n_chars").isNull(), F.lit(EMPTY_ERROR))
            .when(F.col("n_chars") < MIN_CHARS, F.lit(PARSE_ERROR)))
-    return F.coalesce(F.col("parse_error"), err) if with_parse_error else err
-
-
-@functools.cache
-def _stages() -> tuple[list[dict[str, Column]], list[Column]]:
-    """The pipeline after the ``error`` column: ``withColumns`` layers in
-    dependency order, then the response columns. Built once per process —
-    the expressions are session-independent, and rebuilding them (dozens
-    of chained ``withColumn`` analyses) cost more planning time than
-    running the pipeline over one document."""
-    e = F.col("error")
-    t, c = F.col("text"), F.col("cleaned")
-    toks = F.split(F.trim(t), r"\s+")
     # reuse the materialized cleaned text: clean_text commutes with lower()
     # (its keep-charclass [\w\s.,\-():] is case-insensitive), so the
     # classifier skips its own full-text regex chain; error-gated NULLs
     # score 'other' and re-gate to NULL below
-    (cls_head, cls_scores), label = classify_stages(F.lower(c))
-    retry = ~F.coalesce(F.col("is_valid"), F.lit(True))
-    schema_json = _dim_lookup(1)
-
-    def retried(name: str, pattern: str) -> Column:
+    cls_cols, label = classify_stages(F.lower(c))
+    p1_valid, _ = _validation(*[F.col(f"_p1_{n}") for n, _ in _EXTRACTS])
+    retry = ~F.coalesce(F.col("_p1_is_valid"), F.lit(True))
+    is_valid, feedback = _validation(*[F.col(f"_{n}") for n, _ in _EXTRACTS])
+    doc_type = F.col("_doc_type")
+    lateral = {
+        "_error": F.coalesce(F.col("parse_error"), err)
+        if with_parse_error else err,
+        "_cleaned": _gate(e, clean_text(t)),
+        # pass-1 extraction over raw text (reference extracts from raw_text)
+        **{f"_p1_{n}": _gate(e, F.regexp_extract(t, pattern, 0))
+           for n, pattern in _EXTRACTS},
+        "_p1_is_valid": _gate(e, p1_valid),
         # bounded retry (unrolled): re-extract from CLEANED text if invalid
-        return F.when(retry, _gate(e, F.regexp_extract(c, pattern, 0))) \
-            .otherwise(F.col(name))
-
-    layers = [
-        {
-            "cleaned": _gate(e, clean_text(t)),
-            # pass-1 extraction over raw text (reference extracts from
-            # raw_text)
-            "email": _gate(e, F.regexp_extract(t, EMAIL_RE, 0)),
-            "date_str": _gate(e, F.regexp_extract(t, DATE_RE, 0)),
-            "amount_str": _gate(e, F.regexp_extract(t, AMOUNT_RE, 0)),
-            "first_token": _gate(e, toks.getItem(0)),
-            "n_tokens": _gate(e, F.size(toks).cast("bigint")),
-            # persistence (K1/K2): deterministic ids + storage URLs
-            "record_id": _gate(e, F.md5(F.concat(F.lit("doc-"),
-                                                 F.col("doc_id")))),
-            "file_url": _gate(e, F.concat(F.lit("s3://documents/"),
-                                          F.col("doc_id"), F.lit(".txt"))),
-        },
-        {**cls_head, **_validation(e)},  # pass-1 validation
-        {
-            **cls_scores,
-            "email": retried("email", EMAIL_RE),
-            "date_str": retried("date_str", DATE_RE),
-            "amount_str": retried("amount_str", AMOUNT_RE),
-            "retry_count": _gate(e, retry.cast("int")),
-        },
-        {
-            "doc_type": _gate(e, label),
-            **_validation(e),  # pass-2 (idempotent when no retry)
-            "amount": F.col("amount_str").try_cast("double"),
-        },
-        {
-            "schema_source": _gate(e, F.when(schema_json.isNotNull(),
-                                             F.lit("doc_type"))
-                                   .otherwise(F.lit("fallback"))),
-            "description": _gate(e, F.coalesce(
-                _dim_lookup(2),
-                F.concat(F.lit("Auto-generated schema for "),
-                         F.col("doc_type")))),
-            "schema_json": _gate(e, F.coalesce(schema_json,
-                                               F.lit(FALLBACK_SCHEMA))),
-        },
-    ]
+        **{f"_{n}": F.when(retry, _gate(e, F.regexp_extract(c, pattern, 0)))
+           .otherwise(F.col(f"_p1_{n}")) for n, pattern in _EXTRACTS},
+        "_retry_count": _gate(e, retry.cast("int")),
+        # pass-2 validation (idempotent when no retry)
+        "_is_valid": _gate(e, is_valid),
+        "_feedback": _gate(e, feedback),
+        "_amount": F.col("_amount_str").try_cast("double"),
+        "_first_token": _gate(e, toks.getItem(0)),
+        "_n_tokens": _gate(e, F.size(toks).cast("bigint")),
+        # persistence (K1/K2): deterministic ids + storage URLs
+        "_record_id": _gate(e, F.md5(F.concat(F.lit("doc-"),
+                                              F.col("doc_id")))),
+        "_file_url": _gate(e, F.concat(F.lit("s3://documents/"),
+                                       F.col("doc_id"), F.lit(".txt"))),
+        **cls_cols,
+        "_doc_type": _gate(e, label),
+        "_schema_source": _gate(e, F.when(_dim_lookup(1, doc_type)
+                                          .isNotNull(), F.lit("doc_type"))
+                                .otherwise(F.lit("fallback"))),
+        "_description": _gate(e, F.coalesce(
+            _dim_lookup(2, doc_type),
+            F.concat(F.lit("Auto-generated schema for "), doc_type))),
+    }
     # response projection (K4, reference src/agents.py:312-321)
-    response = [
+    response = (
         F.col("doc_id"), e.isNull().alias("success"),
-        *[F.col(n) for n in (
+        *[F.col(f"_{n}").alias(n) for n in (
             "error", "doc_type", "schema_source", "description",
             "record_id", "file_url", "is_valid", "feedback", "retry_count",
             "email", "date_str", "amount", "first_token", "n_tokens")],
-    ]
-    return layers, response
+        *([F.col("content_hash")] if with_content_hash else []),
+    )
+    return (tuple(v.alias(k) for k, v in lateral.items()), response,
+            frozenset(lateral))
 
 
 def run_pipeline(spark: SparkSession, documents: DataFrame,
                  observation=None) -> DataFrame:
     """documents(doc_id, text, lang, source, n_chars) → response DataFrame.
 
-    A pure projection of ``documents``: no join, no repartition, no job of
-    its own, so it runs on its input's partitions. A table or parquet
-    input that under-parallelizes is wrapped in ``io.ensure_parallelism``
-    by its caller; a landing-dir scan and one upload are not.
-    ``spark`` is unused and kept for callers.
+    Two projections of ``documents``: ``select("*", *lateral)`` computes
+    every stage as a ``_``-prefixed lateral alias, and a response
+    ``select`` renames them to the public columns (:func:`_stages`). No
+    join, no repartition, no job of its own, so it runs on its input's
+    partitions. A table or parquet input that under-parallelizes is
+    wrapped in ``io.ensure_parallelism`` by its caller; a landing-dir scan
+    and one upload are not. ``spark`` is unused and kept for callers.
+
+    Raises ``ValueError`` when an input column has the name of one of the
+    ``_``-prefixed aliases (``_error``, ``_cls_head``, …): it would win
+    over the alias and silently change the result. Public names such as
+    ``email`` are harmless; the response replaces them.
 
     If the input carries a ``parse_error`` column (the parse stage's per-row
     failure detail, sources/parsers.py), it seeds the pipeline ``error``
@@ -215,13 +227,14 @@ def run_pipeline(spark: SparkSession, documents: DataFrame,
     (/root/reference/src/app.py:84-93) with zero extra scans — the
     monitoring hook a 100 TB run needs.
     """
-    layers, response = _stages()
-    df = documents.withColumn(
-        "error", _error("parse_error" in documents.columns))
-    for layer in layers:
-        df = df.withColumns(layer)
-    out = df.select(*response,
-                    *[c for c in ("content_hash",) if c in documents.columns])
+    cols = documents.columns
+    lateral, response, names = _stages("parse_error" in cols,
+                                       "content_hash" in cols)
+    clash = names.intersection(c.lower() for c in cols)
+    if clash:
+        raise ValueError(f"run_pipeline: input columns {sorted(clash)} "
+                         "collide with the pipeline's lateral aliases")
+    out = documents.select("*", *lateral).select(*response)
     if observation is not None:
         out = observe_health(out, observation)
     return out

@@ -26,7 +26,11 @@ their existing client here unchanged.
 - ``GET /health`` / ``GET /stats``: liveness + static configuration.
 
 Request bodies are capped (``max_body``, default 64 MiB — documents are
-single uploads); oversize requests get 413 without buffering the body.
+single uploads); oversize requests get 413 without buffering the body,
+and a ``Content-Length`` that is not a non-negative decimal integer gets
+400 before any read. Any other failure is a 500 whose ``error`` is
+``"<ExceptionClass>: <first line of its message>"``; the full text goes
+to the log.
 
 Scale posture: this facade is the INTERACTIVE path (one document per
 request, exactly the reference's shape); bulk work belongs to
@@ -40,6 +44,7 @@ from __future__ import annotations
 
 import base64
 import json
+import logging
 import re
 import threading
 import uuid
@@ -47,6 +52,7 @@ from email.parser import BytesParser
 from email.policy import default as _EMAIL_POLICY
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+_LOG = logging.getLogger(__name__)
 _SPARK = None
 _SPARK_LOCK = threading.Lock()
 
@@ -220,7 +226,16 @@ class _Handler(BaseHTTPRequestHandler):
 
     def do_POST(self):  # noqa: N802
         try:
-            length = int(self.headers.get("Content-Length", "0"))
+            raw_length = self.headers.get("Content-Length", "0").strip()
+            if not (raw_length.isascii() and raw_length.isdigit()):
+                # a negative length would make rfile.read block until the
+                # client hangs up; the body's end is unknown, so close
+                self.close_connection = True
+                self._send(400, {"success": False,
+                                 "error": "bad request: invalid "
+                                          "Content-Length"})
+                return
+            length = int(raw_length)
             if length > self.max_body:
                 self._send(413, {"success": False,
                                  "error": f"request body exceeds "
@@ -284,7 +299,12 @@ class _Handler(BaseHTTPRequestHandler):
             else:
                 self._send(404, {"error": f"unknown path {self.path}"})
         except Exception as exc:  # noqa: BLE001 — request-level fidelity
-            self._send(500, {"success": False, "error": str(exc)})
+            # the full text (for a Py4J error, the whole JVM stack) goes to
+            # the log; the client gets the class and the first line
+            _LOG.exception("POST %s failed", self.path)
+            first = next(iter(str(exc).splitlines()), "")
+            self._send(500, {"success": False,
+                             "error": f"{type(exc).__name__}: {first}"})
 
 
 def make_server(port: int = 0,

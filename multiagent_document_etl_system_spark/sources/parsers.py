@@ -28,6 +28,8 @@ singleton), the standard pattern for heavyweight per-partition init.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1954,20 +1956,27 @@ def parse_documents(binary_df: DataFrame) -> DataFrame:
     )
 
 
-def shape_documents(parsed: DataFrame) -> DataFrame:
-    """A :func:`parse_documents` result → the pipeline's document contract
-    (doc_id, text, lang, source, n_chars, parse_error). ``doc_id`` is
-    ``xxhash64(path)``, ``source`` the file name. ``parse_error`` rides
-    along so the response carries the real failure detail (e.g. 'pdf
-    library unavailable'), not just the too-short check; a
-    ``content_hash`` column, when present, rides along too."""
-    return parsed.select(
+@functools.cache
+def _shape_columns(with_content_hash: bool) -> tuple[Column, ...]:
+    return (
         F.xxhash64("path").alias("doc_id"),
         F.coalesce("raw_text", F.lit("")).alias("text"),
         F.lit("und").alias("lang"),
         F.element_at(F.split("path", "/"), -1).alias("source"),
         F.coalesce(F.length("raw_text"), F.lit(0)).cast("bigint")
         .alias("n_chars"),
-        "parse_error",
-        *[c for c in ("content_hash",) if c in parsed.columns],
+        F.col("parse_error"),
+        *([F.col("content_hash")] if with_content_hash else []),
     )
+
+
+def shape_documents(parsed: DataFrame) -> DataFrame:
+    """A :func:`parse_documents` result → the pipeline's document contract
+    (doc_id, text, lang, source, n_chars, parse_error), as one ``select``.
+    ``doc_id`` is ``xxhash64(path)``, ``source`` the file name.
+    ``parse_error`` rides along so the response carries the real failure
+    detail (e.g. 'pdf library unavailable'), not just the too-short check;
+    a ``content_hash`` column, when present, rides along too. The Columns
+    are built once per process (two lists, with and without
+    ``content_hash``), so a one-document request does not rebuild them."""
+    return parsed.select(*_shape_columns("content_hash" in parsed.columns))

@@ -189,3 +189,17 @@ def test_null_text_rows_error_not_success(spark):
     assert rows[1]["error"] == EMPTY_ERROR
     assert rows[1]["doc_type"] is None
     assert rows[2]["success"] is True
+
+
+def test_lateral_alias_collision_raises(spark):
+    """An input column named like one of the pipeline's ``_`` lateral
+    aliases would win over the alias, so it is rejected; a public name
+    such as ``email`` is replaced by the pipeline's own column."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
+    for name in ("_error", "_CLS_HEAD"):
+        with pytest.raises(ValueError, match=name.lower()):
+            run_pipeline(spark, docs.withColumn(name, F.lit("x")))
+    want = sorted(run_pipeline(spark, docs).collect())
+    got = run_pipeline(spark, docs.withColumn("email", F.lit("x@y.z")))
+    assert got.columns == run_pipeline(spark, docs).columns
+    assert sorted(got.collect()) == want

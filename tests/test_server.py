@@ -267,14 +267,11 @@ def _oracle_response(doc_id: int, text: str, parse_error: str | None):
         "feedback": r["feedback"], "retry_count": r["retry_count"]}}
 
 
-def test_process_runs_no_spark_job_and_matches_oracle(spark):
-    """One upload per format — text, PDF, DOCX, PNG and an undecodable
-    text file — is answered without a single Spark job, and each body
-    equals the DuckDB pipeline oracle over the document's text."""
-    from multiagent_document_etl_system_spark import server as srv
+def _uploads():
+    """(name, payload, text, parse_error) per format: text, PDF, DOCX,
+    PNG and an undecodable text file."""
     from multiagent_document_etl_system_spark.sources import parsers
 
-    srv._SPARK = spark
     body = ("Purchase order of total value due. Billed to "
             "client@example.com on 2024-03-15 for $1,250.00 in full.")
     ocr = "INVOICE 42 ORDER VALUE DUE 15 MARCH 2024 TOTAL 1337 PAID IN FULL"
@@ -283,7 +280,7 @@ def test_process_runs_no_spark_job_and_matches_oracle(spark):
         bad.decode("utf-8")
     except UnicodeDecodeError as exc:
         bad_error = f"text parse failed: {exc}"
-    uploads = [
+    return [
         ("memo.txt", body.encode(), body, None),
         ("inv.pdf", parsers.make_demo_pdf_bytes([body[:40], body[40:]]),
          body[:40] + "\n" + body[40:], None),
@@ -291,6 +288,16 @@ def test_process_runs_no_spark_job_and_matches_oracle(spark):
         ("scan.png", parsers.render_text_png(ocr), ocr, None),
         ("bad.txt", bad, "", bad_error),
     ]
+
+
+def test_process_runs_no_spark_job_and_matches_oracle(spark):
+    """One upload per format is answered without a single Spark job, and
+    each body equals the DuckDB pipeline oracle over the document's
+    text."""
+    from multiagent_document_etl_system_spark import server as srv
+
+    srv._SPARK = spark
+    uploads = _uploads()
     sc = spark.sparkContext
     group = "process-no-jobs"
     sc.setJobGroup(group, "process_document_bytes must run no job")
@@ -306,3 +313,82 @@ def test_process_runs_no_spark_job_and_matches_oracle(spark):
         want = _oracle_response(doc_id, text, err)
         assert {k: out[k] for k in want} == want, name
     assert [b["success"] for b in bodies] == [True] * 4 + [False]
+
+
+def test_process_issues_few_py4j_commands(spark):
+    """A warm ``process_document_bytes`` sends at most 100 Py4J commands
+    from the calling thread for every upload format: the pipeline's
+    Columns are built once and applied in two ``select``s."""
+    from py4j.clientserver import ClientServerConnection
+
+    from multiagent_document_etl_system_spark import server as srv
+
+    srv._SPARK = spark
+    uploads = _uploads()
+    for name, payload, _, _ in uploads:  # build the per-process Columns
+        srv.process_document_bytes(name, payload)
+    me, counts = threading.get_ident(), {}
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            counts[current] = counts.get(current, 0) + 1
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        for current, payload, _, _ in uploads:
+            srv.process_document_bytes(current, payload)
+    finally:
+        ClientServerConnection.send_command = send
+    assert set(counts) == {u[0] for u in uploads}
+    assert max(counts.values()) <= 100, counts
+
+
+def _raw_post(server: str, headers: str) -> bytes:
+    """Send a POST head over a raw socket, keep the sending side open and
+    return what the server answers before it closes (20 s per read)."""
+    import socket
+
+    host, port = server.removeprefix("http://").split(":")
+    with socket.create_connection((host, int(port)), timeout=20) as s:
+        s.sendall(f"POST /process HTTP/1.1\r\nHost: {host}\r\n"
+                  f"Content-Type: application/json\r\n{headers}\r\n"
+                  .encode())
+        reply = b""
+        while chunk := s.recv(65536):
+            reply += chunk
+        return reply
+
+
+def test_bad_content_length_is_400(server):
+    """A negative or non-numeric Content-Length is refused before any
+    read; a negative one must not leave the handler waiting for the
+    client to hang up."""
+    for value in ("-1", "abc"):
+        reply = _raw_post(server, f"Content-Length: {value}\r\n")
+        assert reply.split(b"\r\n", 1)[0].split()[1] == b"400", reply
+        body = json.loads(reply.split(b"\r\n\r\n", 1)[1])
+        assert body["success"] is False
+        assert "Content-Length" in body["error"]
+
+
+def test_unexpected_error_is_typed_one_line_500(server, monkeypatch):
+    """The 500 body names the exception class and the first line of its
+    message, never a multi-line JVM stack."""
+    from multiagent_document_etl_system_spark import server as srv
+
+    def boom(filename, payload):
+        raise RuntimeError("An error occurred while calling o42.select.\n"
+                           "\tat org.apache.spark.Foo(Foo.scala:1)\n"
+                           "\tat org.apache.spark.Bar(Bar.scala:2)")
+
+    monkeypatch.setattr(srv, "process_document_bytes", boom)
+    code, out = _post(
+        f"{server}/process",
+        json.dumps({"filename": "a.txt",
+                    "content_b64": base64.b64encode(b"x").decode()}).encode(),
+        "application/json")
+    assert code == 500 and out["success"] is False
+    assert out["error"] == ("RuntimeError: An error occurred while calling "
+                            "o42.select.")
