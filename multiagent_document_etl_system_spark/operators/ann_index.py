@@ -14,27 +14,54 @@ Why this matters at 100 TB: the in-memory rungs (similarity.ann_lsh_topk &
 friends) re-hash the whole corpus per query batch — right for one-shot
 joins, wasteful for a serving/repeated-audit pattern. Persisting the
 signature as the PHYSICAL layout amortizes the corpus scan: a query batch
-with S distinct probe signatures scans S/2^n_planes of the data, and the
-result is bit-identical to the in-memory rung (same planes, same rounding,
-same tie-break — asserted by test).
+with S distinct probe signatures scans S/2^n_planes of the data.
 
 Determinism contract: planes derive from (seed, n_planes, dim) via
 similarity.hyperplanes — a rebuilt index over the same vectors is
-byte-stable, and queries against it reproduce similarity.ann_lsh_topk /
-ann_lsh_topk_multiprobe exactly.
+byte-stable, and queries against it reproduce similarity.ann_lsh_topk
+bit-for-bit in either probe mode (same planes, probes, rounding and
+tie-break — asserted by test).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multiagent_document_etl_system_spark.operators.similarity import (
-    dot,
+    cosine_from_norms,
     hyperplanes,
+    lsh_probes,
     lsh_signature,
     norm,
+    rank_topk,
 )
+
+
+def _write_index(vectors: DataFrame, index_dir: str, meta: dict,
+                 mode: str, id_col: str, vec_col: str) -> dict:
+    """Write ``vectors`` as (c_id, c_vec, c_norm) rows partitioned by sig
+    under ``meta``'s planes, then the meta row with the stored count."""
+    planes = hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
+    (
+        vectors.select(
+            F.col(id_col).alias("c_id"),
+            F.col(vec_col).alias("c_vec"),
+            norm(F.col(vec_col)).alias("c_norm"),
+            lsh_signature(F.col(vec_col), planes).alias("sig"),
+        )
+        .repartition("sig")
+        .write.mode(mode).partitionBy("sig")
+        .parquet(f"{index_dir}/vectors")
+    )
+    spark = vectors.sparkSession
+    n = spark.read.parquet(f"{index_dir}/vectors").count()
+    meta = dict(meta, n_vectors=n)
+    spark.createDataFrame(
+        [tuple(meta.values())],
+        "dim int, n_planes int, seed int, n_vectors long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/meta")
+    return meta
 
 
 def build_ann_index(vectors: DataFrame, index_dir: str,
@@ -51,27 +78,9 @@ def build_ann_index(vectors: DataFrame, index_dir: str,
     first = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
     if first is None:
         raise ValueError("cannot index an empty vector set")
-    dim = int(first["d"])
-    planes = hyperplanes(dim, n_planes, seed)
-    (
-        vectors.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(F.col(vec_col)).alias("c_norm"),
-            lsh_signature(F.col(vec_col), planes).alias("sig"),
-        )
-        .repartition("sig")
-        .write.mode("overwrite").partitionBy("sig")
-        .parquet(f"{index_dir}/vectors")
-    )
-    spark = vectors.sparkSession
-    n = spark.read.parquet(f"{index_dir}/vectors").count()
-    meta = spark.createDataFrame(
-        [(dim, n_planes, seed, n)],
-        "dim int, n_planes int, seed int, n_vectors long",
-    )
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/meta")
-    return {"dim": dim, "n_planes": n_planes, "seed": seed, "n_vectors": n}
+    meta = {"dim": int(first["d"]), "n_planes": n_planes, "seed": seed}
+    return _write_index(vectors, index_dir, meta, "overwrite",
+                        id_col, vec_col)
 
 
 def append_ann_index(vectors: DataFrame, index_dir: str,
@@ -89,7 +98,6 @@ def append_ann_index(vectors: DataFrame, index_dir: str,
     """
     spark = vectors.sparkSession
     meta = load_ann_meta(spark, index_dir)
-    planes = hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
     existing_ids = spark.read.parquet(f"{index_dir}/vectors").select("c_id")
     n_dup = (vectors.select(F.col(id_col).alias("c_id"))
              .join(existing_ids, "c_id", "left_semi").count())
@@ -98,29 +106,25 @@ def append_ann_index(vectors: DataFrame, index_dir: str,
             f"{n_dup} incoming id(s) already exist in the index; "
             "append is new-ids-only (rebuild, or MERGE on a "
             "transactional format, to re-embed)")
-    (
-        vectors.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(F.col(vec_col)).alias("c_norm"),
-            lsh_signature(F.col(vec_col), planes).alias("sig"),
-        )
-        .repartition("sig")
-        .write.mode("append").partitionBy("sig")
-        .parquet(f"{index_dir}/vectors")
-    )
-    n = spark.read.parquet(f"{index_dir}/vectors").count()
-    new_meta = dict(meta, n_vectors=n)
-    spark.createDataFrame(
-        [(new_meta["dim"], new_meta["n_planes"], new_meta["seed"], n)],
-        "dim int, n_planes int, seed int, n_vectors long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/meta")
-    return new_meta
+    return _write_index(vectors, index_dir, meta, "append", id_col, vec_col)
 
 
 def load_ann_meta(spark: SparkSession, index_dir: str) -> dict:
     row = spark.read.parquet(f"{index_dir}/meta").first()
     return {k: int(row[k]) for k in ("dim", "n_planes", "seed", "n_vectors")}
+
+
+def hash_queries(queries: DataFrame, planes: list[list[float]],
+                 q_id: str = "q_id", q_vec: str = "q_vec") -> DataFrame:
+    """(q_id, q_vec, _qn, sig): queries with their norm and signature under
+    the index's ``planes`` — the one projection of the batch and the
+    streaming (registry ``st_ann_stream``) index queries."""
+    return queries.select(
+        F.col(q_id).alias("q_id"),
+        F.col(q_vec).alias("q_vec"),
+        norm(F.col(q_vec)).alias("_qn"),
+        lsh_signature(F.col(q_vec), planes).alias("sig"),
+    )
 
 
 def ann_index_topk(spark: SparkSession, index_dir: str, queries: DataFrame,
@@ -135,27 +139,16 @@ def ann_index_topk(spark: SparkSession, index_dir: str, queries: DataFrame,
     planes), regardless of corpus or query-batch size, and the pruned
     scan + signature equi-join do the real work on the cluster.
     ``multiprobe`` adds every Hamming-1 neighbor bucket (the recall lever,
-    same semantics as similarity.ann_lsh_topk_multiprobe).
+    same semantics as ``similarity.ann_lsh_topk(multiprobe=True)``).
     """
     meta = load_ann_meta(spark, index_dir)
     planes = hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
-    qs = (
-        queries.select(
-            F.col(q_id).alias("q_id"),
-            F.col(q_vec).alias("q_vec"),
-            norm(F.col(q_vec)).alias("_qn"),
-            lsh_signature(F.col(q_vec), planes).alias("_sig0"),
-        )
-    )
+    qs = hash_queries(queries, planes, q_id, q_vec)
     if multiprobe:
-        probes = F.array(
-            F.col("_sig0"),
-            *[F.col("_sig0").bitwiseXOR(F.lit(2 ** i))
-              for i in range(meta["n_planes"])],
-        )
-        qs = qs.withColumn("sig", F.explode(probes)).drop("_sig0")
-    else:
-        qs = qs.withColumnRenamed("_sig0", "sig")
+        qs = (qs.withColumnRenamed("sig", "_sig0")
+              .withColumn("sig", F.explode(lsh_probes(F.col("_sig0"),
+                                                      meta["n_planes"])))
+              .drop("_sig0"))
     # bounded: ≤ min(|queries|·(n_planes+1), 2^n_planes) distinct values
     probe_sigs = [r["sig"] for r in qs.select("sig").distinct().collect()]
     cand = (
@@ -165,12 +158,7 @@ def ann_index_topk(spark: SparkSession, index_dir: str, queries: DataFrame,
     j = cand.join(qs, "sig")
     if exclude_self:
         j = j.filter(F.col("q_id") != F.col("c_id"))
-    denom = F.col("_qn") * F.col("c_norm")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col("q_vec"), F.col("c_vec")) / denom)
+    score = cosine_from_norms(F.col("q_vec"), F.col("c_vec"),
+                              F.col("_qn"), F.col("c_norm"))
     scored = j.select("q_id", "c_id", F.round(score, 4).alias("score"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_topk(scored, k)

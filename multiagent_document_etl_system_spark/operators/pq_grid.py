@@ -46,6 +46,8 @@ raw float32 vectors
 from __future__ import annotations
 
 import math
+from functools import reduce
+from operator import add
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
@@ -79,10 +81,8 @@ def grid_vec(vec_col: str, grid: int = GRID) -> Column:
     The norm is bound via ``aggregate``'s *finish* lambda so the
     squared-sum fold runs ONCE per row: referencing ``norm(v)`` inside
     the per-element transform would re-evaluate the O(dim) fold for
-    every element — O(dim²) per row, measured 24× slower at 200k×64
-    (r12 optimization round). ``sqrt`` of the bound sum is the only
-    per-element extra, and the IEEE op sequence (x / sqrt(s) * grid
-    + 0.5, floor) is unchanged, so outputs are bit-identical."""
+    every element — O(dim²) per row, measured 24× slower at 200k×64.
+    The IEEE op sequence is x / sqrt(s) * grid + 0.5, then floor."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     return F.aggregate(
         v, F.lit(0.0),
@@ -94,6 +94,12 @@ def grid_vec(vec_col: str, grid: int = GRID) -> Column:
             v, lambda x: F.floor(x / F.sqrt(s) * grid + 0.5))))
 
 
+def _sq_dist(u: Column, v: Column) -> Column:
+    """Σ (uᵢ − vᵢ)² of two integer grid vectors as an exact BIGINT fold."""
+    return F.aggregate(F.zip_with(u, v, lambda a, b: (a - b) * (a - b)),
+                       F.lit(0).cast("bigint"), lambda acc, x: acc + x)
+
+
 def _best_struct(xq_col, book: list[list[int]], s: int, width: int):
     """(distance, code) argmin struct for subspace ``s`` — array_min over
     (BIGINT distance, code index) structs = the (d ASC, c ASC) tie-break
@@ -102,12 +108,8 @@ def _best_struct(xq_col, book: list[list[int]], s: int, width: int):
     sub = F.slice(xq_col, s * width + 1, width)
     return F.array_min(F.transform(
         book_lit,
-        lambda ctr, j: F.struct(
-            F.aggregate(F.zip_with(sub, ctr, lambda a, b: (a - b) * (a - b)),
-                        F.lit(0).cast("bigint"),
-                        lambda acc, x: acc + x).alias("d"),
-            j.alias("c"),
-        ),
+        lambda ctr, j: F.struct(_sq_dist(sub, ctr).alias("d"),
+                                j.alias("c")),
     ))
 
 
@@ -121,14 +123,10 @@ def pq_grid_fit(df: DataFrame, dim: int, n_subspaces: int = 4,
     take them as literals.
 
     ONE bounded collect site: the fit sample itself — ≤ ``cap`` rows of
-    ``dim`` BIGINTs (4096×64 ≈ 2 MB here; the same rows the previous
-    implementation held in executor cache). The anchored init and the
-    ``n_iters`` Lloyd steps then run on the DRIVER in exact int64 NumPy
-    (r12 optimization round): the old shape paid one Spark job per Lloyd
-    step (persist + anchor collect + n_iters staged aggregates ≈ 5 job
-    round-trips per fit) to aggregate a ≤4096-row sample — pure
-    job-scheduling overhead at any scale, since the sample is
-    cap-bounded by construction. Every arithmetic step is unchanged:
+    ``dim`` BIGINTs (4096×64 ≈ 2 MB here). The anchored init and the
+    ``n_iters`` Lloyd steps then run on the DRIVER in exact int64 NumPy —
+    one Spark job per fit, since the sample is cap-bounded by
+    construction. Every arithmetic step is exact:
     integer squared distances (|values| ≤ 2·grid ⇒ d ≤ 4·grid²·width
     < 2^63, exact), argmin with the (d, c) tie-break (np.argmin returns
     the FIRST minimum = smallest c), and the centroid update
@@ -144,8 +142,10 @@ def pq_grid_fit(df: DataFrame, dim: int, n_subspaces: int = 4,
     """
     import numpy as np
 
+    if dim % n_subspaces:
+        raise ValueError(f"pq_grid_fit: dim {dim} does not split evenly "
+                         f"into {n_subspaces} subspaces")
     width = dim // n_subspaces
-    assert width * n_subspaces == dim, "dim must split evenly"
     cap = ivf_fit_cap(n_codes)
     xq = (F.transform(F.col(vec_col), lambda x: x.cast("bigint"))
           if pre_gridded else grid_vec(vec_col, grid))
@@ -155,12 +155,9 @@ def pq_grid_fit(df: DataFrame, dim: int, n_subspaces: int = 4,
     rows.sort(key=lambda r: r["_id"])
     if not rows:
         raise ValueError("pq_grid_fit: empty candidate set")
-    # Loud refusal on degenerate sample rows (ADVICE r12): a null vector
-    # (grid_vec of NULL) or a ragged dim would otherwise surface as an
-    # opaque NumPy TypeError/ValueError at np.array time. Refusing (not
-    # silently filtering) keeps the anchored init's (s*n_codes+c) %
-    # n_samp indexing — and therefore the fit — a pure function of the
-    # stated sample.
+    # refuse (not filter) NULL or ragged sample rows: NumPy would fail
+    # opaquely, and filtering would make the anchored init's
+    # (s*n_codes+c) % n_samp indexing depend on more than the sample
     bad = [r["_id"] for r in rows
            if r["_xq"] is None or len(r["_xq"]) != dim]
     if bad:
@@ -221,20 +218,47 @@ def pq_grid_codes(df: DataFrame, dim: int,
     width = dim // n_subspaces
     xq = (F.transform(F.col(vec_col), lambda x: x.cast("bigint"))
           if pre_gridded else grid_vec(vec_col, grid))
-    base = df.select(F.col(id_col), xq.alias("_xq"))
-    staged = base.select(
+    staged = df.select(F.col(id_col), xq.alias("_xq")).select(
         id_col,
         *[_best_struct(F.col("_xq"), book, s, width).alias(f"_best{s}")
           for s, book in enumerate(codebooks)])
-    err = None
-    for s in range(n_subspaces):
-        d = F.col(f"_best{s}").getField("d")
-        err = d if err is None else err + d
+    err = reduce(add, [F.col(f"_best{s}").getField("d")
+                       for s in range(n_subspaces)])
     return staged.select(
         id_col,
         F.array(*[F.col(f"_best{s}").getField("c").cast("int")
                   for s in range(n_subspaces)]).alias("codes"),
         err.cast("bigint").alias("err_sq_grid"))
+
+
+def _adc_tables(xq: str, books: list[list[list[int]]], width: int) -> Column:
+    """The query side of ADC: per subspace, the INTEGER squared distance
+    from the query's subvector of ``xq`` to every code centroid."""
+    tables = []
+    for s, book in enumerate(books):
+        sub = F.slice(xq, s * width + 1, width)
+        tables.append(F.transform(lit_int_matrix(book),
+                                  lambda ctr: _sq_dist(sub, ctr)))
+    return F.array(*tables)
+
+
+def _adc_rerank(pairs: DataFrame, queries: DataFrame,
+                candidates: DataFrame, n_subspaces: int, k: int,
+                k_adc: int, q_id: str, c_id: str, q_vec: str,
+                c_vec: str) -> DataFrame:
+    """The tail of every PQ rung: over ``pairs`` of candidate ``codes`` and
+    query ``_dt`` tables, the ``k_adc`` nearest by exact BIGINT ADC
+    distance ((adc_d, c_id) tie-break) exact-rerank to the top ``k``."""
+    pairs = pairs.filter(F.col(q_id) != F.col(c_id))
+    dist = reduce(add, [F.element_at(F.element_at("_dt", s + 1),
+                                     F.col("codes")[s] + 1)
+                        for s in range(n_subspaces)])
+    pre = pairs.select(q_id, c_id, dist.cast("bigint").alias("adc_d"))
+    w = Window.partitionBy(q_id).orderBy(F.asc("adc_d"), F.asc(c_id))
+    pre = pre.withColumn("rank", F.row_number().over(w)) \
+        .filter(F.col("rank") <= k_adc).select(q_id, c_id)
+    return exact_rerank(pre, queries, candidates, k=k, q_id=q_id,
+                        c_id=c_id, q_vec=q_vec, c_vec=c_vec)
 
 
 def pq_grid_adc_rerank_topk(queries: DataFrame, candidates: DataFrame,
@@ -257,32 +281,12 @@ def pq_grid_adc_rerank_topk(queries: DataFrame, candidates: DataFrame,
     codes = pq_grid_codes(candidates, dim, books, id_col=c_id,
                           vec_col=c_vec, grid=grid).select(c_id, "codes")
 
-    width = dim // n_subspaces
     q_n = queries.select(F.col(q_id), grid_vec(q_vec, grid).alias("_xq"))
-    tables = []
-    for s, book in enumerate(books):
-        book_lit = lit_int_matrix(book)
-        sub = F.slice("_xq", s * width + 1, width)
-        tables.append(F.transform(
-            book_lit,
-            lambda ctr: F.aggregate(
-                F.zip_with(sub, ctr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"), lambda acc, x: acc + x)))
-    qdt = q_n.select(q_id, F.array(*tables).alias("_dt"))
-
-    pairs = codes.crossJoin(F.broadcast(qdt)) \
-        .filter(F.col(q_id) != F.col(c_id))
-    dist = None
-    for s in range(n_subspaces):
-        term = F.element_at(F.element_at("_dt", s + 1),
-                            F.col("codes")[s] + 1)
-        dist = term if dist is None else dist + term
-    pre = pairs.select(q_id, c_id, dist.cast("bigint").alias("adc_d"))
-    w = Window.partitionBy(q_id).orderBy(F.asc("adc_d"), F.asc(c_id))
-    pre = pre.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k_adc).select(q_id, c_id)
-    return exact_rerank(pre, queries, candidates, k=k, q_id=q_id,
-                        c_id=c_id, q_vec=q_vec, c_vec=c_vec)
+    qdt = q_n.select(q_id, _adc_tables("_xq", books, dim // n_subspaces)
+                     .alias("_dt"))
+    return _adc_rerank(codes.crossJoin(F.broadcast(qdt)), queries,
+                       candidates, n_subspaces, k, k_adc,
+                       q_id, c_id, q_vec, c_vec)
 
 
 # ------------------------------------------------------------ SQL twins
@@ -448,24 +452,35 @@ SELECT q_id, c_id, score, rank FROM pq_picks
 
 # ----------------------------------------------------- grid IVF / IVF-PQ
 
-def _probe_cells(q_gv: DataFrame, coarse_book: list[list[int]],
-                 n_probe: int, q_id: str) -> DataFrame:
-    """Each query's ``n_probe`` nearest coarse centroids by exact BIGINT
-    grid distance with the (d, cell) tie-break — array_sort over
-    (distance, cell) structs = the SQL twin's
-    ``row_number() OVER (ORDER BY d ASC, c ASC) <= n_probe``. Input must
-    carry ``_xq`` (gridded vector); output keeps it plus ``_cell``."""
+def _probe_cells(queries: DataFrame, coarse_book: list[list[int]],
+                 n_probe: int, q_id: str, q_vec: str,
+                 grid: int) -> DataFrame:
+    """(q_id, _xq, _cell): each query's gridded vector and its ``n_probe``
+    nearest coarse centroids by exact BIGINT grid distance with the
+    (d, cell) tie-break — array_sort over (distance, cell) structs = the
+    SQL twin's ``row_number() OVER (ORDER BY d ASC, c ASC) <= n_probe``."""
     book_lit = lit_int_matrix(coarse_book)
     dists = F.transform(book_lit, lambda ctr, i: F.struct(
-        F.aggregate(F.zip_with(F.col("_xq"), ctr,
-                               lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x).alias("d"),
-        i.alias("cell")))
+        _sq_dist(F.col("_xq"), ctr).alias("d"), i.alias("cell")))
+    q_gv = queries.select(F.col(q_id), grid_vec(q_vec, grid).alias("_xq"))
     return q_gv.select(
         F.col(q_id), F.col("_xq"),
         F.explode(F.transform(F.slice(F.array_sort(dists), 1, n_probe),
                               lambda st: st["cell"])).alias("_cell"))
+
+
+def _coarse_cells(candidates: DataFrame, dim: int, n_cells: int,
+                  n_iters: int, grid: int, c_id: str,
+                  c_vec: str) -> tuple[list[list[int]], DataFrame]:
+    """The IVF rungs' coarse quantizer — :func:`pq_grid_fit` with one
+    full-width subspace — as (centroids, (c_id, _cell) per candidate)."""
+    coarse = pq_grid_fit(candidates, dim, n_subspaces=1, n_codes=n_cells,
+                         n_iters=n_iters, id_col=c_id, vec_col=c_vec,
+                         grid=grid)
+    cells = pq_grid_codes(candidates, dim, coarse, id_col=c_id,
+                          vec_col=c_vec, grid=grid) \
+        .select(c_id, F.col("codes")[0].alias("_cell"))
+    return coarse[0], cells
 
 
 def ivf_grid_topk(queries: DataFrame, candidates: DataFrame, dim: int,
@@ -487,14 +502,9 @@ def ivf_grid_topk(queries: DataFrame, candidates: DataFrame, dim: int,
     v6 LSH precedent. Scale shape: bounded fit sample, one narrow
     assignment map, the probe list broadcast into the cell equi-join;
     only Q·n_probe/n_cells of the corpus is scored."""
-    coarse = pq_grid_fit(candidates, dim, n_subspaces=1, n_codes=n_cells,
-                         n_iters=n_iters, id_col=c_id, vec_col=c_vec,
-                         grid=grid)
-    cells = pq_grid_codes(candidates, dim, coarse, id_col=c_id,
-                          vec_col=c_vec, grid=grid) \
-        .select(c_id, F.col("codes")[0].alias("_cell"))
-    q_gv = queries.select(F.col(q_id), grid_vec(q_vec, grid).alias("_xq"))
-    probed = _probe_cells(q_gv, coarse[0], n_probe, q_id) \
+    centroids, cells = _coarse_cells(candidates, dim, n_cells, n_iters,
+                                     grid, c_id, c_vec)
+    probed = _probe_cells(queries, centroids, n_probe, q_id, q_vec, grid) \
         .select(q_id, "_cell")
     pre = cells.join(F.broadcast(probed), "_cell") \
         .filter(F.col(q_id) != F.col(c_id)).select(q_id, c_id)
@@ -520,12 +530,8 @@ def ivfpq_grid_topk(queries: DataFrame, candidates: DataFrame, dim: int,
     absorbs on the isotropic fixture; on clustered data it recalls more
     (tests/test_pq_grid.py asserts the direction). Deterministic
     end-to-end ⇒ full hash oracle (:func:`ivfpq_grid_topk_sql`)."""
-    coarse = pq_grid_fit(candidates, dim, n_subspaces=1, n_codes=n_cells,
-                         n_iters=n_iters, id_col=c_id, vec_col=c_vec,
-                         grid=grid)
-    cells = pq_grid_codes(candidates, dim, coarse, id_col=c_id,
-                          vec_col=c_vec, grid=grid) \
-        .select(c_id, F.col("codes")[0].alias("_cell"))
+    centroids, cells = _coarse_cells(candidates, dim, n_cells, n_iters,
+                                     grid, c_id, c_vec)
     books = pq_grid_fit(candidates, dim, n_subspaces=n_subspaces,
                         n_codes=n_codes, n_iters=n_iters, id_col=c_id,
                         vec_col=c_vec, grid=grid)
@@ -533,34 +539,13 @@ def ivfpq_grid_topk(queries: DataFrame, candidates: DataFrame, dim: int,
                          vec_col=c_vec, grid=grid) \
         .select(c_id, "codes").join(cells, c_id)
 
-    width = dim // n_subspaces
-    q_gv = queries.select(F.col(q_id), grid_vec(q_vec, grid).alias("_xq"))
-    tables = []
-    for book in books:
-        book_lit = lit_int_matrix(book)
-        s = len(tables)
-        sub = F.slice("_xq", s * width + 1, width)
-        tables.append(F.transform(
-            book_lit,
-            lambda ctr: F.aggregate(
-                F.zip_with(sub, ctr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"), lambda acc, x: acc + x)))
-    probes = _probe_cells(q_gv, coarse[0], n_probe, q_id) \
-        .select(q_id, "_cell", F.array(*tables).alias("_dt"))
-
-    pairs = cand.join(F.broadcast(probes), "_cell") \
-        .filter(F.col(q_id) != F.col(c_id))
-    dist = None
-    for s in range(n_subspaces):
-        term = F.element_at(F.element_at("_dt", s + 1),
-                            F.col("codes")[s] + 1)
-        dist = term if dist is None else dist + term
-    pre = pairs.select(q_id, c_id, dist.cast("bigint").alias("adc_d"))
-    w = Window.partitionBy(q_id).orderBy(F.asc("adc_d"), F.asc(c_id))
-    pre = pre.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k_adc).select(q_id, c_id)
-    return exact_rerank(pre, queries, candidates, k=k, q_id=q_id,
-                        c_id=c_id, q_vec=q_vec, c_vec=c_vec)
+    probes = _probe_cells(queries, centroids, n_probe, q_id, q_vec,
+                          grid).select(
+        q_id, "_cell",
+        _adc_tables("_xq", books, dim // n_subspaces).alias("_dt"))
+    return _adc_rerank(cand.join(F.broadcast(probes), "_cell"), queries,
+                       candidates, n_subspaces, k, k_adc,
+                       q_id, c_id, q_vec, c_vec)
 
 
 def ivfpq_grid_residual_topk(queries: DataFrame, candidates: DataFrame,
@@ -586,26 +571,25 @@ def ivfpq_grid_residual_topk(queries: DataFrame, candidates: DataFrame,
     instead of one); the table count is still query-side-bounded, never
     corpus-scale. Candidate codes join on the cell AND score against
     the matching (query, cell) table."""
-    coarse = pq_grid_fit(candidates, dim, n_subspaces=1, n_codes=n_cells,
-                         n_iters=n_iters, id_col=c_id, vec_col=c_vec,
-                         grid=grid)
-    centers_lit = lit_int_matrix(coarse[0])
+    centroids, cells = _coarse_cells(candidates, dim, n_cells, n_iters,
+                                     grid, c_id, c_vec)
+    centers_lit = lit_int_matrix(centroids)
+
+    def residuals(gv: DataFrame, id_col: str) -> DataFrame:
+        # LINEAGE CUT (SCALE.md): _rv embeds the 1k-literal centroid
+        # array + the coarse argmin tree, and the PQ fit/codes (corpus
+        # side) and the 64 distance tables (query side) reference it many
+        # times; Catalyst INLINES each reference, so without this narrow
+        # (id, cell, residual) materialization analysis/codegen hangs.
+        return gv.select(
+            id_col, "_cell",
+            F.zip_with("_xq", F.element_at(centers_lit, F.col("_cell") + 1),
+                       lambda a, b: a - b).alias("_rv"),
+        ).localCheckpoint(eager=True)
+
     c_gv = candidates.select(F.col(c_id),
                              grid_vec(c_vec, grid).alias("_xq"))
-    cells = pq_grid_codes(candidates, dim, coarse, id_col=c_id,
-                          vec_col=c_vec, grid=grid) \
-        .select(c_id, F.col("codes")[0].alias("_cell"))
-    resid = (c_gv.join(cells, c_id).select(
-        c_id, "_cell",
-        F.zip_with("_xq", F.element_at(centers_lit, F.col("_cell") + 1),
-                   lambda a, b: a - b).alias("_rv")))
-    # LINEAGE CUT (the pipeline-staging lesson, SCALE.md): _rv embeds
-    # the 1k-literal centroid array + the coarse argmin tree; the PQ
-    # fit/codes below reference it n_subspaces·n_codes times and
-    # Catalyst INLINES each reference — without materializing here the
-    # expression tree goes combinatorial and analysis/codegen hangs.
-    # One narrow (id, cell, residual) materialization, linear cost.
-    resid = resid.localCheckpoint(eager=True)
+    resid = residuals(c_gv.join(cells, c_id), c_id)
     books = pq_grid_fit(resid, dim, n_subspaces=n_subspaces,
                         n_codes=n_codes, n_iters=n_iters, id_col=c_id,
                         vec_col="_rv", grid=grid, pre_gridded=True)
@@ -613,42 +597,14 @@ def ivfpq_grid_residual_topk(queries: DataFrame, candidates: DataFrame,
                          grid=grid, pre_gridded=True) \
         .select(c_id, "codes").join(resid.select(c_id, "_cell"), c_id)
 
-    width = dim // n_subspaces
-    q_gv = queries.select(F.col(q_id), grid_vec(q_vec, grid).alias("_xq"))
-    probed = _probe_cells(q_gv, coarse[0], n_probe, q_id)
-    q_rv = probed.select(
+    q_rv = residuals(_probe_cells(queries, centroids, n_probe, q_id, q_vec,
+                                  grid), q_id)
+    probes = q_rv.select(
         q_id, "_cell",
-        F.zip_with("_xq", F.element_at(centers_lit, F.col("_cell") + 1),
-                   lambda a, b: a - b).alias("_rv"))
-    # same lineage cut for the query residuals (Q·n_probe rows — tiny
-    # data, but the 64 distance-table references would inline the same
-    # combinatorial tree)
-    q_rv = q_rv.localCheckpoint(eager=True)
-    tables = []
-    for book in books:
-        book_lit = lit_int_matrix(book)
-        s = len(tables)
-        sub = F.slice("_rv", s * width + 1, width)
-        tables.append(F.transform(
-            book_lit,
-            lambda ctr: F.aggregate(
-                F.zip_with(sub, ctr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"), lambda acc, x: acc + x)))
-    probes = q_rv.select(q_id, "_cell", F.array(*tables).alias("_dt"))
-
-    pairs = cand.join(F.broadcast(probes), "_cell") \
-        .filter(F.col(q_id) != F.col(c_id))
-    dist = None
-    for s in range(n_subspaces):
-        term = F.element_at(F.element_at("_dt", s + 1),
-                            F.col("codes")[s] + 1)
-        dist = term if dist is None else dist + term
-    pre = pairs.select(q_id, c_id, dist.cast("bigint").alias("adc_d"))
-    w = Window.partitionBy(q_id).orderBy(F.asc("adc_d"), F.asc(c_id))
-    pre = pre.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k_adc).select(q_id, c_id)
-    return exact_rerank(pre, queries, candidates, k=k, q_id=q_id,
-                        c_id=c_id, q_vec=q_vec, c_vec=c_vec)
+        _adc_tables("_rv", books, dim // n_subspaces).alias("_dt"))
+    return _adc_rerank(cand.join(F.broadcast(probes), "_cell"), queries,
+                       candidates, n_subspaces, k, k_adc,
+                       q_id, c_id, q_vec, c_vec)
 
 
 def _probe_sql(book: str, dim: int, n_probe: int,

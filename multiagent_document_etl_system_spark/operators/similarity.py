@@ -24,10 +24,13 @@ cluster-pruning/LSH two-phase pipeline. Brute force is O(Q×N×d) but
 shuffle-free after the broadcast; LSH makes N effectively N/2^bits per
 bucket.
 
-Reserved column names: these operators materialize internal helper columns
-``_qn``, ``_cn``, ``_sig`` on the input DataFrames. Callers must not pass
-DataFrames that already contain columns with those names (they would be
-silently overwritten); project them away or rename first.
+Reserved column names: two operators add helper columns to the caller's
+DataFrames — :func:`topk_join` adds ``_qn`` to the queries and ``_cn`` to
+the candidates; :func:`ann_lsh_topk` adds ``_sig``, ``_qn`` and (with
+``multiprobe``) ``_sig0`` to the queries and ``_sig`` and ``_cn`` to the
+candidates. Callers must not pass DataFrames that already contain columns
+with those names (they would be silently overwritten); project them away
+or rename first. Every other operator projects its inputs first.
 """
 
 from __future__ import annotations
@@ -57,11 +60,27 @@ def norm(a: Column) -> Column:
     )
 
 
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The one cosine of every vector operator, over norms ``na``/``nb``
+    precomputed per row or inline: 0.0 for a zero vector (Pinecone rejects
+    those; we define it). The IEEE op order — sqrt per side, multiply,
+    divide — is fixed, so the scores are bit-identical either way."""
+    denom = na * nb
+    return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; 0.0 for a zero vector (reference behavior is
-    undefined there — Pinecone rejects zero vectors; we define it)."""
-    d = norm(a) * norm(b)
-    return F.when(d == 0, F.lit(0.0)).otherwise(dot(a, b) / d)
+    """Cosine similarity; 0.0 for a zero vector."""
+    return cosine_from_norms(a, b, norm(a), norm(b))
+
+
+def rank_topk(scored: DataFrame, k: int, q_id: str = "q_id",
+              c_id: str = "c_id") -> DataFrame:
+    """Each query's ``k`` best rows of ``scored``, numbered in ``rank`` by
+    (score DESC, candidate ASC) — the module's one top-k tie-break."""
+    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
+    return scored.withColumn("rank", F.row_number().over(w)) \
+        .filter(F.col("rank") <= k)
 
 
 def cosine_sql(a: str, b: str) -> str:
@@ -98,22 +117,12 @@ def topk_join(queries: DataFrame, candidates: DataFrame, k: int = 5,
     j = c.crossJoin(F.broadcast(q))
     if exclude_self:
         j = j.filter(F.col(q_id) != F.col(c_id))
-    denom = F.col("_qn") * F.col("_cn")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col(q_vec), F.col(c_vec)) / denom)
+    score = cosine_from_norms(F.col(q_vec), F.col(c_vec),
+                              F.col("_qn"), F.col("_cn"))
     scored = j.select(q_id, c_id, *carry, F.round(score, 4).alias("score"))
     if score_floor is not None:
         scored = scored.filter(F.col("score") >= score_floor)
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def top1(queries: DataFrame, candidates: DataFrame, **kw) -> DataFrame:
-    """V4 — argmax selection (matches[0], /root/reference/src/agents.py:123-125)."""
-    return topk_join(queries, candidates, k=1, **kw)
+    return rank_topk(scored, k, q_id, c_id)
 
 
 def topk_join_matmul(queries: DataFrame, candidates: DataFrame, k: int = 5,
@@ -171,9 +180,7 @@ def topk_join_matmul(queries: DataFrame, candidates: DataFrame, k: int = 5,
         score_partition, f"{q_id} long, {c_id} long, score double")
     if exclude_self:
         pairs = pairs.filter(F.col(q_id) != F.col(c_id))
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return pairs.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k)
+    return rank_topk(pairs, k, q_id, c_id)
 
 
 def ann_lsh_topk_matmul(queries: DataFrame, candidates: DataFrame,
@@ -230,9 +237,7 @@ def ann_lsh_topk_matmul(queries: DataFrame, candidates: DataFrame,
                        schema=f"{q_id} long, {c_id} long, score double")
         .filter(F.col(q_id) != F.col(c_id))
     )
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return pairs.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k)
+    return rank_topk(pairs, k, q_id, c_id)
 
 
 def topk_auto(queries: DataFrame, candidates: DataFrame, dim: int,
@@ -263,49 +268,6 @@ def topk_auto(queries: DataFrame, candidates: DataFrame, dim: int,
     out = ann_lsh_topk(queries, candidates, dim=dim, k=k,
                        q_id=q_id, c_id=c_id, q_vec=q_vec, c_vec=c_vec)
     return out, "lsh_bucketed"
-
-
-def ann_lsh_topk_multiprobe(queries: DataFrame, candidates: DataFrame,
-                            dim: int, k: int = 5, n_planes: int = 8,
-                            seed: int = 42,
-                            q_id: str = "q_id", c_id: str = "c_id",
-                            q_vec: str = "q_vec",
-                            c_vec: str = "c_vec") -> DataFrame:
-    """Multi-probe LSH top-k: probe the query's exact signature bucket PLUS
-    every Hamming-distance-1 neighbor bucket (one hyperplane sign flipped).
-    The standard recall lever (Lv et al., VLDB 2007): near neighbors that
-    land just across one hyperplane are recovered without adding hash
-    tables. Cost model at scale: the QUERY side explodes ×(n_planes+1)
-    before the equi-join — linear in the (smaller) query set, while the
-    candidate corpus is still hashed exactly once and shuffled on a uniform
-    2^n_planes-ary key. Each (query, candidate) pair matches at most one
-    probe (a candidate has one signature; the probe list is distinct), so
-    no dedup pass is needed before ranking.
-
-    Deterministic like :func:`ann_lsh_topk` — same hash-derived planes,
-    rounded scores, (score DESC, id ASC) tie-break — so a SQL oracle can
-    restate it exactly.
-    """
-    planes = hyperplanes(dim, n_planes, seed)
-    qs = queries.withColumn("_sig0", lsh_signature(F.col(q_vec), planes)) \
-        .withColumn("_qn", norm(F.col(q_vec)))
-    probes = F.array(
-        F.col("_sig0"),
-        *[F.col("_sig0").bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)],
-    )
-    qs = qs.withColumn("_sig", F.explode(probes)).drop("_sig0")
-    cs = candidates.withColumn("_sig", lsh_signature(F.col(c_vec), planes)) \
-        .withColumn("_cn", norm(F.col(c_vec)))
-    j = cs.join(qs, "_sig").filter(F.col(q_id) != F.col(c_id))
-    denom = F.col("_qn") * F.col("_cn")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col(q_vec), F.col(c_vec)) / denom)
-    scored = j.select(q_id, c_id, F.round(score, 4).alias("score"))
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -354,6 +316,32 @@ def lsh_signature_sql(vec_expr: str, planes: list[list[float]]) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+def lsh_probes(sig: Column, n_planes: int) -> Column:
+    """A signature and its Hamming-1 neighbors (one plane's bit flipped):
+    distinct, so a candidate matches at most one probe of a query."""
+    return F.array(sig, *[sig.bitwiseXOR(F.lit(2 ** i))
+                          for i in range(n_planes)])
+
+
+def _bucket_self_join(vectors: DataFrame, dim: int, n_planes: int,
+                      seed: int, id_col: str,
+                      vec_col: str) -> tuple[DataFrame, Column]:
+    """Every (id_a, id_b) pair sharing an LSH bucket (callers filter) and
+    its cosine over per-ROW norms: O(Σ bucket²) work, never all-pairs."""
+    planes = hyperplanes(dim, n_planes, seed)
+    sig = vectors.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
+        lsh_signature(F.col(vec_col), planes).alias("_sig"),
+        norm(F.col(vec_col)).alias("_n"))
+    a = sig.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
+                   F.col("_n").alias("_na"), "_sig")
+    b = sig.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
+                   F.col("_n").alias("_nb"), "_sig")
+    score = cosine_from_norms(F.col("_va"), F.col("_vb"),
+                              F.col("_na"), F.col("_nb"))
+    return a.join(b, "_sig"), score
+
+
 def embedding_near_pairs(vectors: DataFrame, dim: int,
                          threshold: float = 0.3, n_planes: int = 8,
                          seed: int = 42, id_col: str = "vec_id",
@@ -363,9 +351,7 @@ def embedding_near_pairs(vectors: DataFrame, dim: int,
 
     Blocking key = the ``n_planes``-bit signature — a self equi-join that
     shuffles on a ~2^n_planes-ary uniform key, so pair work is
-    O(Σ bucket²) ≈ O(N²/2^n_planes) instead of label-blocked quadratic
-    (the round-2 version blocked on a ~10-value ``label`` column, which is
-    O(N²/10) — a scale-killer; see VERDICT r2 "what's wrong" #2). Cosine
+    O(Σ bucket²) ≈ O(N²/2^n_planes), not label-blocked O(N²/10). Cosine
     near-duplicates agree on most hyperplane signs, so high-threshold pairs
     land in the same bucket with high probability; missed cross-bucket
     pairs are the standard LSH recall trade, tunable via n_planes (fewer
@@ -375,22 +361,10 @@ def embedding_near_pairs(vectors: DataFrame, dim: int,
     twin expressible: the oracle restates the signature with the same
     literals (:func:`lsh_signature_sql`).
     """
-    planes = hyperplanes(dim, n_planes, seed)
-    sig = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        lsh_signature(F.col(vec_col), planes).alias("_sig"),
-        norm(F.col(vec_col)).alias("_n"),
-    )
-    a = sig.select(F.col("_id").alias("id_a"), F.col("_vec").alias("_va"),
-                   F.col("_n").alias("_na"), "_sig")
-    b = sig.select(F.col("_id").alias("id_b"), F.col("_vec").alias("_vb"),
-                   F.col("_n").alias("_nb"), "_sig")
-    denom = F.col("_na") * F.col("_nb")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col("_va"), F.col("_vb")) / denom)
+    pairs, score = _bucket_self_join(vectors, dim, n_planes, seed,
+                                     id_col, vec_col)
     return (
-        a.join(b, "_sig").filter(F.col("id_a") < F.col("id_b"))
+        pairs.filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", F.round(score, 4).alias("score"))
         .filter(F.col("score") >= threshold)
     )
@@ -399,35 +373,37 @@ def embedding_near_pairs(vectors: DataFrame, dim: int,
 def ann_lsh_topk(queries: DataFrame, candidates: DataFrame,
                  dim: int, k: int = 5, n_planes: int = 8, seed: int = 42,
                  q_id: str = "q_id", c_id: str = "c_id",
-                 q_vec: str = "q_vec", c_vec: str = "c_vec") -> DataFrame:
+                 q_vec: str = "q_vec", c_vec: str = "c_vec",
+                 multiprobe: bool = False) -> DataFrame:
     """Approximate top-k: random-hyperplane signature bucketing + exact
     re-rank inside buckets. The 100 TB path for big query sets: replaces the
     cross join with an equi-join on signature (shuffle-partitionable,
     AQE-skew-splittable). Recall < 1 by construction — callers that need
     exact results use :func:`topk_join`.
 
-    Deterministic: hyperplanes derive from a hash of (seed, plane, dim_idx),
-    not RNG state.
+    ``multiprobe`` also probes the query's Hamming-1 neighbor buckets
+    (:func:`lsh_probes`; Lv et al., VLDB 2007): neighbors just across one
+    hyperplane are recovered without more hash tables. Only the query
+    side explodes, ×(n_planes+1); the corpus is still hashed once.
+
+    Deterministic (hash-derived planes, rounded scores, :func:`rank_topk`),
+    so a SQL oracle restates either probe mode exactly.
     """
     planes = hyperplanes(dim, n_planes, seed)
-
-    def signature(vec: Column) -> Column:
-        return lsh_signature(vec, planes)
-
-    qs = queries.withColumn("_sig", signature(F.col(q_vec))) \
+    qs = queries.withColumn("_sig", lsh_signature(F.col(q_vec), planes)) \
         .withColumn("_qn", norm(F.col(q_vec)))
-    cs = candidates.withColumn("_sig", signature(F.col(c_vec))) \
+    if multiprobe:
+        qs = (qs.withColumnRenamed("_sig", "_sig0")
+              .withColumn("_sig", F.explode(lsh_probes(F.col("_sig0"),
+                                                       n_planes)))
+              .drop("_sig0"))
+    cs = candidates.withColumn("_sig", lsh_signature(F.col(c_vec), planes)) \
         .withColumn("_cn", norm(F.col(c_vec)))
     j = cs.join(qs, "_sig").filter(F.col(q_id) != F.col(c_id))
-    denom = F.col("_qn") * F.col("_cn")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col(q_vec), F.col(c_vec)) / denom)
+    score = cosine_from_norms(F.col(q_vec), F.col(c_vec),
+                              F.col("_qn"), F.col("_cn"))
     scored = j.select(q_id, c_id, F.round(score, 4).alias("score"))
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_topk(scored, k, q_id, c_id)
 
 
 # ------------------------------------------------- int8 storage quantization
@@ -525,21 +501,14 @@ def exact_rerank(survivors: DataFrame, queries: DataFrame,
     """Full-precision rerank of a small (q_id, c_id) survivor list from any
     prefilter (truncated-prefix, ADC, LSH): two broadcast joins pull the
     true vectors for Q x k_prefilter pairs only — the corpus is never
-    shuffled — then exact cosine, deterministic (score DESC, id ASC)
-    row_number, top-k."""
+    shuffled — then exact cosine and :func:`rank_topk`."""
     pairs = (
         candidates.join(F.broadcast(survivors.select(q_id, c_id)), c_id)
         .join(F.broadcast(queries), q_id)
     )
-    denom = norm(F.col(q_vec)) * norm(F.col(c_vec))
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col(q_vec), F.col(c_vec)) / denom)
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return (
-        pairs.select(q_id, c_id, F.round(score, 4).alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    score = cosine(F.col(q_vec), F.col(c_vec))
+    scored = pairs.select(q_id, c_id, F.round(score, 4).alias("score"))
+    return rank_topk(scored, k, q_id, c_id)
 
 
 # --------------------------------------- truncated-dimension prefilter rerank
@@ -586,8 +555,9 @@ def sign_pack(vec: Column, dim: int = 64) -> tuple[Column, Column]:
     storage rung (32x vs float32, below int8's 4x and PQ's 64x-with-
     codebooks). Deterministic pure bit arithmetic on both engines, so
     it supports a full hash oracle."""
+    if dim != 64:
+        raise ValueError(f"sign_pack is specified for dim=64, got {dim}")
     half = dim // 2
-    assert half == 32 and dim == 64, "sign_pack is specified for dim=64"
 
     def pack(sl: Column) -> Column:
         # 2^i via double pow (shiftleft needs a literal shift): the sum of
@@ -649,6 +619,21 @@ def cosine_parity_sql(a: str, b: str) -> str:
             f"ELSE list_dot_product({a},{b}) / ({na} * {nb}) END")
 
 
+def _knn_edges(vectors: DataFrame, dim: int, k: int, n_planes: int,
+               seed: int, id_col: str, vec_col: str) -> DataFrame:
+    """(id_a, id_b, score_q, rank): each vector's ``k`` nearest in-bucket
+    neighbours on the 1e-4 score grid, id tie-break — the kNN graph."""
+    pairs, score = _bucket_self_join(vectors, dim, n_planes, seed,
+                                     id_col, vec_col)
+    pairs = (pairs.filter(F.col("id_a") != F.col("id_b"))
+             .select("id_a", "id_b",
+                     F.floor(score * F.lit(10000.0) + F.lit(0.5))
+                     .cast("long").alias("score_q")))
+    w = Window.partitionBy("id_a").orderBy(F.desc("score_q"), F.asc("id_b"))
+    return (pairs.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def knn_graph_stats(vectors: DataFrame, dim: int, k: int = 3,
                     n_planes: int = 6, seed: int = 42,
                     id_col: str = "vec_id",
@@ -665,41 +650,15 @@ def knn_graph_stats(vectors: DataFrame, dim: int, k: int = 3,
     carry a full DuckDB oracle; no float column leaves the operator).
 
     Plan at 100 TB: the only shuffle of the vector set is the signature
-    equi-join (uniform 2^n_planes-ary key — the embedding_near_pairs
-    blocking argument); pair volume is O(Σ bucket²), never all-pairs.
-    Ranking is one row_number window per bucket-join output partition.
+    equi-join of :func:`_knn_edges` (uniform 2^n_planes-ary key); pair
+    volume is O(Σ bucket²), never all-pairs.
     The mutual check is a count window over the UNORDERED pair key
     (least, greatest) — an edge is mutual iff its unordered pair holds
     both directions (count == 2; directed pairs are unique by
-    construction). The r12 optimization round replaced the previous
-    edge-list × transpose self-join here: both of that join's inputs
-    re-derived the full LSH chain (signature join + per-pair cosine), so
-    the expensive chain executed TWICE per run; the window shape
-    shuffles the same ≤ k·N ids-only rows once and runs the chain once.
-    Norms are precomputed per ROW in the signature relation (the
-    topk_join convention) — computing them inside the pair expression
-    folds over each vector once per pair instead of once per row.
+    construction), which shuffles ≤ k·N ids-only rows once and runs the
+    LSH chain once.
     """
-    planes = hyperplanes(dim, n_planes, seed)
-    sig = vectors.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-        lsh_signature(F.col(vec_col), planes).alias("_sig"),
-        norm(F.col(vec_col)).alias("_n"))
-    a = sig.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
-                   F.col("_n").alias("_na"), "_sig")
-    b = sig.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
-                   F.col("_n").alias("_nb"), "_sig")
-    # same IEEE op sequence as cosine(): sqrt per side, multiply, divide
-    denom = F.col("_na") * F.col("_nb")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col("_va"), F.col("_vb")) / denom)
-    pairs = (a.join(b, "_sig").filter(F.col("id_a") != F.col("id_b"))
-             .select("id_a", "id_b",
-                     F.floor(score * F.lit(10000.0) + F.lit(0.5))
-                     .cast("long").alias("score_q")))
-    w = Window.partitionBy("id_a").orderBy(F.desc("score_q"), F.asc("id_b"))
-    edges = (pairs.withColumn("rank", F.row_number().over(w))
-             .filter(F.col("rank") <= k))
+    edges = _knn_edges(vectors, dim, k, n_planes, seed, id_col, vec_col)
     wp = Window.partitionBy(F.least("id_a", "id_b"),
                             F.greatest("id_a", "id_b"))
     flagged = edges.withColumn(
@@ -759,9 +718,11 @@ def graph_pagerank(vectors: DataFrame, dim: int, k: int = 3,
     a curation signal (PageRank-style centrality picks *representative*
     documents inside semantic neighborhoods; low-rank isolates are
     outliers). The graph is the mutual subgraph of :func:`knn_graph_stats`
-    (edge kept only when both endpoints choose each other), which makes it
-    symmetric: every node has out_deg == in_deg == deg ∈ [1, k], so there
-    are no dangling nodes and each iteration is one bounded equi-join.
+    (edge kept only when both endpoints choose each other; both operators
+    build their edges with :func:`_knn_edges`), so ``deg`` equals
+    knn_graph_stats' ``mutual_deg`` and the graph is symmetric: every
+    node has out_deg == in_deg == deg ∈ [1, k], so there are no dangling
+    nodes and each iteration is one bounded equi-join.
 
     INTEGER-EXACT damped iteration (hash-oracle-able, no float channel):
     rank is a BIGINT on the 1e-6 grid, rank_0 = PR_SCALE, and
@@ -772,41 +733,15 @@ def graph_pagerank(vectors: DataFrame, dim: int, k: int = 3,
     integer recurrence, so ``iters`` unrolled rounds match DuckDB's
     unrolled CTEs bit-for-bit.
 
-    Plan at 100 TB: edge construction is the LSH-signature equi-join
-    (never all-pairs); the mutual subgraph and the source degree are
-    derived in the SAME single pass — a count window over the unordered
-    pair key (least, greatest) keeps an edge iff both directions are
-    present (count == 2; directed pairs are unique by construction), and
-    a count window over src attaches deg. The (src, dst, deg) edge list
+    Plan at 100 TB: the mutual subgraph (knn_graph_stats' count window
+    over the unordered pair key) and the source degree (a count window
+    over src) are derived in ONE pass. The (src, dst, deg) edge list
     (≤ k·N rows, 3 longs wide) is localCheckpointed ONCE and every
     downstream relation — deg, the rank init, and each of the ``iters``
     rounds' join(edges, ranks) → groupBy(dst) — reads the checkpoint, so
-    the LSH chain executes exactly once per run. (Before the r12
-    optimization round the mutual check was an edge × transpose
-    self-join and deg/rank-init re-derived the un-checkpointed chain:
-    the signature join + per-pair cosine executed 3× per run.) Norms
-    are precomputed per ROW in the signature relation (the topk_join
-    convention). Returns (id, deg, pr_q)."""
-    planes = hyperplanes(dim, n_planes, seed)
-    sig = vectors.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-        lsh_signature(F.col(vec_col), planes).alias("_sig"),
-        norm(F.col(vec_col)).alias("_n"))
-    a = sig.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
-                   F.col("_n").alias("_na"), "_sig")
-    b = sig.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
-                   F.col("_n").alias("_nb"), "_sig")
-    # same IEEE op sequence as cosine(): sqrt per side, multiply, divide
-    denom = F.col("_na") * F.col("_nb")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(dot(F.col("_va"), F.col("_vb")) / denom)
-    pairs = (a.join(b, "_sig").filter(F.col("id_a") != F.col("id_b"))
-             .select("id_a", "id_b",
-                     F.floor(score * F.lit(10000.0) + F.lit(0.5))
-                     .cast("long").alias("score_q")))
-    w = Window.partitionBy("id_a").orderBy(F.desc("score_q"), F.asc("id_b"))
-    edges = (pairs.withColumn("rank", F.row_number().over(w))
-             .filter(F.col("rank") <= k).select("id_a", "id_b"))
+    the LSH chain executes exactly once per run. Returns (id, deg, pr_q)."""
+    edges = _knn_edges(vectors, dim, k, n_planes, seed, id_col, vec_col) \
+        .select("id_a", "id_b")
     wp = Window.partitionBy(F.least("id_a", "id_b"),
                             F.greatest("id_a", "id_b"))
     mutual = (edges.withColumn("_c", F.count("*").over(wp))

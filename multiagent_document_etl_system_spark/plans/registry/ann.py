@@ -103,7 +103,7 @@ def v4_top1_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     c = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    return similarity.top1(q, c).select(
+    return similarity.topk_join(q, c, k=1).select(
         "q_id", F.col("c_id").alias("best_match"), "score")
 
 
@@ -146,8 +146,8 @@ def v5_fallback_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-label top-1; strategy 2 = global top-1 with a score floor; strategy
     3 = constant fallback (/root/reference/src/agents.py:104-156).
     Provenance in ``strategy``. Both retrieval strategies are
-    `similarity.top1` calls (filtered candidates / score_floor) — the same
-    operator as V2/V3/V4, not a reimplementation."""
+    `similarity.topk_join(k=1)` calls (filtered candidates / score_floor) —
+    the same operator as V2/V3/V4, not a reimplementation."""
     e = _emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
@@ -155,10 +155,11 @@ def v5_fallback_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("embedding").alias("c_vec"),
                  F.col("label").alias("c_label"))
     # strategy 1: filtered by matching label (V3 semantics), rare label → may miss
-    s1 = similarity.top1(q, c.filter(F.col("c_label") == 9).drop("c_label")) \
+    s1 = similarity.topk_join(
+        q, c.filter(F.col("c_label") == 9).drop("c_label"), k=1) \
         .select("q_id", F.col("c_id").alias("s1_id"))
     # strategy 2: unfiltered global top-1 with a score floor (semantic query)
-    s2 = similarity.top1(q, c.drop("c_label"), score_floor=0.35) \
+    s2 = similarity.topk_join(q, c.drop("c_label"), k=1, score_floor=0.35) \
         .select("q_id", F.col("c_id").alias("s2_id"))
     return (
         q.join(s1, "q_id", "left").join(s2, "q_id", "left")
@@ -322,7 +323,8 @@ def v11_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     c = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    return similarity.ann_lsh_topk_multiprobe(q, c, dim=64, k=5, n_planes=6)
+    return similarity.ann_lsh_topk(q, c, dim=64, k=5, n_planes=6,
+                                   multiprobe=True)
 
 
 # persisted-ANN-index staging (operators/ann_index.py): the build is
@@ -829,8 +831,8 @@ def v21_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                     q, c, dim=64, k=5, k_coarse=50),
                 "lsh": similarity.ann_lsh_topk(q, c, dim=64, k=5,
                                                n_planes=6),
-                "lsh_multiprobe": similarity.ann_lsh_topk_multiprobe(
-                    q, c, dim=64, k=5, n_planes=6),
+                "lsh_multiprobe": similarity.ann_lsh_topk(
+                    q, c, dim=64, k=5, n_planes=6, multiprobe=True),
                 "matryoshka16": similarity.truncated_rerank_topk(
                     q, c, k=5, prefix_dims=16, k_coarse=50),
                 "pq_grid_adc100": pq_grid.pq_grid_adc_rerank_topk(

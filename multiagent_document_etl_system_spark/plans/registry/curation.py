@@ -302,9 +302,8 @@ def td_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 similarity.norm(F.col("embedding")).alias("_en"))
     corpus = emb.filter(F.col("vec_id") % 90 != 8) \
         .withColumn("_n", similarity.norm(F.col("embedding")))
-    denom = F.col("_n") * F.col("_en")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        similarity.dot(F.col("embedding"), F.col("_ev")) / denom)
+    cos = similarity.cosine_from_norms(F.col("embedding"), F.col("_ev"),
+                                       F.col("_n"), F.col("_en"))
     sq = F.floor(cos * 10000.0 + F.lit(0.5)).cast("bigint")
     return (
         corpus.crossJoin(F.broadcast(ev))

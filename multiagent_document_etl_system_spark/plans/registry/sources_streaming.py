@@ -989,17 +989,11 @@ def st_ann_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "vec_id bigint, embedding array<float>, label int") \
         .parquet(_staged_query_vectors_dir(spark, sf_dir))
-    q = stream.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        similarity.norm(F.col("embedding")).alias("_qn"),
-        similarity.lsh_signature(F.col("embedding"), planes).alias("sig"),
-    )
+    q = ann_index.hash_queries(stream, planes, "vec_id", "embedding")
     cand = spark.read.parquet(f"{idx_dir}/vectors")
     j = q.join(cand, "sig").filter(F.col("q_id") != F.col("c_id"))
-    denom = F.col("_qn") * F.col("c_norm")
-    score = F.when(denom == 0, F.lit(0.0)) \
-        .otherwise(similarity.dot(F.col("q_vec"), F.col("c_vec")) / denom)
+    score = similarity.cosine_from_norms(F.col("q_vec"), F.col("c_vec"),
+                                         F.col("_qn"), F.col("c_norm"))
     best = (
         j.select("q_id", F.round(score, 4).alias("score"), "c_id")
         .groupBy("q_id")

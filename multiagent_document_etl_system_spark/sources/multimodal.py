@@ -385,7 +385,8 @@ def phash_near_pairs(hashes: DataFrame, max_hamming: int = 10,
     regime where the verify step carries the load. 4 bands (16-bit keys)
     is the corpus-scale default; 8 suits curated collections where
     recall at Hamming ≈ 10 matters more than bucket size."""
-    assert 64 % n_bands == 0, n_bands
+    if 64 % n_bands:
+        raise ValueError(f"n_bands must divide 64, got {n_bands}")
     width = 64 // n_bands
     mask = (1 << width) - 1
     h = hashes.filter(F.col("phash").isNotNull())

@@ -61,8 +61,8 @@ def test_index_multiprobe_matches_in_memory_rung(spark, index_dir):
     c = _emb(spark).select(F.col("vec_id").alias("c_id"),
                            F.col("embedding").alias("c_vec"))
     expect = {(r.q_id, r.c_id, r.score, r.rank)
-              for r in similarity.ann_lsh_topk_multiprobe(
-                  q, c, dim=64, k=5).collect()}
+              for r in similarity.ann_lsh_topk(
+                  q, c, dim=64, k=5, multiprobe=True).collect()}
     got = {(r.q_id, r.c_id, r.score, r.rank)
            for r in ann_index_topk(spark, index_dir, q, k=5,
                                    multiprobe=True,
@@ -70,10 +70,13 @@ def test_index_multiprobe_matches_in_memory_rung(spark, index_dir):
     assert got == expect and got
 
 
-def test_index_query_prunes_partitions(spark, index_dir):
+@pytest.mark.parametrize("multiprobe", [False, True])
+def test_index_query_prunes_partitions(spark, index_dir, multiprobe):
     """The probe-signature filter lands in PartitionFilters: only the
-    buckets the query batch touches are listed/opened."""
-    out = ann_index_topk(spark, index_dir, _queries(spark, 3), k=5)
+    buckets the query batch touches are listed/opened, in both probe
+    modes."""
+    out = ann_index_topk(spark, index_dir, _queries(spark, 3), k=5,
+                         multiprobe=multiprobe)
     p = out._jdf.queryExecution().executedPlan().toString()
     pf = [ln for ln in p.splitlines()
           if "PartitionFilters" in ln and "sig" in ln]

@@ -77,6 +77,21 @@ def test_pagerank_fixed_point_on_mutual_pairs(spark):
         assert r.pr_q == similarity.PR_SCALE
 
 
+def test_pagerank_deg_is_knn_mutual_deg(spark):
+    """graph_pagerank ranks knn_graph_stats' mutual subgraph (both build
+    their edges with one kNN edge builder): on the embedding fixture,
+    every vector's ``deg`` equals its ``mutual_deg``, and the ranked ids
+    are exactly the ids with a mutual edge."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    deg = {r.vec_id: r.deg
+           for r in similarity.graph_pagerank(emb, dim=64).collect()}
+    mutual = {r.vec_id: r.mutual_deg
+              for r in similarity.knn_graph_stats(emb, dim=64).collect()
+              if r.mutual_deg}
+    assert deg and set(deg) == set(mutual)
+    assert deg == mutual
+
+
 def test_pagerank_degree_bounds_and_base_floor(spark):
     """On the real sf0.001 embeddings: node set == the mutual-kNN node
     set, 1 <= deg <= k, and every rank is >= the teleport base (the

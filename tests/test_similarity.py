@@ -139,8 +139,8 @@ def test_multiprobe_dominates_single_bucket(spark):
              for r in similarity.topk_join(q, c, k=5).collect()}
     single_rows = similarity.ann_lsh_topk(
         q, c, dim=64, k=5, n_planes=6).collect()
-    multi_rows = similarity.ann_lsh_topk_multiprobe(
-        q, c, dim=64, k=5, n_planes=6).collect()
+    multi_rows = similarity.ann_lsh_topk(
+        q, c, dim=64, k=5, n_planes=6, multiprobe=True).collect()
     single = {(r["q_id"], r["c_id"]) for r in single_rows}
     multi = {(r["q_id"], r["c_id"]) for r in multi_rows}
 
@@ -271,3 +271,24 @@ def test_recall_matrix_surfaces_checkpoint_error(spark, monkeypatch):
     with pytest.raises(CheckpointError) as err:
         QUERIES["v21_recall_matrix"][0](spark, SF_DIR)
     assert isinstance(err.value.__context__, RungError)
+
+
+@pytest.mark.parametrize("op", ["sign_pack", "pq_grid_fit",
+                                "phash_near_pairs"])
+def test_width_checks_raise_value_error(spark, op):
+    """Argument checks that survive ``python -O``: a width that does not
+    split evenly raises ValueError before any slicing, instead of packing
+    or slicing the wrong width."""
+    from multiagent_document_etl_system_spark.operators import pq_grid
+    from multiagent_document_etl_system_spark.sources import multimodal
+
+    df = spark.range(1)
+    calls = {
+        "sign_pack": lambda: similarity.binary_hamming_topk(df, df, dim=32),
+        "pq_grid_fit": lambda: pq_grid.pq_grid_fit(df, dim=64,
+                                                   n_subspaces=5),
+        "phash_near_pairs": lambda: multimodal.phash_near_pairs(
+            df, n_bands=5),
+    }
+    with pytest.raises(ValueError):
+        calls[op]()
