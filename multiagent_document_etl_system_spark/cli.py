@@ -36,14 +36,16 @@ from multiagent_document_etl_system_spark.session import get_spark
 DEFAULT_REGISTRY = "./schema_registry.parquet"
 
 
-#: Digest of the sources a processed row depends on. It is mixed into
-#: every ``content_hash``, so an edit to a parser or a pipeline stage
-#: invalidates ``process --incremental`` reuse with no constant to bump.
+#: The sources a processed row depends on (parsers and pipeline stages,
+#: closed over their package imports; not the fixture writers), and their
+#: digest. It is mixed into every ``content_hash``, so an edit to one of
+#: them invalidates ``process --incremental`` reuse with no constant to bump.
+PIPELINE_SOURCES = (
+    "sources/parsers.py", "plans/pipeline.py", "functions/text.py",
+    "operators/classify.py", "operators/extract.py", "operators/validate.py")
 PIPELINE_VERSION = hashlib.sha256(b"".join(
-    (Path(__file__).parent / name).read_bytes() for name in (
-        "sources/parsers.py", "plans/pipeline.py", "functions/text.py",
-        "operators/classify.py", "operators/extract.py",
-        "operators/validate.py"))).hexdigest()[:16]
+    (Path(__file__).parent / name).read_bytes()
+    for name in PIPELINE_SOURCES)).hexdigest()[:16]
 
 
 def process_plan(spark, input_dir: str, prior_dir: str | None = None):
@@ -108,8 +110,9 @@ def cmd_process(args) -> dict:
     at the output dir, written through a crash-safe swap.
 
     With ``--incremental`` and an existing output, reuse is keyed on each
-    file's content bytes plus ``PIPELINE_VERSION``, a digest of the parser
-    and pipeline sources: only new or changed files are parsed and
+    file's content bytes plus ``PIPELINE_VERSION``, the sha256 of the
+    files in ``PIPELINE_SOURCES`` (the parsers and the pipeline stages;
+    not the fixture writers): only new or changed files are parsed and
     processed, unchanged ones keep their prior rows, deleted ones drop
     out. An edit to a parser or a pipeline stage, or an output written by
     an older release, makes that run recompute every document once. The

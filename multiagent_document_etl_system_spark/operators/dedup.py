@@ -111,24 +111,18 @@ def shingles(text: Column, n: int = 3) -> Column:
 
 # ---------------------------------------------------------------- hashing
 
-def hash64(c: Column, seed: int | None = None,
-           family: str = "md5") -> Column:
-    """60-bit positive hash of a string column, seedable.
-
-    family='md5' (default): conv(first 15 hex of md5, 16, 10) — bit-exact
-    across Spark and DuckDB (`CAST('0x'||substring(md5(x),1,15) AS BIGINT)`),
-    so every dedup signature built on it is oracle-checkable.
-    family='xxhash64': Spark's native seeded hash — ~5× cheaper per call,
-    the 100 TB fast path; signatures then check rows-only.
+def hash64(c: Column, seed: int | None = None) -> Column:
+    """60-bit positive hash of a string column, seedable:
+    conv(first 15 hex of md5, 16, 10) — bit-exact across Spark and DuckDB
+    (`CAST('0x'||substring(md5(x),1,15) AS BIGINT)`), so every dedup
+    signature built on it is oracle-checkable.
     """
-    if family == "xxhash64":
-        return F.xxhash64(c) if seed is None else F.xxhash64(c, F.lit(seed))
     keyed = c if seed is None else F.concat(F.lit(f"{seed}:"), c)
     return F.conv(F.substring(F.md5(keyed), 1, 15), 16, 10).cast("long")
 
 
 def hash64_sql(col: str, seed: int | None = None) -> str:
-    """DuckDB twin of hash64(family='md5')."""
+    """DuckDB twin of hash64."""
     keyed = col if seed is None else f"concat('{seed}:', {col})"
     return f"CAST(concat('0x', substring(md5({keyed}), 1, 15)) AS BIGINT)"
 
@@ -148,9 +142,9 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 del _rng
 
 
-def shingle_base_hashes(shingle_col: Column, family: str = "md5") -> Column:
+def shingle_base_hashes(shingle_col: Column) -> Column:
     """array<long> — one base hash per shingle, reduced mod p."""
-    return F.transform(shingle_col, lambda s: hash64(s, None, family) % MINHASH_P)
+    return F.transform(shingle_col, lambda s: hash64(s) % MINHASH_P)
 
 
 def minhash_signature(base_col: Column, n_hashes: int = 16) -> Column:
@@ -207,8 +201,8 @@ def shingle_sets(df: DataFrame, text_col: str = "text",
     )
 
 
-def band_signatures(sh_df: DataFrame, n_hashes: int = 16, bands: int = 4,
-                    family: str = "md5") -> DataFrame:
+def band_signatures(sh_df: DataFrame, n_hashes: int = 16,
+                    bands: int = 4) -> DataFrame:
     """(_id, band, bh): the banded-MinHash LSH key rows for a (_id, _sh)
     shingle frame — the join currency of near-dup detection, and the INDEX
     representation for corpus-membership checks (a doc near-duplicates the
@@ -219,7 +213,7 @@ def band_signatures(sh_df: DataFrame, n_hashes: int = 16, bands: int = 4,
         sh_df
         # _base materialized as its own column: one string hash per shingle,
         # reused by all n_hashes permutations
-        .withColumn("_base", shingle_base_hashes(F.col("_sh"), family))
+        .withColumn("_base", shingle_base_hashes(F.col("_sh")))
         .withColumn("_sig", minhash_signature(F.col("_base"), n_hashes))
         .select("_id", "_sig")
     )
@@ -243,8 +237,7 @@ def band_signatures(sh_df: DataFrame, n_hashes: int = 16, bands: int = 4,
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n_hashes: int = 16,
-                       shingle_n: int = 3,
-                       family: str = "md5") -> DataFrame:
+                       shingle_n: int = 3) -> DataFrame:
     """(_id, _sig): per-doc MinHash signature — the reusable first stage
     of the LSH chain, exposed for estimator-calibration queries
     (ta_minhash_est_vs_exact) and index builds."""
@@ -252,7 +245,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                          shingle_n=shingle_n)
     return (
         sh_df
-        .withColumn("_base", shingle_base_hashes(F.col("_sh"), family))
+        .withColumn("_base", shingle_base_hashes(F.col("_sh")))
         .withColumn("_sig", minhash_signature(F.col("_base"), n_hashes))
         .select("_id", "_sig")
     )
@@ -261,8 +254,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 def lsh_bucket_report(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n_hashes: int = 16,
                       bands: int = 4, shingle_n: int = 3,
-                      max_bucket: int = 1000,
-                      family: str = "md5") -> DataFrame:
+                      max_bucket: int = 1000) -> DataFrame:
     """Per-band LSH bucket audit: the `max_bucket` cap in
     :func:`minhash_lsh_pairs` drops degenerate buckets (boilerplate
     clusters) SILENTLY from the pair stream — this report makes the drop
@@ -275,8 +267,7 @@ def lsh_bucket_report(df: DataFrame, text_col: str = "text",
     #bands-row rollup."""
     sh_df = shingle_sets(df, text_col=text_col, id_col=id_col,
                          shingle_n=shingle_n)
-    banded = band_signatures(sh_df, n_hashes=n_hashes, bands=bands,
-                             family=family)
+    banded = band_signatures(sh_df, n_hashes=n_hashes, bands=bands)
     sizes = banded.groupBy("band", "bh").agg(F.count("*").alias("n"))
     c2 = F.shiftright(F.col("n") * (F.col("n") - 1), 1)
     in_cap = (F.col("n") >= 2) & (F.col("n") <= max_bucket)
@@ -314,7 +305,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       bands: int = 4, shingle_n: int = 3,
                       threshold: float = 0.5,
                       max_bucket: int = 1000,
-                      family: str = "md5",
                       checkpoint_dir: str | None = None,
                       materialize_result: bool = True) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH, verified by exact
@@ -364,8 +354,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
 
     sh_df = shingle_sets(df, text_col=text_col, id_col=id_col,
                          shingle_n=shingle_n)
-    banded = band_signatures(sh_df, n_hashes=n_hashes, bands=bands,
-                             family=family)
+    banded = band_signatures(sh_df, n_hashes=n_hashes, bands=bands)
 
     buckets = (
         banded.groupBy("band", "bh")
@@ -516,7 +505,7 @@ def threshold_sweep(pairs: DataFrame,
 # ---------------------------------------------------------------- simhash
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            bits: int = 16, family: str = "md5") -> DataFrame:
+            bits: int = 16) -> DataFrame:
     """(id, simhash) — per-bit sign-sum of token hashes (Charikar '02).
 
     explode → per-bit ±1 contributions → groupBy(id) sum — one shuffle on
@@ -528,7 +517,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     tok = ensure_parallelism(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("_tok"),
-    ).withColumn("_h", hash64(F.col("_tok"), family=family))
+    ).withColumn("_h", hash64(F.col("_tok")))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("_h"), b).bitwiseAND(F.lit(1)) == 1, 1)
@@ -548,15 +537,14 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", bits: int = 16,
                        max_hamming: int = 2,
-                       max_bucket: int = 10000,
-                       family: str = "md5") -> DataFrame:
+                       max_bucket: int = 10000) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming, blocked on the
     high half of the signature.
 
     Same bucket-grouping shape as :func:`minhash_lsh_pairs`: a self-join
     would run the token-explode + bit aggregation twice; grouping by the
     block key computes each signature once and pairs within buckets."""
-    sigs = simhash(df, text_col, id_col, bits, family)
+    sigs = simhash(df, text_col, id_col, bits)
     block = F.shiftright(F.col("simhash"), bits // 2)
     buckets = (
         sigs.select(F.col(id_col).alias("_id"), "simhash", block.alias("_blk"))

@@ -97,6 +97,7 @@ def curation_flags(spark: SparkSession, sf_dir: str,
     dupes = (
         dedup.duplicate_clusters(
             dedup.minhash_lsh_pairs(d, threshold=0.5,
+                                    checkpoint_dir=checkpoint_dir,
                                     materialize_result=False),
             checkpoint_dir=checkpoint_dir)
         .filter(F.col("rep") != F.col("id"))

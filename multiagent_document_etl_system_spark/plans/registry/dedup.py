@@ -242,7 +242,7 @@ SELECT id_a, id_b, jaccard FROM (
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH near-dup pairs — md5-derived hash family makes the full
     signature → band → bucket → verify chain bit-reproducible in the DuckDB
-    oracle. Production can pass family='xxhash64' for cheaper hashing.
+    oracle.
 
     Terminal single consumer: the verified result is read exactly once
     (by whoever collects this query), so materialize_result=False skips

@@ -1072,8 +1072,8 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sources.py. Scale: pairs exist only inside band buckets —
     no all-pairs term; the hash is 8 bytes per image."""
     from multiagent_document_etl_system_spark.sources import (
+        fixtures,
         multimodal,
-        parsers,
     )
 
     texts = ["INVOICE 42 TOTAL 99", "REPORT AGG GROUP 7",
@@ -1081,11 +1081,11 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     mid = 0
     for t in texts:
-        aa = parsers.render_text_aa_pixels(t, scale=2)
-        for payload in (parsers.render_text_bmp(t),
-                        parsers.render_text_png(t),
-                        parsers.render_text_png("", pixels=aa),
-                        parsers.render_text_jpeg(t, quality=90)):
+        aa = fixtures.render_text_aa_pixels(t, scale=2)
+        for payload in (fixtures.render_text_bmp(t),
+                        fixtures.render_text_png(t),
+                        fixtures.render_text_png("", pixels=aa),
+                        fixtures.render_text_jpeg(t, quality=90)):
             rows.append((mid, "image", bytearray(payload),
                          (None, None, None, "file")))
             mid += 1

@@ -92,11 +92,13 @@ def s1_parse_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     f.jpg below is a PROGRESSIVE JPEG, the r7 rung); a corrupt image
     degrades per-row to a parse_error (d.png) — the per-row
     fault-tolerance contract. Pandas-UDF parse ⇒ rows-only."""
-    from multiagent_document_etl_system_spark.sources.parsers import (
+    from multiagent_document_etl_system_spark.sources.fixtures import (
         make_demo_docx_bytes,
         make_demo_pdf_bytes,
-        parse_documents,
         render_text_jpeg_progressive,
+    )
+    from multiagent_document_etl_system_spark.sources.parsers import (
+        parse_documents,
     )
     docx_bytes = make_demo_docx_bytes(
         ["Invoice 42", "Total due: 19.99"], [["item", "qty", "price"]])
@@ -154,7 +156,7 @@ def _s8_drop_dir(spark: SparkSession) -> str:
     import os
     import tempfile
 
-    from multiagent_document_etl_system_spark.sources.parsers import (
+    from multiagent_document_etl_system_spark.sources.fixtures import (
         make_demo_docx_bytes,
         make_demo_pdf_bytes,
         render_text_jpeg_progressive,

@@ -70,27 +70,6 @@ def _decode_wav_pcm16(b: bytes) -> list[int]:
     return [sum(vals[i:i + nch]) // nch for i in range(0, len(vals), nch)]
 
 
-def make_demo_wav(freq_frames: list[tuple[int, int]],
-                  rate: int = 8000) -> bytes:
-    """Deterministic PCM16 WAV: concatenated (amplitude, n_frames) square
-    segments — the media fixture for the real audio rung."""
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        for amp, n in freq_frames:
-            frames = b"".join(
-                struct.pack("<h", amp if i % 2 == 0 else -amp)
-                for i in range(n))
-            w.writeframes(frames)
-    return buf.getvalue()
-
-
 def _decode_features(b: bytes, dim: int = 8) -> list[float]:
     """REAL features where the container can really decode — the rung
     ladder mirrors S4 (real for machine-decodable formats, deterministic
@@ -107,11 +86,8 @@ def _decode_features(b: bytes, dim: int = 8) -> list[float]:
       deterministic fake.
     """
     from multiagent_document_etl_system_spark.sources.parsers import (
-        _decode_bmp_24,
-        _decode_jpeg_luma,
-        _decode_png,
-        _PNG_SIG,
         UnsupportedJpegTier,
+        decode_luma,
     )
 
     if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE":
@@ -125,21 +101,15 @@ def _decode_features(b: bytes, dim: int = 8) -> list[float]:
             env.append(sum(abs(x) for x in chunk) / len(chunk))
         total = sum(env) or 1.0
         return [e / total for e in env]
-    rows = None
-    if b[:2] == b"BM":
-        rows = _decode_bmp_24(b)
-    elif b[: len(_PNG_SIG)] == _PNG_SIG:
-        rows = _decode_png(b)
-    elif b[:2] == b"\xff\xd8":
-        try:
-            rows = _decode_jpeg_luma(b)  # baseline OR progressive (r7)
-        except UnsupportedJpegTier:
-            # legitimate-but-unimplemented tier (arithmetic/hierarchical/
-            # 12-bit) → deterministic fake; routing is on the exception
-            # TYPE, so decoder message rewording can't silently reclassify
-            # files (ADVICE r7 #3). Corrupt streams raise plain ValueError
-            # and surface as per-row errors.
-            rows = None
+    try:
+        rows = decode_luma(b)
+    except UnsupportedJpegTier:
+        # legitimate-but-unimplemented tier (arithmetic/hierarchical/
+        # 12-bit) → deterministic fake; routing is on the exception
+        # TYPE, so decoder message rewording can't silently reclassify
+        # files (ADVICE r7 #3). Corrupt streams raise plain ValueError
+        # and surface as per-row errors.
+        rows = None
     if rows is None:
         return _fake_decode_features(b, dim)
     hist = [0] * dim
@@ -322,12 +292,7 @@ def _phash64(rows: list[list[int]]) -> int:
 def _decode_luma_rows(b: bytes, meta) -> list[list[int]]:
     """Luminance raster from a media payload: raw8 rasters (the demo
     fixture's codec), or the REAL stdlib BMP/PNG/JPEG decoders."""
-    from multiagent_document_etl_system_spark.sources.parsers import (
-        _decode_bmp_24,
-        _decode_jpeg_luma,
-        _decode_png,
-        _PNG_SIG,
-    )
+    from multiagent_document_etl_system_spark.sources.parsers import decode_luma
 
     if meta is not None and (meta.get("codec") if hasattr(meta, "get")
                              else meta["codec"]) == "raw8":
@@ -336,13 +301,10 @@ def _decode_luma_rows(b: bytes, meta) -> list[list[int]]:
         if w and h and len(b) >= w * h:
             return [list(b[y * w:(y + 1) * w]) for y in range(h)]
         raise ValueError("raw8 payload shorter than width*height")
-    if b[:2] == b"BM":
-        return _decode_bmp_24(b)
-    if b[: len(_PNG_SIG)] == _PNG_SIG:
-        return _decode_png(b)
-    if b[:2] == b"\xff\xd8":
-        return _decode_jpeg_luma(b)
-    raise ValueError("unsupported image container for phash")
+    rows = decode_luma(b)
+    if rows is None:
+        raise ValueError("unsupported image container for phash")
+    return rows
 
 
 def phash_images(media: DataFrame) -> DataFrame:

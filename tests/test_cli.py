@@ -38,7 +38,7 @@ def test_process_real_pdf_and_docx(spark, tmp_path, capsys):
     (compressed) PDF and a REAL DOCX flows through binary scan → stdlib
     parse → classify → extract → validate → response, no media libraries
     required."""
-    from multiagent_document_etl_system_spark.sources.parsers import (
+    from multiagent_document_etl_system_spark.sources.fixtures import (
         make_demo_docx_bytes,
         make_demo_pdf_bytes,
     )
@@ -161,6 +161,65 @@ def test_process_incremental_recomputes_on_pipeline_change(
         == sorted(map(tuple, before))
     rc, r = _run(capsys, ["process", str(landing), out_dir, "--incremental"])
     assert (r["reused"], r["recomputed"]) == (3, 0)
+
+
+def test_pipeline_sources_hold_no_fixture_writers():
+    """The digested sources define no fixture writer, so an edit to a test
+    renderer never invalidates incremental reuse."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(cli.__file__).parent
+    assert "sources/fixtures.py" not in cli.PIPELINE_SOURCES
+    writers = [
+        f"{name}:{node.name}"
+        for name in cli.PIPELINE_SOURCES
+        for node in ast.walk(ast.parse((pkg / name).read_text()))
+        if isinstance(node, ast.FunctionDef)
+        and node.name.startswith(("make_demo_", "render_text_"))]
+    assert not writers, writers
+
+
+def test_pipeline_sources_are_closed_over_package_imports():
+    """Every package module a digested source imports is digested too, so
+    a later helper split cannot fall outside the reuse key. A module-level
+    ``__getattr__`` only serves names the module does not define (the
+    fixture-writer forwarding in sources/parsers.py) and is skipped."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(cli.__file__).parent
+    root = pkg.name
+
+    def module_file(dotted: str) -> str | None:
+        # a module's own file; package __init__s define no row logic
+        rel = "/".join(dotted.split(".")[1:]) + ".py"
+        return rel if (pkg / rel).is_file() else None
+
+    def imported(tree) -> set[str]:
+        out = set()
+        for top in tree.body:
+            if isinstance(top, ast.FunctionDef) and top.name == "__getattr__":
+                continue
+            for node in ast.walk(top):
+                if isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    assert node.level == 0, "relative import"
+                    mods = [node.module] + [f"{node.module}.{a.name}"
+                                            for a in node.names]
+                else:
+                    continue
+                out |= {f for m in mods if m and m.split(".")[0] == root
+                        for f in [module_file(m)] if f}
+        return out
+
+    outside = sorted(
+        f"{name} -> {dep}"
+        for name in cli.PIPELINE_SOURCES
+        for dep in imported(ast.parse((pkg / name).read_text()))
+        if dep not in cli.PIPELINE_SOURCES)
+    assert not outside, outside
 
 
 def test_process_incremental_never_reuses_older_outputs(spark, tmp_path,
@@ -402,6 +461,27 @@ def test_curate_accepts_reliable_checkpoint_dir(spark, tmp_path, capsys):
     m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert m["success"] and m["n_input"] > 0
     assert any(os.scandir(ck)), "reliable checkpoints not written"
+
+
+def test_curate_checkpoint_dir_reaches_every_lineage_cut(spark, tmp_path,
+                                                         capsys, monkeypatch):
+    """With --checkpoint-dir, no cut of the curate plan (the LSH bucket and
+    candidate cuts, the cluster rounds) falls back to the executor-local
+    localCheckpoint."""
+    from tests.conftest import SF_DIR
+
+    def local_cut(self, *args, **kwargs):
+        raise AssertionError("localCheckpoint used despite --checkpoint-dir")
+
+    # the session's concrete DataFrame class (PySpark 4's classic
+    # DataFrame overrides the method of pyspark.sql.DataFrame)
+    monkeypatch.setattr(type(spark.range(0)), "localCheckpoint", local_cut)
+    out = str(tmp_path / "curated")
+    ck = str(tmp_path / "ck")
+    assert cli.main(["curate", out, "--sf-dir", SF_DIR,
+                     "--checkpoint-dir", ck]) == 0
+    m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m["success"] and m["n_input"] > 0
 
 
 def test_span_dedup_writes_cleaned_corpus(spark, tmp_path, capsys):

@@ -290,12 +290,12 @@ def test_ocr_round_trips_any_rendered_text(lines):
     segmenter cannot see how many blank columns a render intended)."""
     import re
 
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
     lines = [re.sub(r" +", " ", ln).strip() for ln in lines]
     expected = [ln for ln in lines if ln]
     text = "\n".join(lines)
-    got = parsers._ocr_parse_stdlib(parsers.render_text_bmp(text))
+    got = parsers._ocr_parse_stdlib(fixtures.render_text_bmp(text))
     assert [ln for ln in got.split("\n") if ln] == expected
 
 
@@ -310,12 +310,12 @@ def test_ocr_round_trips_any_rendered_png(lines):
     Same whitespace-normalization contract as the BMP property."""
     import re
 
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
     lines = [re.sub(r" +", " ", ln).strip() for ln in lines]
     expected = [ln for ln in lines if ln]
     text = "\n".join(lines)
-    got = parsers._ocr_parse_stdlib(parsers.render_text_png(text))
+    got = parsers._ocr_parse_stdlib(fixtures.render_text_png(text))
     assert [ln for ln in got.split("\n") if ln] == expected
 
 
@@ -393,14 +393,14 @@ def test_ocr_round_trips_any_rendered_jpeg(lines, mode):
     quantization noise at q=90 must stay inside the Hamming budget."""
     import re
 
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
     subsampling, dri = mode
     lines = [re.sub(r" +", " ", ln).strip() for ln in lines]
     expected = [ln for ln in lines if ln]
     text = "\n".join(lines)
-    jb = parsers.render_text_jpeg(text, subsampling=subsampling,
-                                  restart_interval=dri)
+    jb = fixtures.render_text_jpeg(text, subsampling=subsampling,
+                                   restart_interval=dri)
     got = parsers._ocr_parse_stdlib(jb)
     assert [ln for ln in got.split("\n") if ln] == expected
 
@@ -416,11 +416,11 @@ def test_jpeg_decode_fidelity_and_unsupported_tiers():
 
     import pytest
 
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
     text = "ABCDEF 012345\nGHIJK 6789"
-    px = parsers._render_text_pixels(text, 3)
-    jb = parsers.render_text_jpeg(text, 3, quality=90)
+    px = fixtures._render_text_pixels(text, 3)
+    jb = fixtures.render_text_jpeg(text, 3, quality=90)
     rows = parsers._decode_jpeg_luma(jb)
     assert len(rows) == len(px) and len(rows[0]) == len(px[0])
     n = err = 0
@@ -433,11 +433,11 @@ def test_jpeg_decode_fidelity_and_unsupported_tiers():
     assert err / n <= 3.0, err / n
     assert agree
     assert parsers._ocr_parse_stdlib(
-        parsers.render_text_jpeg(text, subsampling="420")) == \
+        fixtures.render_text_jpeg(text, subsampling="420")) == \
         parsers._ocr_parse_stdlib(jb)
     # a baseline stream FORGED as SOF2 is a malformed progressive file
     # (its single scan mixes DC and AC bands) → error, never silence
-    prog = bytearray(parsers.render_text_jpeg("A"))
+    prog = bytearray(fixtures.render_text_jpeg("A"))
     sof = prog.find(b"\xff\xc0")
     prog[sof + 1] = 0xC2
     with pytest.raises(ValueError, match="progressive"):
@@ -446,15 +446,15 @@ def test_jpeg_decode_fidelity_and_unsupported_tiers():
     # the DEDICATED type (ADVICE r7 #3: callers route on the type, so a
     # message reword can never silently reclassify files between the
     # deterministic-fake tier and per-row errors)
-    ar = bytearray(parsers.render_text_jpeg("A"))
+    ar = bytearray(fixtures.render_text_jpeg("A"))
     ar[ar.find(b"\xff\xc0") + 1] = 0xC9
     with pytest.raises(parsers.UnsupportedJpegTier, match="arithmetic"):
         parsers._decode_jpeg_luma(bytes(ar))
     # truncated entropy data → error, not silence
     with pytest.raises(ValueError):
-        parsers._decode_jpeg_luma(bytes(parsers.render_text_jpeg("AB")[:-40]))
+        parsers._decode_jpeg_luma(bytes(fixtures.render_text_jpeg("AB")[:-40]))
     # 12-bit precision → error
-    tw = bytearray(parsers.render_text_jpeg("A"))
+    tw = bytearray(fixtures.render_text_jpeg("A"))
     sof = tw.find(b"\xff\xc0")
     tw[sof + 4] = 12
     with pytest.raises(parsers.UnsupportedJpegTier, match="precision"):
@@ -463,7 +463,7 @@ def test_jpeg_decode_fidelity_and_unsupported_tiers():
     # violates T.81 B.2.3 — it must fail loudly (bitstream desync would
     # otherwise decode garbage), and as a CORRUPT-stream ValueError, not
     # the unsupported-tier type (ADVICE r7 #4)
-    bad = bytearray(parsers.render_text_jpeg_progressive("A"))
+    bad = bytearray(fixtures.render_text_jpeg_progressive("A"))
     pos = 2
     while pos + 4 <= len(bad):
         if bad[pos] != 0xFF:
@@ -767,6 +767,7 @@ def test_jpeg_decoder_handles_noise_and_zrl_paths():
 
     import numpy as np
 
+    from multiagent_document_etl_system_spark.sources import fixtures
     from multiagent_document_etl_system_spark.sources import parsers as P
 
     rng = random.Random(77)
@@ -778,16 +779,18 @@ def test_jpeg_decoder_handles_noise_and_zrl_paths():
         "sparse": [[255 if (r % 8 == 3 and c % 16 == 5) else 128
                     for c in range(w)] for r in range(h)],
     }
-    qtab = P._jpeg_scaled_qtable(95)
+    qtab = fixtures._jpeg_scaled_qtable(95)
     qmat = np.asarray(qtab, float).reshape(8, 8)
     t = P._jpeg_dct_matrix()
-    dc_tab = P._huff_encode_table(P._JPEG_DC_BITS, P._JPEG_DC_VALS)
-    ac_tab = P._huff_encode_table(P._JPEG_AC_BITS, P._JPEG_AC_VALS)
+    dc_tab = fixtures._huff_encode_table(fixtures._JPEG_DC_BITS,
+                                         fixtures._JPEG_DC_VALS)
+    ac_tab = fixtures._huff_encode_table(fixtures._JPEG_AC_BITS,
+                                         fixtures._JPEG_AC_VALS)
 
     def encode_gray(px):
         plane = np.asarray(px, float)
         hh, ww = plane.shape
-        wr = P._JpegBitWriter()
+        wr = fixtures._JpegBitWriter()
         pred = 0
         for by in range((hh + 7) // 8):
             for bx in range((ww + 7) // 8):
@@ -797,7 +800,8 @@ def test_jpeg_decoder_handles_noise_and_zrl_paths():
                                       bx * 8:bx * 8 + xs]
                 q = np.floor((t @ (blk - 128.0) @ t.T) / qmat + 0.5)
                 zz = [int(q.reshape(64)[i]) for i in P._JPEG_ZZ]
-                pred = P._jpeg_encode_block(zz, pred, wr, dc_tab, ac_tab)
+                pred = fixtures._jpeg_encode_block(zz, pred, wr, dc_tab,
+                                                   ac_tab)
         wr.align()
 
         def seg(marker, payload):
@@ -808,10 +812,10 @@ def test_jpeg_decoder_handles_noise_and_zrl_paths():
         out += seg(0xDB, bytes([0]) + bytes(qtab[i] for i in P._JPEG_ZZ))
         out += seg(0xC0, struct.pack(">BHHB", 8, hh, ww, 1)
                    + bytes((1, 0x11, 0)))
-        out += seg(0xC4, bytes([0x00]) + bytes(P._JPEG_DC_BITS)
-                   + bytes(P._JPEG_DC_VALS))
-        out += seg(0xC4, bytes([0x10]) + bytes(P._JPEG_AC_BITS)
-                   + bytes(P._JPEG_AC_VALS))
+        out += seg(0xC4, bytes([0x00]) + bytes(fixtures._JPEG_DC_BITS)
+                   + bytes(fixtures._JPEG_DC_VALS))
+        out += seg(0xC4, bytes([0x10]) + bytes(fixtures._JPEG_AC_BITS)
+                   + bytes(fixtures._JPEG_AC_VALS))
         out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
         out += bytes(wr.buf) + b"\xff\xd9"
         return bytes(out)
@@ -828,10 +832,10 @@ def test_jpeg_fill_bytes_before_markers_decode():
     """T.81 B.1.1.2: markers may be preceded by any number of 0xFF fill
     bytes — encoders that pad must still decode (ADVICE r6). Insert fill
     bytes ahead of every header segment and decode identically."""
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
     text = "FILL 99"
-    jb = parsers.render_text_jpeg(text, 3)
+    jb = fixtures.render_text_jpeg(text, 3)
     base = parsers._decode_jpeg_luma(jb)
     padded = bytearray()
     i = 0
@@ -863,15 +867,15 @@ def test_progressive_jpeg_decodes_identically_to_baseline(lines, mode):
     species, not a lossy similarity bound."""
     import re
 
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
     subsampling, dri = mode
     lines = [re.sub(r" +", " ", ln).strip() for ln in lines]
     expected = [ln for ln in lines if ln]
     text = "\n".join(lines)
     base = parsers._decode_jpeg_luma(
-        parsers.render_text_jpeg(text, subsampling=subsampling))
-    jb = parsers.render_text_jpeg_progressive(
+        fixtures.render_text_jpeg(text, subsampling=subsampling))
+    jb = fixtures.render_text_jpeg_progressive(
         text, subsampling=subsampling, restart_interval=dri)
     assert parsers._decode_jpeg_luma(jb) == base
     got = parsers._ocr_parse_stdlib(jb)
@@ -883,9 +887,9 @@ def test_progressive_jpeg_error_tiers():
     fabricated pixels."""
     import pytest
 
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
-    jb = parsers.render_text_jpeg_progressive("AB")
+    jb = fixtures.render_text_jpeg_progressive("AB")
     with pytest.raises(ValueError):
         parsers._decode_jpeg_luma(jb[:-40])  # truncated entropy data
     # strip the DHT segments -> table-missing error, not garbage output
@@ -914,7 +918,7 @@ def test_progressive_noise_rasters_decode_identically(seed, quality, mode):
     same pixels (same quantization)."""
     import random
 
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures, parsers
 
     rng = random.Random(seed)
     h, w = rng.choice([(8, 8), (11, 19), (24, 33), (16, 40)])
@@ -929,9 +933,9 @@ def test_progressive_noise_rasters_decode_identically(seed, quality, mode):
         px = [[(r // 4 * 67 + c // 4 * 41) % 256 for c in range(w)]
               for r in range(h)]
     subsampling, dri = mode
-    base = parsers._decode_jpeg_luma(parsers.render_text_jpeg(
+    base = parsers._decode_jpeg_luma(fixtures.render_text_jpeg(
         "", quality=quality, subsampling=subsampling, pixels=px))
-    prog = parsers._decode_jpeg_luma(parsers.render_text_jpeg_progressive(
+    prog = parsers._decode_jpeg_luma(fixtures.render_text_jpeg_progressive(
         "", quality=quality, subsampling=subsampling,
         restart_interval=dri, pixels=px))
     assert prog == base

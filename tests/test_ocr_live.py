@@ -42,9 +42,11 @@ def _tesseract_cmd() -> str | None:
 def test_photograph_tier_ocr_over_real_tesseract():
     import pytesseract
 
+    from multiagent_document_etl_system_spark.sources.fixtures import (
+        render_text_png,
+    )
     from multiagent_document_etl_system_spark.sources.parsers import (
         _image_parse,
-        render_text_png,
     )
 
     pytesseract.pytesseract.tesseract_cmd = _tesseract_cmd()

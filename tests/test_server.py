@@ -82,7 +82,7 @@ def test_process_json_b64_text_document(server):
 
 
 def test_process_multipart_jpeg_through_ocr(server):
-    from multiagent_document_etl_system_spark.sources.parsers import (
+    from multiagent_document_etl_system_spark.sources.fixtures import (
         render_text_jpeg,
     )
 
@@ -270,7 +270,7 @@ def _oracle_response(doc_id: int, text: str, parse_error: str | None):
 def _uploads():
     """(name, payload, text, parse_error) per format: text, PDF, DOCX,
     PNG and an undecodable text file."""
-    from multiagent_document_etl_system_spark.sources import parsers
+    from multiagent_document_etl_system_spark.sources import fixtures
 
     body = ("Purchase order of total value due. Billed to "
             "client@example.com on 2024-03-15 for $1,250.00 in full.")
@@ -282,10 +282,10 @@ def _uploads():
         bad_error = f"text parse failed: {exc}"
     return [
         ("memo.txt", body.encode(), body, None),
-        ("inv.pdf", parsers.make_demo_pdf_bytes([body[:40], body[40:]]),
+        ("inv.pdf", fixtures.make_demo_pdf_bytes([body[:40], body[40:]]),
          body[:40] + "\n" + body[40:], None),
-        ("inv.docx", parsers.make_demo_docx_bytes([body]), body, None),
-        ("scan.png", parsers.render_text_png(ocr), ocr, None),
+        ("inv.docx", fixtures.make_demo_docx_bytes([body]), body, None),
+        ("scan.png", fixtures.render_text_png(ocr), ocr, None),
         ("bad.txt", bad, "", bad_error),
     ]
 

@@ -10,7 +10,11 @@ from multiagent_document_etl_system_spark.io import (
     read_landing_dir,
     upsert_parquet,
 )
-from multiagent_document_etl_system_spark.sources import multimodal, parsers
+from multiagent_document_etl_system_spark.sources import (
+    fixtures,
+    multimodal,
+    parsers,
+)
 
 
 @pytest.fixture(scope="module")
@@ -65,7 +69,7 @@ def test_docx_parses_end_to_end_via_stdlib_fallback(spark):
     and yields extracted text with the reference's paragraph + table
     ' | '-join semantics (/root/reference/src/parsers.py:53-86) — works
     with or without python-docx in the environment."""
-    b = parsers.make_demo_docx_bytes(
+    b = fixtures.make_demo_docx_bytes(
         ["Hello world", "  ", "Second para"],
         [["name", "qty"], ["widget", "3"]],
     )
@@ -82,7 +86,7 @@ def test_docx_parses_end_to_end_via_stdlib_fallback(spark):
 def test_docx_stdlib_parser_direct():
     """The stdlib extractor handles empty paragraphs, empty cells, and
     multi-paragraph cells like python-docx would."""
-    b = parsers.make_demo_docx_bytes(["Only para"], [["a", "", "b"]])
+    b = fixtures.make_demo_docx_bytes(["Only para"], [["a", "", "b"]])
     assert parsers._docx_parse_stdlib(b) == "Only para\na | b"
     # corrupt zip → caller's per-row error channel handles it
     parse = parsers._PARSERS["docx"]
@@ -94,7 +98,7 @@ def test_pdf_parses_end_to_end_via_stdlib_fallback(spark):
     """A REAL (in-memory, stdlib-built, Flate-compressed) PDF flows through
     parse_documents and yields the shown text lines — works with or
     without pdfplumber in the environment."""
-    b = parsers.make_demo_pdf_bytes(
+    b = fixtures.make_demo_pdf_bytes(
         ["Invoice INV-9", "Total due: 42.00 (net)"], compress=True)
     df = spark.createDataFrame(
         [("inv.pdf", bytearray(b))], "path string, content binary")
@@ -109,7 +113,7 @@ def test_pdf_stdlib_parser_direct():
     """Uncompressed streams, TJ arrays, escapes, and the honest failure
     modes of the subset parser."""
     # uncompressed + escaped parens round-trip
-    b = parsers.make_demo_pdf_bytes(["a (x) b"], compress=False)
+    b = fixtures.make_demo_pdf_bytes(["a (x) b"], compress=False)
     assert parsers._pdf_parse_stdlib(b) == "a (x) b"
     # TJ array form with kerning numbers between strings
     raw = (b"%PDF-1.4\nstream\nBT [(Hel) -20 (lo)] TJ ET\nendstream\n")
@@ -417,7 +421,7 @@ def test_ocr_parses_rendered_bmp_end_to_end(spark, tmp_path):
     match) — the same constrained-but-genuine-subset contract as the
     stdlib PDF/DOCX rungs. pytesseract remains the first rung for real
     scans when importable."""
-    bmp = parsers.render_text_bmp("INVOICE 42 TOTAL 1337\nPAID IN FULL")
+    bmp = fixtures.render_text_bmp("INVOICE 42 TOTAL 1337\nPAID IN FULL")
     (tmp_path / "scan.png").write_bytes(bmp)  # .png ext routes to "image"
     out = parsers.parse_documents(read_landing_dir(spark, str(tmp_path)))
     r = out.select("raw_text", "parse_error").collect()[0]
@@ -430,8 +434,8 @@ def test_ocr_parses_rendered_jpeg_end_to_end(spark, tmp_path):
     restart markers — the shape a real screenshot-as-JPEG encoder emits)
     flows through parse_documents and yields the text back via the
     pure-stdlib JPEG decode + template OCR rung."""
-    jpg = parsers.render_text_jpeg("RECEIPT 77 TOTAL 450",
-                                   subsampling="420", restart_interval=2)
+    jpg = fixtures.render_text_jpeg("RECEIPT 77 TOTAL 450",
+                                    subsampling="420", restart_interval=2)
     (tmp_path / "scan.jpg").write_bytes(jpg)
     out = parsers.parse_documents(read_landing_dir(spark, str(tmp_path)))
     r = out.select("raw_text", "parse_error").collect()[0]
@@ -445,7 +449,7 @@ def test_ocr_tolerates_noise_and_flags_unreadable_glyphs():
     mangled beyond the budget reads as '?' instead of a wrong letter."""
     import random
 
-    bmp = bytearray(parsers.render_text_bmp("QUICK BROWN FOX 0189"))
+    bmp = bytearray(fixtures.render_text_bmp("QUICK BROWN FOX 0189"))
     rng = random.Random(5)
     flips = 0
     while flips < 8:
@@ -455,7 +459,7 @@ def test_ocr_tolerates_noise_and_flags_unreadable_glyphs():
             flips += 1
     assert parsers._ocr_parse_stdlib(bytes(bmp)) == "QUICK BROWN FOX 0189"
     # obliterate one glyph entirely -> '?', neighbors unharmed
-    solid = parsers.render_text_bmp("AB")
+    solid = fixtures.render_text_bmp("AB")
     px = parsers._decode_bmp_24(solid)
     h, w = len(px), len(px[0])
     blotted = bytearray(solid)
@@ -479,6 +483,29 @@ def test_ocr_rejects_non_bmp_per_row():
         parsers._ocr_parse_stdlib(b"\x89PNG\r\n\x1a\n garbage")
 
 
+def test_decode_luma_matches_each_format_decoder():
+    """The one image-container dispatch returns exactly what the format's
+    own decoder returns, and None for a payload that is no BMP, PNG or
+    JPEG container (each caller applies its own policy to None)."""
+    text = "INVOICE 42"
+    aa = fixtures.render_text_aa_pixels(text, scale=2)
+    cases = [
+        (fixtures.render_text_bmp(text), parsers._decode_bmp_24),
+        (fixtures.render_text_png(text), parsers._decode_png),
+        (fixtures.render_text_png("", pixels=aa), parsers._decode_png),
+        (fixtures.render_text_jpeg(text, subsampling="420",
+                                   restart_interval=2),
+         parsers._decode_jpeg_luma),
+        (fixtures.render_text_jpeg_progressive(text),
+         parsers._decode_jpeg_progressive),
+    ]
+    for payload, decode in cases:
+        want = decode(payload)
+        assert want and parsers.decode_luma(payload) == want, decode.__name__
+    for other in (b"", b"plain text body", b"RIFF....WAVE", b"%PDF-1.4"):
+        assert parsers.decode_luma(other) is None
+
+
 def test_ocr_reads_anti_aliased_renders_at_any_scale():
     """The r8 S4 boundary extension: machine-rendered text stays REAL
     under anti-aliasing (gray edge ramps) at 2x/3x/4x scale, through
@@ -486,14 +513,14 @@ def test_ocr_reads_anti_aliased_renders_at_any_scale():
     the line-height-scaled space threshold do the work."""
     text = "INVOICE 42 TOTAL 99\nITEM A 1 ITEM B 2"
     for scale in (2, 3, 4):
-        aa = parsers.render_text_aa_pixels(text, scale=scale)
+        aa = fixtures.render_text_aa_pixels(text, scale=scale)
         # AA really produced intermediate grays, not a bilevel image
         flat = {v for row in aa for v in row}
         assert any(30 < v < 220 for v in flat), sorted(flat)[:8]
         assert parsers._ocr_parse_stdlib(
-            parsers.render_text_png("", pixels=aa)) == text
+            fixtures.render_text_png("", pixels=aa)) == text
         assert parsers._ocr_parse_stdlib(
-            parsers.render_text_jpeg("", pixels=aa, quality=90)) == text
+            fixtures.render_text_jpeg("", pixels=aa, quality=90)) == text
 
 
 def test_phash_invariants_and_pairing(spark):
@@ -507,13 +534,13 @@ def test_phash_invariants_and_pairing(spark):
         rows = multimodal._decode_luma_rows(payload, {"codec": "file"})
         return multimodal._phash64(rows)
 
-    a_bmp = ph(parsers.render_text_bmp("INVOICE 42 TOTAL 99"))
-    a_png = ph(parsers.render_text_png("INVOICE 42 TOTAL 99"))
-    a_aa = ph(parsers.render_text_png(
-        "", pixels=parsers.render_text_aa_pixels("INVOICE 42 TOTAL 99",
-                                                 scale=2)))
-    a_jpg = ph(parsers.render_text_jpeg("INVOICE 42 TOTAL 99", quality=90))
-    b_png = ph(parsers.render_text_png("REPORT AGG GROUP 7"))
+    a_bmp = ph(fixtures.render_text_bmp("INVOICE 42 TOTAL 99"))
+    a_png = ph(fixtures.render_text_png("INVOICE 42 TOTAL 99"))
+    a_aa = ph(fixtures.render_text_png(
+        "", pixels=fixtures.render_text_aa_pixels("INVOICE 42 TOTAL 99",
+                                                  scale=2)))
+    a_jpg = ph(fixtures.render_text_jpeg("INVOICE 42 TOTAL 99", quality=90))
+    b_png = ph(fixtures.render_text_png("REPORT AGG GROUP 7"))
 
     def ham(x, y):
         return bin(x ^ y).count("1")
@@ -551,7 +578,7 @@ def test_ocr_photograph_gate_errors_per_row():
     photo = [[max(0, min(255, int(
         128 + 90 * math.sin(r / 3.1) * math.cos(c / 4.3) + r + c))) % 256
         for c in range(w)] for r in range(h)]
-    png = parsers.render_text_png("", pixels=photo)
+    png = fixtures.render_text_png("", pixels=photo)
     with pytest.raises(ValueError, match="requires pytesseract"):
         parsers._ocr_parse_stdlib(png)
     fn = parsers._PARSERS["image"]
@@ -628,7 +655,7 @@ def test_mm_decode_real_pixels_for_bmp_png_jpeg(spark):
     from multiagent_document_etl_system_spark.sources.multimodal import (
         decode_features,
     )
-    from multiagent_document_etl_system_spark.sources.parsers import (
+    from multiagent_document_etl_system_spark.sources.fixtures import (
         render_text_bmp,
         render_text_jpeg,
         render_text_jpeg_progressive,
@@ -676,10 +703,12 @@ def test_mm_decode_real_wav_energy_envelope(spark):
     """Audio rung: a WAV built as loud-then-silent must put its energy
     mass in the early envelope segments — real PCM decode, not the byte
     fake. Truncated/garbage RIFF is a per-row decode_error."""
+    from multiagent_document_etl_system_spark.sources.fixtures import (
+        make_demo_wav,
+    )
     from multiagent_document_etl_system_spark.sources.multimodal import (
         MEDIA_SCHEMA,
         decode_features,
-        make_demo_wav,
     )
 
     loud_then_silent = make_demo_wav([(20_000, 4000), (0, 4000)])
