@@ -8,11 +8,12 @@ their existing client here unchanged.
   reference's contract) or JSON ``{"filename": ..., "content_b64": ...}``.
   The upload is sanitized (P4 path-traversal guard) and parsed on the
   request thread (the same S1–S5 dispatch as the bulk parse UDF, incl. the
-  stdlib PDF/DOCX/BMP/PNG/JPEG rungs); the text becomes a one-row
-  in-memory relation that the ONE-plan pipeline
-  (plans/pipeline.run_pipeline) projects. The optimizer folds that plan
-  to a constant while planning, so a request runs no Spark job and writes
-  no temp file. The response uses the reference's wrapper shape —
+  stdlib PDF/DOCX/BMP/PNG/JPEG rungs). The ONE-plan pipeline
+  (plans/pipeline.run_pipeline) over a one-row in-memory upload is
+  analysed once per Spark application; a request swaps only that row
+  (:func:`_upload_plan`). The optimizer folds the plan to a constant
+  while planning, so a request runs no analyzer rule, no Spark job and
+  writes no temp file. The response uses the reference's wrapper shape —
   ``{"success", "error", "data": {"record_id", "doc_type", "extracted",
   "file_url"}, "logs", "filename"}`` (reference src/agents.py:303-320,
   src/app.py:81-96). Malformed JSON/base64 is a 400, not a 500.
@@ -35,9 +36,10 @@ to the log.
 Scale posture: this facade is the INTERACTIVE path (one document per
 request, exactly the reference's shape); bulk work belongs to
 ``cli process <landing_dir>`` / Structured Streaming, which run the same
-pipeline over directories. One SparkSession is shared across requests
-(created lazily on the first /process); it plans each request, and no
-request runs a Spark job.
+pipeline over directories. One SparkSession is shared across requests;
+``main`` starts it and analyses the ``/process`` plan before serving, so
+a Spark version whose plan shape the leaf swap does not expect fails at
+startup. A request only optimizes its plan, and runs no Spark job.
 """
 
 from __future__ import annotations
@@ -118,11 +120,86 @@ def _form_fields(content_type: str, body: bytes) -> dict:
     return req
 
 
-#: The upload as the parse stage's output row. The text is a bound
-#: parameter, never spliced into the SQL.
+#: The upload as the parse stage's output row. Bound to NULLs once per
+#: application, so every leaf attribute is nullable (:func:`_upload_plan`).
 _UPLOAD_SQL = ("SELECT * FROM VALUES (CAST(:path AS STRING), "
                "CAST(:text AS STRING), CAST(:error AS STRING)) "
                "AS t(path, raw_text, parse_error)")
+
+
+def _upload_plan(spark):
+    """Analyse the ``/process`` plan once; return ``answer(path, text,
+    error)``, which swaps only the plan's one-row upload leaf and returns
+    the response ``Row``.
+
+    The template is ``run_pipeline(shape_documents(_UPLOAD_SQL))`` with
+    every parameter NULL. Its analyzed plan must be a chain of
+    single-child nodes over one ``LocalRelation``; any other shape (say,
+    after a Spark upgrade) raises ``RuntimeError`` naming the node. A
+    request puts its row in a copy of that leaf, rebuilds the chain over
+    it, marks it analyzed and collects it: the analyzer skips a plan
+    marked analyzed, so a request runs no analyzer rule, and the
+    optimizer still folds the plan on the driver, so it runs no Spark
+    job.
+
+    This is the one place the server calls Catalyst internals through
+    Py4J, and these are all of them: ``Dataset.queryExecution().analyzed``;
+    ``TreeNode.children``, ``nodeName`` and ``withNewChildren``;
+    ``LocalRelation.output``, ``isStreaming``, ``stream`` and ``copy``;
+    ``GenericInternalRow`` and ``UTF8String.fromString`` for the row;
+    ``LogicalPlan.setAnalyzed``; ``classic.Dataset.ofRows``; and Scala's
+    ``Nil.prepended`` for one-element ``Seq``s. Their class and method
+    handles are looked up here once, since each lookup is a round trip."""
+    from pyspark.sql import DataFrame
+
+    from multiagent_document_etl_system_spark.plans.pipeline import (
+        run_pipeline,
+    )
+    from multiagent_document_etl_system_spark.sources.parsers import (
+        shape_documents,
+    )
+
+    template = run_pipeline(spark, shape_documents(spark.sql(
+        _UPLOAD_SQL, args={"path": None, "text": None, "error": None})))
+    chain, leaf = [], template._jdf.queryExecution().analyzed()
+    while leaf.children().size() == 1:
+        chain.append(leaf)
+        leaf = leaf.children().head()
+    if leaf.nodeName() != "LocalRelation":
+        raise RuntimeError(
+            "the /process plan is not a chain of single-child nodes over "
+            f"a LocalRelation: found {leaf.nodeName()}")
+    jvm = spark._jvm
+    prepend = getattr(getattr(jvm.scala.collection.immutable, "Nil$"),
+                      "MODULE$").prepended  # Seq(x) == Nil.prepended(x)
+    new_row = jvm.org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    utf8 = jvm.org.apache.spark.unsafe.types.UTF8String.fromString
+    of_rows = jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    output, streaming = leaf.output(), leaf.isStreaming()
+    stream = leaf.stream()
+    rebuild = [node.withNewChildren for node in reversed(chain)]
+
+    def answer(path: str, text: str | None, error: str | None):
+        row = new_row(3)
+        for i, value in enumerate((path, text, error)):
+            if value is not None:
+                row.update(i, utf8(value))
+        plan = leaf.copy(output, prepend(row), streaming, stream)
+        for with_child in rebuild:
+            plan = with_child(prepend(plan))
+        plan.setAnalyzed()
+        [out] = DataFrame(of_rows(spark._jsparkSession, plan), spark).collect()
+        return out
+
+    return answer
+
+
+def _process_plan(spark):
+    """:func:`_upload_plan` of ``spark``'s application, built once."""
+    from multiagent_document_etl_system_spark.io import once_per_session
+
+    return once_per_session(spark, ("process_plan",),
+                            lambda: _upload_plan(spark))
 
 
 def process_document_bytes(filename: str, payload: bytes) -> dict:
@@ -132,25 +209,22 @@ def process_document_bytes(filename: str, payload: bytes) -> dict:
     "data": {"record_id", "doc_type", "extracted", "file_url", ...},
     "logs", "filename"}`` — ``data`` is None on failure.
 
-    Each upload gets the path ``upload:/<uuid4>/<name>``, so its
-    ``doc_id``, ``record_id`` and ``file_url`` are unique per upload."""
-    from multiagent_document_etl_system_spark.plans.pipeline import (
-        run_pipeline,
-    )
+    The pipeline plan is analysed once per Spark application
+    (:func:`_upload_plan`); a request parses the upload, swaps the plan's
+    one-row leaf for it, then optimizes and collects, with no analyzer
+    rule and no Spark job. Each upload gets the path
+    ``upload:/<uuid4>/<name>``, so its ``doc_id``, ``record_id`` and
+    ``file_url`` are unique per upload."""
     from multiagent_document_etl_system_spark.sources.parsers import (
         format_for_path,
         parse_bytes,
-        shape_documents,
     )
 
-    spark = _spark()
+    answer = _process_plan(_spark())
     fname = _safe_filename(filename)
     logs = [f"Received file: {fname}", "Starting ETL pipeline..."]
     text, error = parse_bytes(format_for_path(fname), payload)
-    upload = spark.sql(_UPLOAD_SQL, args={
-        "path": f"upload:/{uuid.uuid4()}/{fname}", "text": text,
-        "error": error})
-    [row] = run_pipeline(spark, shape_documents(upload)).collect()
+    row = answer(f"upload:/{uuid.uuid4()}/{fname}", text, error)
     r = row.asDict(recursive=True)
     if r["success"]:
         resp = {
@@ -327,6 +401,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--registry", default="spark-warehouse/schemas")
     args = p.parse_args(argv)
     srv = make_server(args.port, args.registry)
+    # analyse the /process plan now: a plan shape this Spark version
+    # cannot swap fails at startup, not on the first request
+    _process_plan(_spark())
     print(json.dumps({"serving": True, "port": srv.server_address[1]}))
     try:
         srv.serve_forever()

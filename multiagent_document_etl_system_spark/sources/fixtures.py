@@ -52,7 +52,8 @@ def make_demo_docx_bytes(paragraphs: list[str],
                          table_rows: list[list[str]] | None = None) -> bytes:
     """A minimal valid .docx (zip + document.xml) built with the stdlib —
     test/demo fixture so the docx path can parse for real in environments
-    without binary fixtures."""
+    without binary fixtures. Every member carries the fixed date
+    1980-01-01, so the same paragraphs always give the same bytes."""
     import io
     import zipfile
     from xml.sax.saxutils import escape
@@ -81,9 +82,12 @@ def make_demo_docx_bytes(paragraphs: list[str],
         'document.main+xml"/></Types>'
     )
     buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("[Content_Types].xml", content_types)
-        z.writestr("word/document.xml", doc_xml)
+    with zipfile.ZipFile(buf, "w") as z:
+        for name, data in (("[Content_Types].xml", content_types),
+                           ("word/document.xml", doc_xml)):
+            member = zipfile.ZipInfo(name, (1980, 1, 1, 0, 0, 0))
+            member.compress_type = zipfile.ZIP_DEFLATED
+            z.writestr(member, data)
     return buf.getvalue()
 
 

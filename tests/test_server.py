@@ -316,9 +316,9 @@ def test_process_runs_no_spark_job_and_matches_oracle(spark):
 
 
 def test_process_issues_few_py4j_commands(spark):
-    """A warm ``process_document_bytes`` sends at most 100 Py4J commands
-    from the calling thread for every upload format: the pipeline's
-    Columns are built once and applied in two ``select``s."""
+    """A warm ``process_document_bytes`` sends at most 70 Py4J commands
+    from the calling thread for every upload format: the analyzed plan is
+    built once, and a request only swaps its one-row leaf."""
     from py4j.clientserver import ClientServerConnection
 
     from multiagent_document_etl_system_spark import server as srv
@@ -342,7 +342,118 @@ def test_process_issues_few_py4j_commands(spark):
     finally:
         ClientServerConnection.send_command = send
     assert set(counts) == {u[0] for u in uploads}
-    assert max(counts.values()) <= 100, counts
+    assert max(counts.values()) <= 70, counts
+
+
+def _fresh_answer(spark, path, text, error):
+    """The /process row by a fresh analysis of ``_UPLOAD_SQL``."""
+    from multiagent_document_etl_system_spark import server as srv
+    from multiagent_document_etl_system_spark.plans.pipeline import (
+        run_pipeline,
+    )
+    from multiagent_document_etl_system_spark.sources.parsers import (
+        shape_documents,
+    )
+
+    upload = spark.sql(srv._UPLOAD_SQL, args={
+        "path": path, "text": text, "error": error})
+    [row] = run_pipeline(spark, shape_documents(upload)).collect()
+    return row.asDict(recursive=True)
+
+
+def _prepared_cases():
+    """(path, text, error): every ``_uploads()`` fixture as parsed, plus
+    a parse failure without text, an empty row, empty text and a text
+    under the too-short gate."""
+    from multiagent_document_etl_system_spark.sources.parsers import (
+        format_for_path,
+        parse_bytes,
+    )
+
+    cases = [(f"upload:/fixed-{n}/{name}",
+              *parse_bytes(format_for_path(name), payload))
+             for n, (name, payload, _, _) in enumerate(_uploads())]
+    return cases + [
+        ("upload:/edge-0/a.pdf", None, "pdf parse failed: x"),
+        ("upload:/edge-1/b.txt", None, None),
+        ("upload:/edge-2/c.txt", "", None),
+        ("upload:/edge-3/d.txt", "Invoice due.", None),
+    ]
+
+
+def test_prepared_plan_matches_fresh_analysis(spark):
+    """The leaf-swapped plan answers every upload exactly as a fresh
+    ``run_pipeline`` over ``_UPLOAD_SQL`` does, failures included."""
+    from multiagent_document_etl_system_spark import server as srv
+
+    answer = srv._process_plan(spark)
+    for path, text, error in _prepared_cases():
+        got = answer(path, text, error).asDict(recursive=True)
+        assert got == _fresh_answer(spark, path, text, error), path
+
+
+def test_prepared_plan_is_thread_safe(spark):
+    """Four threads sharing the one template get the serial answers."""
+    import concurrent.futures
+
+    from multiagent_document_etl_system_spark import server as srv
+
+    answer = srv._process_plan(spark)
+    cases = _prepared_cases() * 4
+    serial = [answer(*c) for c in cases]
+    with concurrent.futures.ThreadPoolExecutor(max_workers=4) as ex:
+        threaded = list(ex.map(lambda c: answer(*c), cases))
+    assert threaded == serial
+
+
+def test_prepared_plan_is_built_per_application(spark, monkeypatch):
+    """The template is keyed on the Spark application, not held in a
+    module global: another application id builds its own."""
+    import pyspark
+
+    from multiagent_document_etl_system_spark import io as eio
+    from multiagent_document_etl_system_spark import server as srv
+
+    first = srv._process_plan(spark)
+    assert srv._process_plan(spark) is first
+    monkeypatch.setattr(eio, "_SESSION_VALUES", dict(eio._SESSION_VALUES))
+    monkeypatch.setattr(pyspark.SparkContext, "applicationId",
+                        property(lambda sc: "another-application"))
+    second = srv._process_plan(spark)
+    assert second is not first
+    case = _prepared_cases()[0]
+    assert second(*case) == first(*case)
+
+
+def test_prepared_plan_refuses_another_leaf(spark, monkeypatch):
+    """A plan whose leaf is not the one-row ``LocalRelation`` fails when
+    the template is built, naming the node it found."""
+    from multiagent_document_etl_system_spark import server as srv
+
+    monkeypatch.setattr(srv, "_UPLOAD_SQL", (
+        "SELECT CAST(:path AS STRING) AS path, CAST(:text AS STRING) AS "
+        "raw_text, CAST(:error AS STRING) AS parse_error FROM range(1)"))
+    with pytest.raises(RuntimeError, match="found Range"):
+        srv._upload_plan(spark)
+
+
+def test_warm_process_runs_no_analyzer_rule(spark):
+    """A warm request reuses the analyzed plan: over 5 requests the rule
+    metrics show optimizer runs but no run of ``ResolveReferences`` or
+    ``ResolveLateralColumnAliasReference``."""
+    from multiagent_document_etl_system_spark import server as srv
+
+    srv._SPARK = spark
+    uploads = _uploads()
+    srv.process_document_bytes(*uploads[0][:2])
+    rules = spark._jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor
+    rules.resetMetrics()
+    for name, payload, _, _ in uploads:
+        srv.process_document_bytes(name, payload)
+    spent = rules.dumpTimeSpent()
+    assert "ConvertToLocalRelation" in spent, spent
+    for rule in ("ResolveReferences", "ResolveLateralColumnAliasReference"):
+        assert rule not in spent, spent
 
 
 def _raw_post(server: str, headers: str) -> bytes:

@@ -94,6 +94,20 @@ def test_docx_stdlib_parser_direct():
     assert text is None and "docx parse failed" in err
 
 
+def test_demo_docx_bytes_do_not_depend_on_the_clock(monkeypatch):
+    """The same paragraphs give the same .docx bytes at any wall-clock
+    time: zip member dates are fixed, not stamped by ``zipfile``."""
+    import time
+
+    real = time.localtime
+    out = []
+    for stamp in (946684800, 1767225600):  # 2000-01-01, 2026-01-01
+        monkeypatch.setattr(time, "localtime",
+                            lambda secs=None, stamp=stamp: real(stamp))
+        out.append(fixtures.make_demo_docx_bytes(["Same para"], [["a"]]))
+    assert out[0] == out[1]
+
+
 def test_pdf_parses_end_to_end_via_stdlib_fallback(spark):
     """A REAL (in-memory, stdlib-built, Flate-compressed) PDF flows through
     parse_documents and yields the shown text lines — works with or
