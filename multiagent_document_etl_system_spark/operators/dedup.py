@@ -289,8 +289,19 @@ def lsh_bucket_report(df: DataFrame, text_col: str = "text",
     )
 
 
-#: When False, :func:`minhash_lsh_pairs` skips BOTH of its eager lineage
-#: truncations so plan-audit tooling (tools/plan_lint.py,
+def _cut_lineage(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
+    """Eagerly materialize ``df`` and drop its lineage: reliable
+    ``checkpoint()`` under ``checkpoint_dir`` when one is given (survives
+    executor loss on a real cluster), else ``localCheckpoint()``
+    (executor-local blocks — right for local[N])."""
+    if checkpoint_dir is not None:
+        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
+#: When False, :func:`minhash_lsh_pairs` skips all three of its eager
+#: lineage truncations so plan-audit tooling (tools/plan_lint.py,
 #: tools/plan_snapshot.py) can read the FULL LSH chain from explain()
 #: without executing any job — with the truncations on, every consumer's
 #: physical plan roots at `Scan ExistingRDD` and a regression inside the
@@ -324,7 +335,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     degenerate buckets (boilerplate clusters) the way production near-dup
     pipelines do, and AQE handles residual bucket skew.
 
-    ``checkpoint_dir``: the two lineage truncations below default to
+    ``checkpoint_dir``: the three lineage truncations below default to
     ``localCheckpoint`` (right for local[N]); pass a directory for
     reliable ``checkpoint()`` on a real cluster — the same knob
     :func:`duplicate_clusters` exposes, for the same reason.
@@ -344,14 +355,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     reference (pair generation + the candidate-id prune), not the
     consumers'.
     """
-    def _truncate(rel: DataFrame) -> DataFrame:
-        if not MATERIALIZE_PAIRS:
-            return rel  # audit mode: keep the chain visible in explain()
-        if checkpoint_dir is not None:
-            rel.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-            return rel.checkpoint(eager=True)
-        return rel.localCheckpoint(eager=True)
-
     sh_df = shingle_sets(df, text_col=text_col, id_col=id_col,
                          shingle_n=shingle_n)
     banded = band_signatures(sh_df, n_hashes=n_hashes, bands=bands)
@@ -374,7 +377,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # probe-gated "adaptive prune": one mechanism covers both regimes
     # instead of a mode switch that would still pay a probe job to pick
     # the mode.
-    buckets = _truncate(buckets)
+    if MATERIALIZE_PAIRS:
+        buckets = _cut_lineage(buckets, checkpoint_dir)
     pair_array = F.filter(
         F.flatten(F.transform(
             "ids",
@@ -417,7 +421,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # materialized are exactly the shingle arrays the verify joins were
     # already shipping, bounded by candidate count at any scale; audit
     # mode (MATERIALIZE_PAIRS=False) skips it like every truncation.
-    sh_cand = _truncate(sh_df.join(cand_ids, "_id", "left_semi"))
+    sh_cand = sh_df.join(cand_ids, "_id", "left_semi")
+    if MATERIALIZE_PAIRS:
+        sh_cand = _cut_lineage(sh_cand, checkpoint_dir)
     sh_a = sh_cand.select(F.col("_id").alias("id_a"),
                           F.col("_sh").alias("sh_a"))
     sh_b = sh_cand.select(F.col("_id").alias("id_b"),
@@ -454,9 +460,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # materialization point. Consume-once callers skip it (see the
     # materialize_result docstring): the bucket checkpoint above is the
     # lineage fix; this one is purely a consumer-side amortization.
-    if not materialize_result:
+    if not (materialize_result and MATERIALIZE_PAIRS):
         return verified
-    return _truncate(verified)
+    return _cut_lineage(verified, checkpoint_dir)
 
 
 SWEEP_THRESHOLDS: tuple[int, ...] = (
@@ -659,12 +665,6 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 10,
     (HDFS/object-store-backed), which survives executor death — the
     setting a 1000-executor run should use.
     """
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # undirected adjacency + self loops, one row per (node, neighbor).
     # Built as ONE explode over the pair list instead of a 4-branch
     # union (r13 optimization round): the union referenced ``pairs``
@@ -693,7 +693,7 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 10,
     # one plan. Checkpointing the edge list is the standard move for
     # iterative graph algorithms (GraphX/ML do the same); the edge list is
     # pair-graph-sized — tiny next to the corpus — at any scale.
-    adj = _truncate(adj)
+    adj = _cut_lineage(adj, checkpoint_dir)
     # Label INIT (min neighbor incl. self) is NOT materialized on its
     # own (r13 optimization round): round 1 references the init three
     # times (neighbor-min, jump lookup, convergence compare), and each
@@ -754,7 +754,7 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 10,
                 F.lit(0)).alias("n_changed"))
             .select("src", "rep")
         )
-        new = _truncate(new)
+        new = _cut_lineage(new, checkpoint_dir)
         labels = new
         # n_changed is valid ONLY as a zero/nonzero convergence signal
         # (ADVICE r12): on the reliable-checkpoint path, checkpoint(
@@ -765,7 +765,7 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 10,
         if int(obs.get["n_changed"]) == 0:
             break
     if labels is None:  # max_iters == 1: the un-propagated init IS the result
-        labels = _truncate(init)
+        labels = _cut_lineage(init, checkpoint_dir)
     return labels.select(F.col("src").alias("id"), "rep")
 
 

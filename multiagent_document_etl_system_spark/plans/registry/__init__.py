@@ -6,18 +6,17 @@ the driver records a weaker rows-only check (reserved for genuinely
 non-SQL-expressible ops: MinHash/SimHash signatures use xxhash64 which
 DuckDB lacks; approx_count_distinct HLLs differ by construction).
 
-Split into per-domain modules in r11 (verdict #5) from the former
-6,700-line plans/registry.py. The import order BELOW is load-bearing: it
-reproduces the original file's top-to-bottom registration order exactly
-(the external driver samples the first 50 QUERIES entries in insertion
-order, and QUERIES.md documents the rest in the same order) —
+The registry is a package of per-domain modules. Every module registers
+into the shared dict in ``_base`` via the ``_q`` decorator at import
+time, so the import order BELOW is load-bearing: it fixes the
+registration order, which QUERIES.md documents. After the last
+registration the one reorder moves the names of ``windows._DRIVER_HEAD``
+to the front (the external driver samples the first 50 QUERIES entries)
+and keeps everything else in registration order. It permutes the dict
+IN PLACE so all modules keep aliasing one object.
 tests/test_registry_order.py pins the head and
-tests/test_registry_split.py pins the full 251-name sequence against the
-pre-split snapshot. Every module registers into the shared dict in
-``_base`` via the ``_q`` decorator at import time; the two window
-reorders (in ``windows`` after the pre-r6 surface, and here after the
-last registration) permute the dict IN PLACE so all modules keep aliasing
-one object.
+tests/test_registry_split.py pins the full sequence against
+tests/registry_order_snapshot.json.
 """
 
 from __future__ import annotations
@@ -44,12 +43,11 @@ from multiagent_document_etl_system_spark.plans.registry import (  # noqa: E402,
     search,
 )
 
-# relational surface (analytics.py) — registered between the search slice
-# and the window pins, exactly where the monolith merged it
+# relational surface (analytics.py) — registered between the search and
+# reports slices, exactly where the monolith merged it
 QUERIES.update(RELATIONAL_QUERIES)
 
 from multiagent_document_etl_system_spark.plans.registry import (  # noqa: E402,F401
-    windows,
     reports,
     sinks,
 )
@@ -64,44 +62,15 @@ from multiagent_document_etl_system_spark.plans.registry.sinks import (  # noqa:
     ENV_GATED_REASONS,
 )
 from multiagent_document_etl_system_spark.plans.registry.windows import (  # noqa: E402,F401
-    _DRIVER_WINDOW_R4,
-    _DRIVER_WINDOW_R5,
-    _DRIVER_WINDOW_R6,
-    _DRIVER_WINDOW_R7,
-    _DRIVER_WINDOW_R8,
-    _DRIVER_WINDOW_R9,
-    _DRIVER_WINDOW_R10,
-    _DRIVER_WINDOW_R11,
-    _DRIVER_WINDOW_R12,
-    _QUEUED_FOR_R6,
-    _QUEUED_FOR_R7,
-    _QUEUED_FOR_R8,
-    _QUEUED_FOR_R9,
-    _QUEUED_FOR_R10,
-    _QUEUED_FOR_R11,
-    _QUEUED_FOR_R12,
-    _QUEUED_FOR_R13,
+    _DRIVER_HEAD,
     NO_ORACLE_REASONS,
-    _driver_ordered,
 )
 
-# Re-apply the driver-window ordering AFTER the last registration: queries
-# registered below the first reorder (in `windows`) would otherwise append
-# at the dict tail even when the pinned window names them — exactly the
-# off-by-one that left r5's head one slot short. In place, so every module
-# keeps aliasing the same dict. Idempotent; tests/test_registry_order.py
-# pins head == window.
-_ordered = _driver_ordered(QUERIES)
+# The one reorder, after the last registration: the head names that
+# registered lead in _DRIVER_HEAD order; update() leaves them there and
+# appends every other name in registration order.
+_ordered = {n: QUERIES[n] for n in _DRIVER_HEAD if n in QUERIES}
+_ordered.update(QUERIES)
 QUERIES.clear()
 QUERIES.update(_ordered)
 del _ordered
-
-
-def __getattr__(name: str):
-    # _LAST_INGEST_WORKDIR is REBOUND (global) inside reports at query
-    # run time — a static `from .reports import` here would freeze the
-    # import-time value; proxy the attribute dynamically instead.
-    if name == "_LAST_INGEST_WORKDIR":
-        return reports._LAST_INGEST_WORKDIR
-    raise AttributeError(
-        f"module {__name__!r} has no attribute {name!r}")

@@ -28,11 +28,6 @@ from multiagent_document_etl_system_spark.plans.registry._base import (  # noqa:
     textfns,
     textstats,
 )
-from multiagent_document_etl_system_spark.plans.registry.windows import (
-    _QUEUED_FOR_R7,
-    _QUEUED_FOR_R8,
-    _QUEUED_FOR_R9,
-)
 from multiagent_document_etl_system_spark.plans.registry.dedup import (
     _H64_MOD,
     _PREP_CLUSTERS_SQL,
@@ -565,20 +560,6 @@ def st_diversity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-_QUEUED_FOR_R7 += [
-    "dedup_lsh_bucket_report",
-    "ta_minhash_est_vs_exact",
-    "td_length_mix_report",
-    "td_dedup_provenance",
-    "td_bpe_first_merges",
-    "dedup_cluster_size_histogram",
-    "td_dedup_policy_ablation",
-    "ta_bigram_diversity",
-    "st_diversity_gate",
-    "q_asof_tolerance",
-]
-
-
 @_q("td_bpe_train", bpe.bpe_train_sql(10))
 def td_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ITERATIVE BPE vocabulary training — td_bpe_first_merges promoted
@@ -623,12 +604,6 @@ _INGEST_FLAGS_SQL = f"""cmd5 AS (
 )"""
 
 _SURVIVING = "status IN ('before', 'appended')"
-
-#: working dir of the most recent st_incremental_ingest run (corpus/,
-#: _index_md5/, _index_band/) — lets tests verify the persisted index
-#: really grew to match a rebuild over the updated corpus
-_LAST_INGEST_WORKDIR: str | None = None
-
 
 @_q("td_incremental_ingest", f"""
 WITH {_INGEST_FLAGS_SQL}, rows_ AS (
@@ -777,8 +752,6 @@ def st_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5_idx, band_idx = dedup.build_dedup_index(corpus)
 
     work = tempfile.mkdtemp(prefix="incr_corpus_")
-    global _LAST_INGEST_WORKDIR  # test hook: index-update verification
-    _LAST_INGEST_WORKDIR = work
     idx_md5_dir = f"{work}/_index_md5"
     idx_band_dir = f"{work}/_index_band"
     corpus_dir = f"{work}/corpus"
@@ -1143,31 +1116,6 @@ def st_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          "event_type"),
                           name, output_mode="append")
     return spark.table(name)
-
-
-# Historical record of the r7 queue (all 7 promoted into the r8 window
-# head at pin time — see _DRIVER_WINDOW_R8 above).
-_QUEUED_FOR_R8 += [
-    "td_bpe_train",
-    "td_incremental_ingest",
-    "st_incremental_ingest",
-    "td_bpe_segment",
-    "td_bpe_encode",
-    "st_bpe_fertility",
-    # contract change, not a new query: flipped from rows-only to fully
-    # hash-oracled in r7 (integer state + max_by final-row cut) — its
-    # prior driver rows were `no_oracle`, so the hash oracle has never
-    # seen a driver run
-    "st_stateful_totals",
-]
-
-# Historical record of the r8 queue (all 3 promoted into the r9 window
-# head at pin time — see _DRIVER_WINDOW_R9 above).
-_QUEUED_FOR_R9 += [
-    "ta_langid_confusion",
-    "ta_zipf_profile",
-    "st_dedup_survivors",
-]
 
 
 #: one Derby database per (session, sf_dir) — registry queries must be

@@ -20,12 +20,6 @@ from multiagent_document_etl_system_spark.plans.registry._base import (  # noqa:
 from multiagent_document_etl_system_spark.plans.registry.sources_streaming import (
     _staged_events_dir,
 )
-from multiagent_document_etl_system_spark.plans.registry.windows import (
-    _QUEUED_FOR_R10,
-    _QUEUED_FOR_R11,
-    _QUEUED_FOR_R12,
-    _QUEUED_FOR_R13,
-)
 
 _DERBY = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -199,11 +193,6 @@ def _register_user_profile_tws() -> None:
                      .alias("max_q1e6"),
                      F.expr("max_by(n_types, n_events)")
                      .alias("n_types")))
-
-    # frozen-window discipline: an env-gated registration still queues
-    # for the NEXT window like any post-pin add (only in environments
-    # where it registered at all)
-    _QUEUED_FOR_R12.append("st_user_profile_tws")
 
 
 @_q("s10_avro_roundtrip", """
@@ -434,22 +423,5 @@ def s13_avro_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.md5("text")).alias("min_fp"),
         F.max(F.md5("text")).alias("max_fp"))
 
-
-_QUEUED_FOR_R12 += ["s10_avro_roundtrip", "s11_avro_stream"]
-
-# added after the R12 pin (frozen-window discipline): the r12 typed and
-# schema-evolution Avro round-trips queue for the R13 window head
-_QUEUED_FOR_R13 += ["s12_avro_typed_roundtrip", "s13_avro_evolution"]
-
-_QUEUED_FOR_R10 += ["k1_jdbc_roundtrip", "q_sessionize_chunked"]
-
-# added after the R10 pin (frozen-window discipline): the heavy-hitter
-# pre-strip twin of ta_dup_ngram_coverage, built in response to the r10
-# --boiler rehearsal. (s8_landing_datasource also landed post-pin but is
-# rows-only BY CONSTRUCTION — the queue holds oracled queries only; the
-# NOTES.md R11 plan reserves it a sanctioned rows-only slot instead,
-# the r9-window pattern for first no_oracle evidence.)
-_QUEUED_FOR_R11 += ["ta_dup_ngram_coverage_strip",
-                    "dedup_cross_source_links"]
 
 _register_user_profile_tws()

@@ -1,501 +1,27 @@
-"""Driver-window pins (R4..R11), queued lists, the ordering helper, and NO_ORACLE_REASONS.
+"""The registry head list and NO_ORACLE_REASONS.
 
-Registration-order slice of the former plans/registry.py (r11 split);
-order within and across modules is load-bearing -- the driver window and
-QUERIES.md read QUERIES in insertion order.
+The external correctness driver samples the first 50 ``QUERIES`` entries
+in insertion order. ``_DRIVER_HEAD`` is that head, frozen: the package
+``__init__`` moves the head names that registered to the front once,
+after the last registration, and every other query keeps its
+registration order behind them. There is no per-round rotation.
 """
 
 from __future__ import annotations
 
-from multiagent_document_etl_system_spark.plans.registry._base import (  # noqa: F401
-    QUERIES,
-)
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering. The external correctness driver samples the FIRST
-# 50 entries of this dict, in insertion order, each round. Decorator order
-# (vector/dedup work prepended over rounds 1-3) left 77 queries — the whole
-# TPC-H suite, the window/subquery/function sweeps, 5 of 6 streaming runs —
-# without a single driver-checked row across r1-r3 (they all pass the
-# identical local comparator, tools/check_oracle.py, but that is soft
-# evidence). The fix is pure ordering: an explicit head list puts the
-# never-driver-checked queries (and this round's red-cell fixes, which must
-# be RE-shown) inside the window; the tail keeps the remaining
-# never-checked queries first so the window can rotate onto them next
-# round. tests/test_registry_order.py pins the invariants.
-_DRIVER_WINDOW_R4 = [
-    # red cells r2/r3 + the r1 FAIL — fixed this round, must re-show:
-    # stable_* now floor-grid (functions/numeric.py), v9/v17 emit scalar
-    # strings instead of array columns
-    "td_prepare_corpus", "td_prepare_corpus_v2",
-    "v9_label_centroids", "v17_pq_codes", "q_sql_api",
-    # the 19 TPC-H shapes with no driver row in any round
-    "q2_min_cost_supplier", "q4_priority_order_check", "q6_revenue_forecast",
-    "q7_nation_trade", "q8_market_share", "q9_product_type_profit",
-    "q10_returned_revenue", "q11_important_share",
-    "q12_late_shipment_priority", "q13_order_distribution",
-    "q14_promo_revenue", "q15_top_supplier", "q16_supplier_variety",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_filter", "q20_heavy_suppliers", "q21_sole_supplier",
-    "q22_dormant_balances",
-    # subqueries
-    "q_scalar_subquery", "q_correlated_subquery", "q_exists_subquery",
-    "q_lateral_topk", "q_recursive_cte",
-    # windows / reshape
-    "q_window_ntile", "q_rolling_time_window", "q_pivot_status_priority",
-    "q_unpivot",
-    # function sweeps (q_regex_functions also carries this round's
-    # array->CSV output fix)
-    "q_date_functions", "q_string_functions", "q_math_functions",
-    "q_map_functions", "q_bitwise_functions", "q_interval_functions",
-    "q_regex_functions", "q_null_functions",
-    # real streaming runs never driver-checked
-    "st_sliding_stream", "st_session_stream", "st_interval_join_stream",
-    "st_dedup_stream", "st_stateful_totals", "st_enrich_stream",
-    "st_dedup_vs_corpus",
-    # misc never-checked
-    "q_json_events", "q_sessionize",
-]
-
-# Round-5 window: completes the rotation. Head = the 2 cells that have
-# been driver-hash-red for three consecutive rounds (fixed this round by
-# removing their ONLY float output column — avg_quality_q1e4 BIGINT via
-# pure-integer rounding, functions/numeric.stable_avg_q), then the 38
-# never-driver-checked ORACLED queries (every rows-only query is excluded:
-# a window slot that can only return `no_oracle` buys no evidence), then
-# 10 re-confirmations — greens whose output contract this round's
-# integer-grid sweep changed (quality/gopher columns) or that the r4
-# verdict asked to re-show under the float-canon changes. After this
-# window runs, every oracled query in the registry has ≥1 driver row.
-_DRIVER_WINDOW_R5 = [
-    # 3-round red cells, fixed via integer-only outputs — must re-show
-    "td_prepare_corpus", "td_prepare_corpus_v2",
-    # the 38 never-driver-checked oracled queries (r1-r4 complement);
-    # the ones whose outputs this round converted to the integer grid
-    # lead (highest information value)
-    "td_importance_resample", "td_quality_calibration", "ta_quality_score",
-    "ta_readability", "ta_tfidf", "ta_bigram_logprob", "ta_heavy_hitters",
-    "q_stats_moments", "q_incremental_agg_merge", "q_funnel_conversion",
-    "st_curation_stream", "ta_dup_ngram_coverage", "td_token_budget_pack",
-    "ta_inverted_index", "q_asof_forward", "q_asof_nearest",
-    "td_zorder_layout", "q_argmax_agg", "q_nullsafe_join", "q_collect_agg",
-    "q_set_ops_all", "q_limit_offset", "q_array_hof", "q_histogram",
-    "q_resample_gapfill", "q_tumbling_window", "q_sliding_window",
-    "q_date_arithmetic", "q_interval_join_binned", "q_scd2_intervals",
-    "q_retention_cohorts", "q_skew_salted_agg", "q_rollup_grouping_id",
-    "td_split", "td_shuffle_order", "td_tokenize_ids",
-    "v20_binary_hamming_topk", "q_full_outer_join", "q_window_percent_rank",
-    # new-this-round oracled queries (never driver-checked by definition)
-    "td_span_dedup", "td_semantic_decontaminate", "st_span_gate",
-    "td_quality_classifier", "td_temperature_mix",
-    "v21_recall_matrix", "dedup_cross_source_matrix",
-    # re-confirmations: contract changed this round (quality/gopher grid —
-    # ta_quality_score rides in the never-checked block above) or the
-    # composed north-star flagship. dedup_minhash_lsh / pipeline_flagship
-    # re-shows were dropped for the two new queries: their r03 greens
-    # stand on unchanged contracts, and a never-checked slot outranks a
-    # re-confirmation.
-    "ta_gopher_rules", "td_curation_funnel",
-]
-
-#: oracled queries added AFTER the r5 window filled its 50 slots — the 41
-#: never-driver-checked queries that complete the r6 rotation (all absorbed
-#: into _DRIVER_WINDOW_R6 below).
-_QUEUED_FOR_R6 = [
-    "td_shard_manifest",
-    "td_split_leakage",
-    "dedup_threshold_sweep",
-    "ta_vocab_stats",
-    "v22_ann_index_topk",
-    "st_ann_stream",
-    "ta_source_divergence",
-    "dedup_bloom_membership",
-    "ta_cdc_chunks",
-    "v23_knn_graph",
-    "st_bloom_gate",
-    "ta_countmin_freq",
-    "ta_boolean_search",
-    "q_merge_scd1",
-    "q_bucketed_join",
-    "q_variant_shred",
-    "q_ewma_smooth",
-    "v24_graph_pagerank",
-    "st_variant_stream",
-    "td_epoch_plan",
-    "td_curriculum_phases",
-    "q_generator_funcs",
-    "q_try_arithmetic",
-    "st_interval_join_outer_stream",
-    "q_collation_group",
-    "ta_collocations",
-    "q_url_xpath_functions",
-    "q_skew_profile",
-    "q_global_row_ids",
-    "dedup_keep_best",
-    "ta_ngram_novelty",
-    "ta_lang_confusion",
-    "td_mix_post_dedup",
-    "v25_centroid_outliers",
-    "td_pack_utilization",
-    "v26_label_separation",
-    "q_cross_join_dims",
-    "q_explode_outer",
-    "td_dataset_card",
-    "q_pivot_multi_agg",
-    "q_window_distinct",
-]
-
-
-# Round-6 window (the driver checks the FIRST 50 registry entries): the
-# stage-bisection diagnostics lead (highest information value — whichever
-# goes red names the diverging stage of the 4-round-red composites), then
-# the two red cells themselves (integer-only survival path this round),
-# one deliberate re-confirmation (td_curation_funnel — green r05, but it
-# embeds _minhash_pairs_sql whose threshold selection changed to the
-# integer test this round), then ALL 41 never-driver-checked oracled
-# queries. 6 + 2 + 1 + 41 = 50: after this window runs, zero oracled
-# queries lack a driver row. FROZEN AT PIN TIME — any query added later
-# this round goes to _QUEUED_FOR_R7, never into this list
-# (tests/test_registry_order.py enforces the invariants).
-_DRIVER_WINDOW_R6 = [
-    "diag_prep_gate", "diag_prep_exact", "diag_prep_pairs",
-    "diag_prep_clusters", "diag_prep_survivors", "diag_prep_tokens",
-    "td_prepare_corpus", "td_prepare_corpus_v2",
-    "td_curation_funnel",
-    *_QUEUED_FOR_R6,
-]
-
-#: oracled queries added AFTER the r6 window was pinned — they queue for
-#: the r7 window head. The r5 process failure (41 never-checked queries
-#: accumulated because additions kept landing after the pin) is closed by
-#: construction: additions land HERE, the pinned window never moves.
-_QUEUED_FOR_R7: list[str] = [
-    "td_prepare_corpus_v3",
-]
-
-
-# Round-7 window (the driver checks the FIRST 50 registry entries), pinned
-# FIRST THING this round per NOTES.md's recipe: (1) the 11 oracled queries
-# that queued behind the frozen r6 window — every one already
-# standard+vanilla green locally, but local green is soft evidence; they
-# head the window so every oracled query finally has a driver row.
-# (2) The six diag_prep_* stage diagnostics are RETIRED from the head:
-# they did their job (all green r6, the composites they bisect flipped
-# green). (3) The asof family re-confirms because operators/asof.py's
-# tolerance axis handling changes this round (ADVICE r6 item 2).
-# (4) Remaining slots = highest-value re-confirms: the contract-coupled
-# composite set and one representative of each heavy plan family
-# (dedup ladder, corpus prep, ANN/graph, text analysis, streaming).
-# FROZEN AT PIN TIME — any query added this round goes to _QUEUED_FOR_R8,
-# never into this list (tests/test_registry_order.py enforces it).
-_DRIVER_WINDOW_R7 = [
-    # --- 11 queued-for-R7 (never driver-checked) ---
-    "td_prepare_corpus_v3",
-    "dedup_lsh_bucket_report",
-    "ta_minhash_est_vs_exact",
-    "td_length_mix_report",
-    "td_dedup_provenance",
-    "td_bpe_first_merges",
-    "dedup_cluster_size_histogram",
-    "td_dedup_policy_ablation",
-    "ta_bigram_diversity",
-    "st_diversity_gate",
-    "q_asof_tolerance",
-    # --- contract-coupled re-confirms (r7 code touches these paths) ---
-    "q_asof_join", "q_asof_forward", "q_asof_nearest",
-    "td_shard_manifest",  # re-derived by the r7 incremental-ingest recipe
-    # --- composite set (highest-value re-confirms) ---
-    "td_prepare_corpus", "td_prepare_corpus_v2", "td_curation_funnel",
-    "pipeline_flagship",
-    # --- dedup ladder ---
-    "dedup_minhash_lsh", "dedup_clusters", "dedup_keep_best",
-    "dedup_threshold_sweep", "dedup_cross_source_matrix",
-    "dedup_bloom_membership", "dedup_exact_stats", "td_span_dedup",
-    # --- corpus prep ---
-    "td_split_leakage", "td_dataset_card", "td_mix_post_dedup",
-    "td_temperature_mix", "td_tokenize_ids", "td_decontaminate",
-    "td_semantic_decontaminate", "td_domain_mix", "td_epoch_plan",
-    "td_curriculum_phases", "td_pack_utilization", "td_quality_classifier",
-    # --- ANN / graph ---
-    "v22_ann_index_topk", "v23_knn_graph", "v24_graph_pagerank",
-    "v21_recall_matrix", "v2_cosine_topk",
-    # --- text analysis ---
-    "ta_dup_ngram_coverage", "ta_ngram_novelty", "ta_vocab_stats",
-    "ta_source_divergence",
-    # --- streaming ---
-    "st_ann_stream", "st_bloom_gate",
-]
-
-#: oracled queries added AFTER the r7 window was pinned — they queue for
-#: the r8 window head (frozen-window discipline, third rotation).
-_QUEUED_FOR_R8: list[str] = []
-
-
-# Round-8 window (the driver checks the FIRST 50 registry entries), pinned
-# FIRST THING this round per NOTES.md's recipe and the r7 verdict order #1:
-# (1) the 7 items that queued behind the frozen r7 window — the BPE
-# lifecycle trio + segment/encode, the incremental-ingest pair, and the
-# st_stateful_totals CONTRACT FLIP (previously rows-only; its prior driver
-# rows were `no_oracle`, so this is the hash oracle's first driver
-# evidence). All 7 were standard+vanilla green on the r7 closing tree and
-# the judge spot-verified them in their own sweep. (2) Contract-coupled
-# re-confirms: q_null_functions (its unpartitioned window is FIXED this
-# round per verdict "What's wrong" #2 — Spark AND oracle change),
-# td_bpe_first_merges (operators/bpe.py oracle helpers gain the
-# empty-merge-round guard, ADVICE r7 #1), q_skew_profile (named in the
-# new plan_lint sanction list, verdict order #2). (3) The composite set.
-# (4) Remaining 35 slots = STALE-EVIDENCE REFRESH: every pad's last driver
-# row is r04 or older (most r02/r03) — the cumulative record stays fresh
-# instead of re-burning slots on r07-green names. FROZEN AT PIN TIME —
-# any query added this round goes to _QUEUED_FOR_R9, never into this list
-# (tests/test_registry_order.py enforces it).
-_DRIVER_WINDOW_R8 = [
-    # --- 7 queued-for-R8 (first driver evidence for these contracts) ---
-    "td_bpe_train",
-    "td_incremental_ingest",
-    "st_incremental_ingest",
-    "td_bpe_segment",
-    "td_bpe_encode",
-    "st_bpe_fertility",
-    "st_stateful_totals",
-    # --- contract-coupled re-confirms (r8 code touches these paths) ---
-    "q_null_functions", "td_bpe_first_merges", "q_skew_profile",
-    # --- composite set (highest-value re-confirms) ---
-    "td_prepare_corpus", "td_prepare_corpus_v2", "td_prepare_corpus_v3",
-    "td_curation_funnel", "pipeline_flagship",
-    # --- stale-evidence refresh: TPC-H shapes (last rows r03/r04) ---
-    "q1_pricing_summary", "q3_top_revenue_orders",
-    "q5_region_nation_revenue", "q9_product_type_profit",
-    "q13_order_distribution", "q18_large_orders", "q22_dormant_balances",
-    # --- windows (r03/r04) ---
-    "q_window_rank", "q_window_range_frame", "q_rolling_time_window",
-    # --- joins / subqueries (r03/r04) ---
-    "q_semi_join", "q_anti_join", "q_band_join", "q_correlated_subquery",
-    "q_recursive_cte",
-    # --- aggregation / set ops (r03/r04) ---
-    "q_grouping_sets", "q_percentiles", "q_set_ops",
-    # --- function sweeps (r04) ---
-    "q_date_functions", "q_string_functions", "q_regex_functions",
-    # --- ANN deterministic rungs (r02/r05) ---
-    "v15_int8_quantize", "v16_matryoshka_topk", "v20_binary_hamming_topk",
-    # --- dedup ladder rungs (r02) ---
-    "dedup_simhash", "dedup_containment", "dedup_edit_distance",
-    # --- streaming (r04) ---
-    "st_session_stream", "st_interval_join_stream",
-    # --- text analysis (r02/r03) ---
-    "ta_lang_id", "ta_pii_redact", "ta_fingerprint",
-    # --- pipeline / events (r02/r04) ---
-    "pipeline_stats", "q_sessionize", "q_json_events",
-]
-
-#: oracled queries added AFTER the r8 window was pinned — they queue for
-#: the r9 window head (frozen-window discipline, fourth rotation).
-_QUEUED_FOR_R9: list[str] = []
-
-
-# Round-9 window (the driver checks the FIRST 50 registry entries), pinned
-# FIRST THING this round per NOTES.md's recipe and the r8 verdict orders
-# #1 and #4: (1) the 3 items that queued behind the frozen r8 window —
-# first driver evidence for those contracts; (2) the 5 rows-only queries
-# that have NEVER had a driver row (verdict #4 — a `no_oracle` row is
-# still evidence the query RUNS under the driver session); (3) two
-# contract-coupled re-confirms: the r9 adaptive candidate-prune touches
-# dedup.minhash_lsh_pairs, so the two bench-regressed composites that
-# embed it re-confirm (td_prepare_corpus_v2, td_curation_funnel — both
-# r08-green; the pad set below also re-runs dedup_neighbor_jaccard, a
-# direct minhash_lsh_pairs wrapper, as a stale refresh); (4) the
-# remaining 40 slots = STALE-EVIDENCE REFRESH, strictly oldest-first:
-# every pad's latest driver row is r04 or older (3×r01, 11×r02, 25×r03,
-# 1×r04 — the whole pre-r04 oracled backlog clears this round; after r9
-# the oldest oracled evidence anywhere is r04). FROZEN AT PIN TIME — any
-# query added this round goes to _QUEUED_FOR_R10, never into this list
-# (tests/test_registry_order.py enforces it).
-_DRIVER_WINDOW_R9 = [
-    # --- 3 queued-for-R9 (first driver evidence) ---
-    "ta_langid_confusion",
-    "ta_zipf_profile",
-    "st_dedup_survivors",
-    # --- 5 rows-only queries with no driver row ever (verdict #4) ---
-    "mm_phash_pairs", "mm_frame_sample", "mm_resize",
-    "q_approx_percentile", "l4_embed_dedup",
-    # --- contract-coupled re-confirms (r9 touches minhash_lsh_pairs) ---
-    "td_prepare_corpus_v2", "td_curation_funnel",
-    # --- stale refresh: r01 evidence ---
-    "q_array_functions", "q_min_per_group", "q_window_firstlast",
-    # --- stale refresh: r02 evidence ---
-    "q_cube_status_priority", "q_distinct_agg", "q_event_dedup",
-    "q_global_topk", "q_rollup_region_nation", "q_window_lag",
-    "q_window_running", "st_tumbling_stream", "ta_bigrams",
-    "ta_term_frequency", "ta_token_stats",
-    # --- stale refresh: r03 evidence ---
-    "dedup_embedding_cosine", "dedup_exact_groups", "dedup_exact_keep",
-    "dedup_fingerprint_groups", "dedup_neighbor_jaccard",
-    "dedup_semantic_clusters", "k_json_kernels", "k_text_kernels",
-    "l1_classify", "l2_extract", "l3_validate", "ta_chunk_segments",
-    "ta_repetition", "td_profile", "td_snapshot_diff",
-    "td_stratified_sample", "v10_ann_recall", "v11_ann_multiprobe",
-    "v12_topk_auto", "v3_filtered_topk", "v4_top1_argmax",
-    "v5_fallback_cascade", "v6_ann_lsh_topk", "v6_namespace_scoped",
-    "v7_schema_id",
-    # --- stale refresh: r04 evidence ---
-    "q10_returned_revenue",
-]
-
-#: oracled queries added AFTER the r9 window was pinned — they queue for
-#: the r10 window head (frozen-window discipline, fifth rotation).
-_QUEUED_FOR_R10: list[str] = []
-
-# ---- ROUND-10 DRIVER WINDOW (pinned per NOTES.md + r9 verdict #1/#7) --
-# The external driver checks the FIRST 50 registry entries. Composition:
-# (1) the 2 queries that queued behind the frozen r9 window — first
-# driver evidence (both hash-PASS in the judge's own vanilla run);
-# (2) 4 contract-coupled re-confirms: r10 adds the consume-once
-# materialize_result=False path to dedup.minhash_lsh_pairs, and these
-# four registry callers now take it (dedup_minhash_lsh,
-# dedup_threshold_sweep, diag_prep_pairs, ta_minhash_est_vs_exact — all
-# r6/r7-green; composites keep materialize_result=True and their plans
-# are unchanged, so they do NOT re-confirm);
-# (3) 29 stale-evidence refresh pads = EVERY oracled query whose latest
-# driver row is r04 (the whole frontier block, computed from
-# CORRECTNESS_r01..r09; st_dedup_stream was retired/folded in r9);
-# (4) the rows-only tail's SECOND rotation (verdict #7): the 9 queries
-# whose only driver evidence is r02/r03 `no_oracle` rows, plus
-# v17_pq_codes (r04) — a `no_oracle` row with spark_rows > 0 is still
-# execution evidence under the driver session;
-# (5) 5 pads from the r05 block (36 queries) — the remaining 31 are
-# reserved for R11 (NOTES.md round-11 plan). FROZEN AT PIN TIME — any
-# query added this round goes to _QUEUED_FOR_R11, never into this list
-# (tests/test_registry_order.py enforces it).
-_DRIVER_WINDOW_R10 = [
-    # --- 2 queued-for-R10 (first driver evidence) ---
-    "k1_jdbc_roundtrip",
-    "q_sessionize_chunked",
-    # --- contract-coupled re-confirms (r10 consume-once minhash path) ---
-    "dedup_minhash_lsh", "dedup_threshold_sweep", "diag_prep_pairs",
-    "ta_minhash_est_vs_exact",
-    # --- stale refresh: the entire r04-evidence oracled block ---
-    "q2_min_cost_supplier", "q4_priority_order_check",
-    "q6_revenue_forecast", "q7_nation_trade", "q8_market_share",
-    "q11_important_share", "q12_late_shipment_priority",
-    "q14_promo_revenue", "q15_top_supplier", "q16_supplier_variety",
-    "q17_small_quantity_revenue", "q19_disjunctive_filter",
-    "q20_heavy_suppliers", "q21_sole_supplier",
-    "q_bitwise_functions", "q_exists_subquery", "q_interval_functions",
-    "q_lateral_topk", "q_map_functions", "q_math_functions",
-    "q_pivot_status_priority", "q_scalar_subquery", "q_sql_api",
-    "q_unpivot", "q_window_ntile",
-    "st_dedup_vs_corpus", "st_enrich_stream", "st_sliding_stream",
-    "v9_label_centroids",
-    # --- rows-only tail, second rotation (r02/r03/r04 evidence) ---
-    "l4_embed", "mm_decode_features", "q_approx_distinct",
-    "s1_parse_dispatch", "v8_ivf_topk", "v13_topk_matmul",
-    "v14_ann_lsh_matmul", "v17_pq_codes", "v18_pq_adc_topk",
-    "v19_ivfpq_topk",
-    # --- stale refresh: first 5 of the r05 block (31 reserved for R11) --
-    "q_argmax_agg", "q_array_hof", "q_collect_agg", "q_date_arithmetic",
-    "q_full_outer_join",
-]
-
-#: oracled queries added AFTER the r10 window was pinned — they queue
-#: for the r11 window head (frozen-window discipline, sixth rotation).
-_QUEUED_FOR_R11: list[str] = []
-
-# ---- ROUND-11 DRIVER WINDOW (pinned per NOTES.md + r10 verdict #1) ----
-# The external driver checks the FIRST 50 registry entries. Composition:
-# (1) the 2 oracled queries that queued behind the frozen r10 window —
-# first driver evidence (both hash-PASS in the r10 judge's own vanilla
-# run); (2) the 2 sanctioned rows-only first-evidence slots for the
-# Spark 4 Python-DataSource landing reads (the r9 pattern — reasons in
-# NO_ORACLE_REASONS; s9's stream reader is ALSO contract-changed this
-# round: r11 replaces the driver-side SimpleDataSourceStreamReader with
-# the partition-planned DataSourceStreamReader, r10 verdict #2);
-# (3) 2 re-confirm slots for this round's changes:
-# ta_dup_ngram_coverage (pinned for the planned r10-verdict-#8
-# auto-route; the corrected measurement then said DON'T wire it —
-# SCALE.md r11 — so the query's plan is UNCHANGED and the slot serves
-# as an r07-stale refresh for the query whose docstring contract was
-# retracted/corrected this round) and k1_jdbc_roundtrip (r11 replaces
-# the mtime-keyed stale-Derby-dir purge with a pidfile-liveness one —
-# ADVICE r10); (4) the ENTIRE remaining
-# r05-evidence oracled block (31 queries, named in NOTES.md and
-# recomputed from CORRECTNESS_r01..r10 at pin time — r10 came back
-# 50/50 green so the stale frontier is exactly this block); (5) 13 pads
-# from the r06 block (27 queries — the remaining 14 are reserved for
-# R12). FROZEN AT PIN TIME — any query added this round goes to
-# _QUEUED_FOR_R12, never into this list (tests/test_registry_order.py
-# enforces it).
-_DRIVER_WINDOW_R11 = [
-    # --- 2 queued-for-R11 (first driver evidence, oracled) ---
-    "ta_dup_ngram_coverage_strip",
-    "dedup_cross_source_links",
-    # --- sanctioned rows-only first-evidence slots (NOTES.md R11 plan) --
-    "s8_landing_datasource",
-    "s9_landing_stream",
-    # --- contract-coupled re-confirms (r11 changes land in these) ---
-    "ta_dup_ngram_coverage",
-    "k1_jdbc_roundtrip",
-    # --- stale refresh: the entire r05-evidence oracled block (31) ---
-    "q_funnel_conversion", "q_histogram", "q_incremental_agg_merge",
-    "q_interval_join_binned", "q_limit_offset", "q_nullsafe_join",
-    "q_resample_gapfill", "q_retention_cohorts", "q_rollup_grouping_id",
-    "q_scd2_intervals", "q_set_ops_all", "q_skew_salted_agg",
-    "q_sliding_window", "q_stats_moments", "q_tumbling_window",
-    "q_window_percent_rank", "st_curation_stream", "st_span_gate",
-    "ta_bigram_logprob", "ta_gopher_rules", "ta_heavy_hitters",
-    "ta_inverted_index", "ta_quality_score", "ta_readability", "ta_tfidf",
-    "td_importance_resample", "td_quality_calibration", "td_shuffle_order",
-    "td_split", "td_token_budget_pack", "td_zorder_layout",
-    # --- stale refresh: first 13 of the r06 block (14 reserved for R12) --
-    "diag_prep_gate", "diag_prep_exact", "diag_prep_clusters",
-    "diag_prep_survivors", "diag_prep_tokens", "ta_lang_confusion",
-    "ta_collocations", "st_interval_join_outer_stream",
-    "st_variant_stream", "ta_cdc_chunks", "ta_boolean_search",
-    "ta_countmin_freq", "v25_centroid_outliers",
-]
-
-#: oracled queries added AFTER the r11 window was pinned — they queue
-#: for the r12 window head (frozen-window discipline, seventh rotation).
-_QUEUED_FOR_R12: list[str] = []
-
-# ---- ROUND-12 DRIVER WINDOW (pinned per NOTES.md + r11 verdict #1) ----
-# The external driver checks the FIRST 50 registry entries. Composition
-# (recomputed from CORRECTNESS_r01..r11 at pin time — r11 came back 50/50
-# green, so the stale frontier is exactly the r06 block + the r07 block):
-# (1) the 2 oracled Avro queries that queued behind the frozen r11
-# window (both hash-PASS under standard AND vanilla sessions in r11, and
-# re-proved on the r12 tree after the avro_io rewrite) plus the
-# env-gated st_user_profile_tws (registers only where protobuf is
-# importable; _driver_ordered skips absent names, so if the driver env
-# lacks protobuf the slot slides to the EXPLICIT spare pad pinned at the
-# tail of this list — the window is 51 names so the slide is
-# deterministic); (2) 3 contract-changed re-confirms: v17_pq_codes and
-# v18_pq_adc_topk moved from KMeans rows-only onto the deterministic
-# grid-Lloyd fit with FULL hash oracles (r11 verdict #4), and
-# v21_recall_matrix gained the pq_grid_adc100 rung (also r07-stale, so
-# the slot doubles as a refresh); (3) the ENTIRE r06-stale oracled
-# block (14 queries, named in NOTES.md); (4) 30 pads from the r07 block
-# (alphabetical; v21 already sits in (2); the remaining 9 are reserved
-# for R13) + the 1 spare pad from (1). FROZEN AT PIN TIME — any query
-# added this round goes to _QUEUED_FOR_R13, never into this list
-# (tests/test_registry_order.py enforces it).
-_DRIVER_WINDOW_R12 = [
-    # --- queued-for-R12 (first driver evidence, oracled) ---
-    "s10_avro_roundtrip",
-    "s11_avro_stream",
-    "st_user_profile_tws",  # env-gated: skipped where protobuf is absent
-    # --- contract-changed re-confirms (r12 grid-PQ conversion) ---
-    "v17_pq_codes",
-    "v18_pq_adc_topk",
-    "v21_recall_matrix",
-    # --- stale refresh: the entire r06-evidence oracled block (14) ---
+#: the registry head, in order: 50 driver slots plus one spare.
+#: ``st_user_profile_tws`` registers only where protobuf is importable;
+#: where it is absent the head closes up and the spare
+#: ``td_shard_manifest`` moves into the first 50.
+_DRIVER_HEAD = [
+    "s10_avro_roundtrip", "s11_avro_stream",
+    "st_user_profile_tws",  # env-gated
+    "v17_pq_codes", "v18_pq_adc_topk", "v21_recall_matrix",
     "q_bucketed_join", "q_collation_group", "q_cross_join_dims",
     "q_ewma_smooth", "q_explode_outer", "q_generator_funcs",
     "q_global_row_ids", "q_merge_scd1", "q_pivot_multi_agg",
     "q_try_arithmetic", "q_url_xpath_functions", "q_variant_shred",
     "q_window_distinct", "v26_label_separation",
-    # --- stale refresh: first 30 of the r07 block, alphabetical (the
-    #     remaining 9 — td_shard_manifest is the spare below — wait for
-    #     R13) ---
     "dedup_bloom_membership", "dedup_cluster_size_histogram",
     "dedup_clusters", "dedup_cross_source_matrix", "dedup_exact_stats",
     "dedup_keep_best", "dedup_lsh_bucket_report", "q_asof_forward",
@@ -507,39 +33,8 @@ _DRIVER_WINDOW_R12 = [
     "td_epoch_plan", "td_length_mix_report", "td_mix_post_dedup",
     "td_pack_utilization", "td_quality_classifier",
     "td_semantic_decontaminate",
-    # --- spare pad: slot 51 — inside the driver's 50 only when the
-    #     env-gated tws slot above slides (bare driver env, no protobuf);
-    #     otherwise the first name past the window, harmless ---
-    "td_shard_manifest",
+    "td_shard_manifest",  # spare
 ]
-
-#: oracled queries added AFTER the r12 window was pinned — they queue
-#: for the r13 window head (frozen-window discipline, eighth rotation).
-#: v8_ivf_topk / v19_ivfpq_topk are NOT listed here (they are not new
-#: names) but are contract-changed late-r12: both moved from KMeans
-#: rows-only onto the deterministic grid-Lloyd fit with FULL hash
-#: oracles (the v17/v18 conversion pattern) AFTER the r12 window was
-#: pinned — they sit outside the frozen window, so the r13 window head
-#: must carry them as contract-changed re-confirms (first driver
-#: evidence of their oracles).
-#: q_kmv_distinct (late r12, hash-oracled KMV distinct sketch) lives in
-#: the events slice — listed here, not appended there, because events
-#: loads before this module; the order snapshot was regenerated
-#: (shim-less, the s12/s13 add-time mechanism) so its mid-dict slice
-#: position is frozen like every other name's.
-_QUEUED_FOR_R13: list[str] = ["q_kmv_distinct", "q_kmv_setops",
-                              "q_sampled_percentile", "st_kmv_stream",
-                              "v27_ivfpq_residual"]
-
-
-def _driver_ordered(q: dict) -> dict:
-    head = [n for n in _DRIVER_WINDOW_R12 if n in q]
-    return {n: q[n] for n in head + [n for n in q if n not in set(head)]}
-
-
-_ordered = _driver_ordered(QUERIES)
-QUERIES.clear()
-QUERIES.update(_ordered)
 
 #: Why each rows-only query has NO DuckDB oracle — BY CONSTRUCTION, not by
 #: omission. A driver `no_oracle` row for these is the expected (and only
@@ -590,5 +85,3 @@ NO_ORACLE_REASONS: dict[str, str] = {
     "mm_resize": "NumPy nearest-neighbor resize kernel (no SQL twin); "
                  "golden-pixel pytest",
 }
-
-

@@ -6,6 +6,8 @@ exactly what a rebuild over the updated corpus would produce."""
 
 from __future__ import annotations
 
+from urllib.parse import urlparse
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -67,8 +69,11 @@ def test_streaming_run_matches_batch_and_updates_index(spark, planted_dir):
     # implies (exact + near dups never land)
     assert sum(r["n_docs"] for r in got.values()) == 3
 
-    work = registry._LAST_INGEST_WORKDIR
-    assert work is not None
+    # the returned manifest is an aggregate over <work>/corpus, so its
+    # scan's input files name the run's work dir
+    works = {urlparse(f).path.split("/corpus/")[0] for f in out.inputFiles()}
+    assert len(works) == 1
+    work = works.pop()
     # every sink is epoch=N-partitioned (idempotent micro-batch
     # overwrites, ADVICE r7 #2); drop the partition column for the
     # set-semantics comparisons below

@@ -1,200 +1,38 @@
-"""Driver-window ordering invariants (round-12).
+"""Registry head invariants.
 
-The external driver checks the FIRST 50 registry entries each round; these
-tests pin that the round-12 window contains exactly what the r11 verdict
-and NOTES.md ordered: the 2 oracled Avro queries that queued behind the
-frozen r11 window plus the env-gated st_user_profile_tws at the head
-(first driver evidence), 3 contract-changed re-confirms (v17/v18 moved
-from KMeans rows-only onto the deterministic grid-Lloyd fit with full
-hash oracles; v21 gained the pq_grid_adc100 rung), the entire r06-stale
-oracled block (14), 30 alphabetical pads from the r07 block, and ONE
-explicit spare pad (td_shard_manifest) that enters the driver's 50 only
-when the env-gated slot slides in a protobuf-less driver env. The window
-is FROZEN: queries added after the pin go to _QUEUED_FOR_R13, never into
-the window.
+The external driver checks the FIRST 50 registry entries. The head is
+frozen as ``windows._DRIVER_HEAD``: 50 slots plus one spare pad
+(td_shard_manifest) that enters the first 50 only when the env-gated
+st_user_profile_tws does not register (no protobuf importable).
 """
 
 from __future__ import annotations
 
 from multiagent_document_etl_system_spark.plans.registry import (
-    _DRIVER_WINDOW_R6,
-    _DRIVER_WINDOW_R7,
-    _DRIVER_WINDOW_R8,
-    _DRIVER_WINDOW_R9,
-    _DRIVER_WINDOW_R10,
-    _DRIVER_WINDOW_R11,
-    _DRIVER_WINDOW_R12,
-    _QUEUED_FOR_R12,
-    _QUEUED_FOR_R13,
+    _DRIVER_HEAD,
     QUERIES,
 )
 
-#: queries with a driver row in CORRECTNESS_r01..r05 (frozen snapshot —
-#: the historical record cannot change)
-_EVER_DRIVER_CHECKED = {
-    "dedup_clusters", "dedup_containment", "dedup_edit_distance",
-    "dedup_embedding_cosine", "dedup_exact_groups", "dedup_exact_keep",
-    "dedup_exact_stats", "dedup_fingerprint_groups", "dedup_minhash_lsh",
-    "dedup_neighbor_jaccard", "dedup_semantic_clusters", "dedup_simhash",
-    "k_json_kernels", "k_text_kernels", "l1_classify", "l2_extract",
-    "l3_validate", "l4_embed", "mm_decode_features", "pipeline_flagship",
-    "pipeline_stats", "q1_pricing_summary", "q3_top_revenue_orders",
-    "q5_region_nation_revenue", "q_anti_join", "q_approx_distinct",
-    "q_array_functions", "q_asof_join", "q_band_join",
-    "q_cube_status_priority", "q_distinct_agg", "q_event_dedup",
-    "q_global_topk", "q_grouping_sets", "q_min_per_group", "q_percentiles",
-    "q_rollup_region_nation", "q_semi_join", "q_set_ops", "q_sql_api",
-    "q_window_firstlast", "q_window_lag", "q_window_range_frame",
-    "q_window_rank", "q_window_running", "s1_parse_dispatch",
-    "st_tumbling_stream", "ta_bigrams", "ta_chunk_segments", "ta_fingerprint",
-    "ta_gopher_rules", "ta_lang_id", "ta_pii_redact", "ta_quality_score",
-    "ta_repetition", "ta_term_frequency", "ta_token_stats",
-    "td_curation_funnel", "td_decontaminate", "td_domain_mix",
-    "td_prepare_corpus", "td_prepare_corpus_v2", "td_profile",
-    "td_snapshot_diff", "td_stratified_sample", "v10_ann_recall",
-    "v11_ann_multiprobe", "v12_topk_auto", "v13_topk_matmul",
-    "v14_ann_lsh_matmul", "v15_int8_quantize", "v16_matryoshka_topk",
-    "v17_pq_codes", "v18_pq_adc_topk", "v19_ivfpq_topk", "v2_cosine_topk",
-    "v3_filtered_topk", "v4_top1_argmax", "v5_fallback_cascade",
-    "v6_ann_lsh_topk", "v6_namespace_scoped", "v7_schema_id",
-    "v8_ivf_topk", "v9_label_centroids",
-    # added by the r4 window (CORRECTNESS_r04 keys not already above)
-    "q2_min_cost_supplier", "q4_priority_order_check", "q6_revenue_forecast",
-    "q7_nation_trade", "q8_market_share", "q9_product_type_profit",
-    "q10_returned_revenue", "q11_important_share",
-    "q12_late_shipment_priority", "q13_order_distribution",
-    "q14_promo_revenue", "q15_top_supplier", "q16_supplier_variety",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_filter", "q20_heavy_suppliers", "q21_sole_supplier",
-    "q22_dormant_balances", "q_scalar_subquery", "q_correlated_subquery",
-    "q_exists_subquery", "q_lateral_topk", "q_recursive_cte",
-    "q_window_ntile", "q_rolling_time_window", "q_pivot_status_priority",
-    "q_unpivot", "q_date_functions", "q_string_functions",
-    "q_math_functions", "q_map_functions", "q_bitwise_functions",
-    "q_interval_functions", "q_regex_functions", "q_null_functions",
-    "st_sliding_stream", "st_session_stream", "st_interval_join_stream",
-    "st_dedup_stream", "st_stateful_totals", "st_enrich_stream",
-    "st_dedup_vs_corpus", "q_json_events", "q_sessionize",
-    # added by the r5 window (CORRECTNESS_r05 keys not already above)
-    "td_importance_resample", "td_quality_calibration", "ta_readability",
-    "ta_tfidf", "ta_bigram_logprob", "ta_heavy_hitters", "q_stats_moments",
-    "q_incremental_agg_merge", "q_funnel_conversion", "st_curation_stream",
-    "ta_dup_ngram_coverage", "td_token_budget_pack", "ta_inverted_index",
-    "q_asof_forward", "q_asof_nearest", "td_zorder_layout", "q_argmax_agg",
-    "q_nullsafe_join", "q_collect_agg", "q_set_ops_all", "q_limit_offset",
-    "q_array_hof", "q_histogram", "q_resample_gapfill", "q_tumbling_window",
-    "q_sliding_window", "q_date_arithmetic", "q_interval_join_binned",
-    "q_scd2_intervals", "q_retention_cohorts", "q_skew_salted_agg",
-    "q_rollup_grouping_id", "td_split", "td_shuffle_order",
-    "td_tokenize_ids", "v20_binary_hamming_topk", "q_full_outer_join",
-    "q_window_percent_rank", "td_span_dedup", "td_semantic_decontaminate",
-    "st_span_gate", "td_quality_classifier", "td_temperature_mix",
-    "v21_recall_matrix", "dedup_cross_source_matrix",
-}
-# added by the r6-r11 windows (CORRECTNESS_r06..r11 == exactly those
-# windows, all green at their latest check — verified against the
-# committed JSONs before this pin)
-for _w in (_DRIVER_WINDOW_R6, _DRIVER_WINDOW_R7, _DRIVER_WINDOW_R8,
-           _DRIVER_WINDOW_R9, _DRIVER_WINDOW_R10, _DRIVER_WINDOW_R11):
-    _EVER_DRIVER_CHECKED |= set(_w)
-
-#: the queued-for-R12 head: the 2 Avro queries that queued behind the
-#: frozen r11 window + the env-gated tws query (registers only where
-#: protobuf is importable — pinned per the NOTES.md recipe; all three
-#: hash-PASS locally in r11, the Avro two re-proved after the r12
-#: avro_io rewrite).
-_QUEUED_3 = ["s10_avro_roundtrip", "s11_avro_stream",
-             "st_user_profile_tws"]
-
-#: contract-changed re-confirm slots: v17/v18 swapped their KMeans
-#: rows-only implementation for the deterministic grid-Lloyd fit with
-#: FULL hash oracles (r11 verdict #4); v21 gained the pq_grid_adc100
-#: rung (and was r07-stale anyway). Each slot buys a fresh driver row
-#: under the NEW contract.
-_RECONFIRMS = ["v17_pq_codes", "v18_pq_adc_topk", "v21_recall_matrix"]
-
 
 def test_window_is_exactly_the_head():
-    head = [n for n in _DRIVER_WINDOW_R12 if n in QUERIES]
+    head = [n for n in _DRIVER_HEAD if n in QUERIES]
     assert list(QUERIES)[: len(head)] == head
 
 
 def test_window_is_50_slots_plus_one_spare():
     """50 driver slots + the explicit spare pad that covers the
     env-gated slide (51 pinned names, all unique)."""
-    assert len(_DRIVER_WINDOW_R12) == 51
-    assert len(set(_DRIVER_WINDOW_R12)) == 51
-    assert _DRIVER_WINDOW_R12[-1] == "td_shard_manifest"
-
-
-def test_queued_3_lead_the_window():
-    assert _DRIVER_WINDOW_R12[:3] == _QUEUED_3
-    # tolerate the env-gated query's absence (the r11 sharp edge): tws
-    # queues only where protobuf is importable
-    expected = [n for n in _QUEUED_3
-                if n != "st_user_profile_tws" or n in QUERIES]
-    assert set(_QUEUED_FOR_R12) == set(expected)
-
-
-def test_reconfirms_follow_the_queued_head():
-    assert _DRIVER_WINDOW_R12[3:6] == _RECONFIRMS
-
-
-def test_window_slots_all_produce_evidence():
-    """Every slot is first evidence (queued) or a deliberate refresh of
-    a previously-recorded query — no accidental slots."""
-    for n in _DRIVER_WINDOW_R12:
-        if n in _QUEUED_3:
-            assert n not in _EVER_DRIVER_CHECKED, n
-        else:
-            assert n in _EVER_DRIVER_CHECKED, n
-
-
-def test_stale_pads_have_at_least_44_slots():
-    """Verdict r11 #1: the whole r06-stale oracled block (14) + 30 r07
-    pads + the spare — everything after the 6-slot head refreshes old
-    evidence."""
-    assert len(_DRIVER_WINDOW_R12[6:]) >= 44
-
-
-def test_window_covers_every_never_checked_oracled_query():
-    """After r12's window runs, zero oracled queries lack a driver row —
-    except those added after the pin, which queue for r13."""
-    never = [n for n, (_, oracle) in QUERIES.items()
-             if oracle and n not in _EVER_DRIVER_CHECKED]
-    missing = [n for n in never
-               if n not in _DRIVER_WINDOW_R12 and n not in _QUEUED_FOR_R13]
-    assert not missing, missing
-
-
-def test_window_is_frozen_against_new_additions():
-    """Queries added after the r12 pin must NOT displace window slots:
-    they are oracled, exist, and sit in _QUEUED_FOR_R13 outside the
-    window."""
-    assert _QUEUED_FOR_R13, "r12 added post-pin queries (s12/s13)"
-    for n in _QUEUED_FOR_R13:
-        assert n in QUERIES and QUERIES[n][1], n
-        assert n not in _DRIVER_WINDOW_R12, n
-        assert n not in _EVER_DRIVER_CHECKED, n
+    assert len(_DRIVER_HEAD) == 51
+    assert len(set(_DRIVER_HEAD)) == 51
+    assert _DRIVER_HEAD[-1] == "td_shard_manifest"
 
 
 def test_every_window_slot_is_oracled():
-    """No rows-only slots this round: the r11 rotation covered the
-    rows-only tail (all 17 have r9-r11 evidence; the third rotation is
-    NOTES-planned for R13), so every r12 slot buys a full hash row.
-    The env-gated tws may be absent in a bare env — skip it there (its
-    oracle is proven under check_oracle --shim)."""
-    for n in _DRIVER_WINDOW_R12:
+    """Every head slot buys a full hash row. The env-gated tws may be
+    absent in a bare env — skip it there (its oracle is proven under
+    check_oracle --shim)."""
+    for n in _DRIVER_HEAD:
         if n not in QUERIES:
             assert n == "st_user_profile_tws", n
             continue
         assert QUERIES[n][1], n
-
-
-def test_stale_refresh_pads_are_actually_stale():
-    """The pad slots exist to refresh the OLDEST driver evidence; none
-    may come from the r9/r10/r11 windows (freshest evidence)."""
-    fresh = (set(_DRIVER_WINDOW_R9) | set(_DRIVER_WINDOW_R10)
-             | set(_DRIVER_WINDOW_R11))
-    overlap = [n for n in _DRIVER_WINDOW_R12[6:] if n in fresh]
-    assert not overlap, overlap

@@ -1,14 +1,7 @@
-"""r11 (verdict #5): the 6,700-line plans/registry.py became a package of
-registration-order slices. These tests pin what the split must preserve:
-the FULL insertion order (frozen snapshot — the driver window reads the
-head, QUERIES.md the tail; regenerated shim-less at each window pin
-and at each post-pin query add,
-255 names at the r12 pin: the R12 reorder + the r11 Avro adds + the
-r12 s12/s13 tail), the per-module size bound the verdict set (~1,500
-lines), and the dynamic re-export of the one module global that rebinds
-at run time. 260 names since the late-r12 sketch-family + v27 adds (events/streaming/ann
-slice, mid-dict — snapshot regenerated at add time, the s12/s13
-mechanism)."""
+"""The registry is a package of registration-order slices. These tests
+pin what the split must preserve: the full insertion order (the frozen
+260-name snapshot — the driver reads the head, QUERIES.md the rest), the
+per-module size bound (~1,500 lines), and the re-exported surface."""
 
 from __future__ import annotations
 
@@ -20,38 +13,13 @@ PKG = REPO / "multiagent_document_etl_system_spark" / "plans" / "registry"
 
 
 def test_full_registration_order_matches_presplit_snapshot():
-    from multiagent_document_etl_system_spark.plans.registry import (
-        _QUEUED_FOR_R12,
-        QUERIES,
-    )
-    from multiagent_document_etl_system_spark.plans.registry.windows import (
-        _QUEUED_FOR_R13,
-    )
+    from multiagent_document_etl_system_spark.plans.registry import QUERIES
 
     snap = json.loads(
         (Path(__file__).parent / "registry_order_snapshot.json").read_text())
-    got = list(QUERIES)
-    # queries added AFTER the snapshot (frozen-window discipline: they
-    # queue for the next window and append at the dict tail) and the
-    # env-gated tws query (registers only when protobuf is importable —
-    # it is under the conftest shim; the snapshot was taken shim-less)
-    # are excluded; everything the snapshot knows must match it EXACTLY,
-    # in order.
-    post_snapshot = (set(_QUEUED_FOR_R12) | set(_QUEUED_FOR_R13)
-                     | {"st_user_profile_tws"}) - set(snap)
-    got = [n for n in got if n not in post_snapshot]
-    snap = [n for n in snap if n != "st_user_profile_tws"]
-    assert got == snap
-    # and the post-snapshot adds sit at the TAIL, never inside the head —
-    # except names the CURRENT window pins (the env-gated tws is a pinned
-    # r12 head slot wherever it registers at all)
-    from multiagent_document_etl_system_spark.plans.registry import (
-        _DRIVER_WINDOW_R12,
-    )
-
-    floating = post_snapshot - set(_DRIVER_WINDOW_R12)
-    tail = list(QUERIES)[-len(floating):] if floating else []
-    assert set(tail) == floating
+    # the snapshot was taken shim-less; the env-gated tws query registers
+    # only when protobuf is importable (it is under the conftest shim)
+    assert [n for n in QUERIES if n != "st_user_profile_tws"] == snap
 
 
 def test_no_registry_module_exceeds_the_size_bound():
@@ -61,27 +29,10 @@ def test_no_registry_module_exceeds_the_size_bound():
     assert not over, over
 
 
-def test_last_ingest_workdir_proxies_dynamically():
-    """registry._LAST_INGEST_WORKDIR is rebound (global) inside the
-    reports slice when td_incremental_ingest runs; the package __getattr__
-    must read through to the live value, not an import-time copy."""
-    from multiagent_document_etl_system_spark.plans import registry
-    from multiagent_document_etl_system_spark.plans.registry import reports
-
-    sentinel = object()
-    prior = reports._LAST_INGEST_WORKDIR
-    try:
-        reports._LAST_INGEST_WORKDIR = sentinel
-        assert registry._LAST_INGEST_WORKDIR is sentinel
-    finally:
-        reports._LAST_INGEST_WORKDIR = prior
-
-
 def test_package_reexports_the_external_surface():
     from multiagent_document_etl_system_spark.plans import registry
 
     for name in ("QUERIES", "NO_ORACLE_REASONS", "ENV_GATED_REASONS",
-                 "_DRIVER_WINDOW_R11", "_QUEUED_FOR_R12",
                  "_namespace_registry_dir", "curation_flags"):
         assert hasattr(registry, name), name
 

@@ -362,11 +362,9 @@ def test_st_user_profile_tws_registry_oracle(spark, duck):
     transformWithStateInPandas profile must hash-match its DuckDB
     oracle exactly the way the driver compares (all-integer outputs,
     order-insensitive). Also pins the gate bookkeeping: registered here
-    (the conftest shim is active) ⇒ not in ENV_GATED_REASONS, queued
-    for the R12 window."""
+    (the conftest shim is active) ⇒ not in ENV_GATED_REASONS."""
     from multiagent_document_etl_system_spark.plans.registry import (
         ENV_GATED_REASONS,
-        _QUEUED_FOR_R12,
         QUERIES,
     )
 
@@ -374,7 +372,6 @@ def test_st_user_profile_tws_registry_oracle(spark, duck):
 
     assert "st_user_profile_tws" in QUERIES
     assert "st_user_profile_tws" not in ENV_GATED_REASONS
-    assert "st_user_profile_tws" in _QUEUED_FOR_R12
     driver_compare(spark, duck, "st_user_profile_tws")
 
 

@@ -7,7 +7,6 @@ float rounding). Run:
 
     python tools/check_oracle.py [--vanilla] [sf_dir] [query ...]
     python tools/check_oracle.py --window    # the driver's pinned 50 head
-    python tools/check_oracle.py --queued    # next round's queued adds
 """
 
 from __future__ import annotations
@@ -77,9 +76,6 @@ def main() -> int:
     window = "--window" in args
     if window:
         args.remove("--window")
-    queued = "--queued" in args
-    if queued:
-        args.remove("--queued")
     shim = "--shim" in args
     if shim:
         args.remove("--shim")
@@ -94,16 +90,6 @@ def main() -> int:
     if window:
         # exactly what the external driver checks: the pinned head
         names += list(QUERIES)[:50]
-    if queued:
-        # queries added after the window pin (next round's rotation) —
-        # resolve the HIGHEST-numbered _QUEUED_FOR_R* list so the flag
-        # tracks the current round without a per-round edit here
-        from multiagent_document_etl_system_spark.plans.registry import (
-            windows as _w,
-        )
-        latest = max((n for n in dir(_w) if n.startswith("_QUEUED_FOR_R")),
-                     key=lambda n: int(n.rsplit("R", 1)[1]))
-        names += [n for n in getattr(_w, latest) if n in QUERIES]
     names = names or list(QUERIES)
 
     if vanilla:
