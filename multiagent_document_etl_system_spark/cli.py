@@ -434,6 +434,8 @@ def cmd_ann_query(args) -> dict:
     with --output; always returns the (bounded, ≤ k·n_queries) matches."""
     from multiagent_document_etl_system_spark.operators.ann_index import (
         ann_index_topk,
+        load_ann_meta,
+        read_index_vectors,
     )
 
     spark = get_spark("doc-etl-ann-query")
@@ -444,7 +446,8 @@ def cmd_ann_query(args) -> dict:
         exclude_self = False
     else:
         queries = (
-            spark.read.parquet(f"{args.index_dir}/vectors")
+            read_index_vectors(spark, args.index_dir,
+                               load_ann_meta(spark, args.index_dir))
             .filter(F.col("c_id") == args.query_id)
             .select(F.col("c_id").alias("q_id"),
                     F.col("c_vec").alias("q_vec"))

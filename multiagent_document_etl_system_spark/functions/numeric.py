@@ -309,7 +309,7 @@ def stable_ratio_sql(num: str, den: str, scale: int = 4,
     )
 
 
-# ------------------------------------------------- matrix literal builders
+# -------------------------------------------------- matrix literal builder
 
 def lit_int_matrix(rows: list[list[int]]) -> Column:
     """array<array<int>> literal built as ONE parsed expression.
@@ -326,16 +326,3 @@ def lit_int_matrix(rows: list[list[int]]) -> Column:
         "array(" + ", ".join(str(int(x)) for x in r) + ")" for r in rows)
     return F.expr(f"array({body})")
 
-
-def lit_double_matrix(rows: list[list[float]]) -> Column:
-    """array<array<double>> literal as ONE parsed expression (see
-    :func:`lit_int_matrix` for why). Each value goes through
-    ``repr(float(v))`` — Python's shortest round-trip decimal form — and
-    ``CAST('…' AS DOUBLE)``, whose nearest-double parse restores the
-    exact bits (the CAST dodges Spark SQL's bare-decimal → DECIMAL
-    literal inference). Bit-identical to the ``F.lit`` form; verified on
-    the hyperplane and codebook constants (r13 probe: 0 mismatches)."""
-    body = ", ".join(
-        "array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in r)
-        + ")" for r in rows)
-    return F.expr(f"array({body})")

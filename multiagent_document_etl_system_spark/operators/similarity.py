@@ -35,12 +35,10 @@ or rename first. Every other operator projects its inputs first.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from multiagent_document_etl_system_spark.functions.numeric import (
-    lit_double_matrix,
-)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -283,15 +281,24 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[h(i, j) for j in range(dim)] for i in range(n_planes)]
 
 
+def planes_literal(planes: list[list[float]]) -> Column:
+    """``planes`` as ONE foldable array<array<double>> expression: a JSON
+    string literal the optimizer parses once into a constant. Analysis
+    sees one node instead of one per value (2,304 at 384-d × 6 planes).
+    ``json.dumps`` writes each double in Python's shortest round-trip
+    form and the JSON parser restores the nearest double, so the folded
+    constant is bit-identical to ``planes`` (asserted by test)."""
+    return F.from_json(F.lit(json.dumps(planes)), "array<array<double>>")
+
+
 def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     """Random-hyperplane (SimHash-style) signature: bit i = sign(vec ·
     plane_i), assembled into one long (2^i weights — n_planes ≤ 16 keeps
     this well inside exact double range). A pure Catalyst expression: the
-    planes ride along as an array literal."""
-    planes_lit = lit_double_matrix(planes)
+    planes ride along as one folded literal (:func:`planes_literal`)."""
     return F.aggregate(
         F.transform(
-            planes_lit,
+            planes_literal(planes),
             lambda p, i: F.when(
                 dot(vec, p) >= 0,
                 F.pow(F.lit(2.0), i.cast("double")).cast("long"),

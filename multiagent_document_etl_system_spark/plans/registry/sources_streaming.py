@@ -992,7 +992,7 @@ def st_ann_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id bigint, embedding array<float>, label int") \
         .parquet(_staged_query_vectors_dir(spark, sf_dir))
     q = ann_index.hash_queries(stream, planes, "vec_id", "embedding")
-    cand = spark.read.parquet(f"{idx_dir}/vectors")
+    cand = ann_index.read_index_vectors(spark, idx_dir, meta)
     j = q.join(cand, "sig").filter(F.col("q_id") != F.col("c_id"))
     score = similarity.cosine_from_norms(F.col("q_vec"), F.col("c_vec"),
                                          F.col("_qn"), F.col("c_norm"))

@@ -70,3 +70,15 @@ def driver_compare(spark, duck, name, sf_dir=SF_DIR):
     duck_rows = sorted(tuple(row[i] for i in idx)
                        for row in res.fetchall())
     assert spark_rows == duck_rows
+
+
+def jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under a Spark job group; return (its result, the number
+    of jobs the group ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -6,6 +6,7 @@ import json
 import os
 
 from multiagent_document_etl_system_spark import cli
+from tests.conftest import jobs_in_group
 
 
 def _run(capsys, argv):
@@ -274,18 +275,6 @@ def _python_udf_rows(plan) -> list[int]:
     return out
 
 
-def _jobs_in_group(spark, group: str, fn):
-    """Run ``fn()`` under a Spark job group; return (its result, the number
-    of jobs the group ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_process_plan_parses_each_document_once(spark, tmp_path, capsys):
     """The written plan evaluates the parse UDF in exactly ONE node (no
     join-back of a second parse), and an incremental run over an
@@ -308,7 +297,7 @@ def test_process_plan_parses_each_document_once(spark, tmp_path, capsys):
     assert sum(_python_udf_rows(ran._jdf.queryExecution().executedPlan())) \
         == 3
 
-    (inc, recomputed, reused), n_jobs = _jobs_in_group(
+    (inc, recomputed, reused), n_jobs = jobs_in_group(
         spark, "process-plan-build",
         lambda: cli.process_plan(spark, str(landing), out_dir))
     assert n_jobs == 0
@@ -323,7 +312,7 @@ def test_process_plan_parses_each_document_once(spark, tmp_path, capsys):
     (tmp_path / "cmd").mkdir()
     landing, out_dir = _landing(tmp_path / "cmd"), str(tmp_path / "cmd_out")
     _run(capsys, ["process", str(landing), out_dir])
-    (rc, resp), n_jobs = _jobs_in_group(
+    (rc, resp), n_jobs = jobs_in_group(
         spark, "process-incremental",
         lambda: _run(capsys, ["process", str(landing), out_dir,
                               "--incremental"]))
